@@ -725,11 +725,6 @@ def _pgoutput_frame_parts(
     return rel_df, dml
 
 
-def _pgoutput_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    rel_df, dml = _pgoutput_frame_parts(spark, sf_dir)
-    return rel_df.unionByName(dml)
-
-
 @register(
     "cdc_pgoutput_decode",
     oracle="""

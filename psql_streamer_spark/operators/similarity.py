@@ -874,18 +874,6 @@ def _train_kmeans_model(v: DataFrame, k: int, iters: int):
     return ids, C
 
 
-def kmeans_centroids(v: DataFrame, k: int = KM_K, iters: int = KM_ITERS) -> DataFrame:
-    """Trained (cluster_id, ce) centroid frame after ``iters`` Lloyd's
-    rounds — the model artifact (k rows), materialized back to a frame for
-    the broadcast-join consumers (IVF probe, SemDeDup assignment)."""
-    ids, C = _train_kmeans_model(v, k, iters)
-    spark = v.sparkSession
-    return spark.createDataFrame(
-        [(int(i), row.tolist()) for i, row in zip(ids, C)],
-        schema="cluster_id int, ce array<double>",
-    )
-
-
 def kmeans_assignments(
     v: DataFrame, k: int = KM_K, iters: int = KM_ITERS
 ) -> DataFrame:

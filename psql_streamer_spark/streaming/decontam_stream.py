@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from psql_streamer_spark.streaming.sinks import EpochParquetSink
+from psql_streamer_spark.streaming.sinks import EpochParquetSink, run_gate_stream
 
 from psql_streamer_spark.functions.text_hash import shingles_expr, with_words
 from psql_streamer_spark.operators.mlprep import (
@@ -116,29 +116,16 @@ def start_contamination_stream(
     checkpoint_dir: str,
     m_bits: int = BLOOM_M_BITS,
 ):
-    """readStream over a document drop-dir -> per-batch bloom-gated
-    contamination probe -> parquet verdict sink. Returns the
-    StreamingQuery (caller stops it)."""
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .json(source_dir)
-    )
-
+    """Document drop-dir -> per-batch bloom-gated contamination probe ->
+    parquet verdict sink (run_gate_stream). Returns the StreamingQuery
+    (caller stops it)."""
     sink = EpochParquetSink(alert_sink_dir, name="decontam_alerts")
-
-    def _probe(batch_df: DataFrame, epoch_id: int) -> None:
-        verdicts = probe_contamination(
-            spark, batch_df, words, bench_grams, m_bits
-        )
-        # at-least-once retry safety: EpochParquetSink's epoch-overwrite
-        # contract; `epoch` reaches readers via partition discovery
-        sink.write(verdicts, epoch_id)
-
-    return (
-        stream.writeStream.foreachBatch(_probe)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_gate_stream(
+        spark,
+        source_dir,
+        checkpoint_dir,
+        lambda batch_df, epoch_id: sink.write(
+            probe_contamination(spark, batch_df, words, bench_grams, m_bits),
+            epoch_id,
+        ),
     )

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from psql_streamer_spark.streaming.sinks import EpochParquetSink
+from psql_streamer_spark.streaming.sinks import EpochParquetSink, run_gate_stream
 
 from psql_streamer_spark.functions.text_hash import (
     band_key_exprs,
@@ -130,28 +130,17 @@ def start_near_dup_stream(
     checkpoint_dir: str,
     jaccard_threshold: float = 0.8,
 ):
-    """readStream over a document drop-dir -> per-batch band-index probe ->
-    parquet alert sink. Returns the StreamingQuery (caller stops it)."""
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .json(source_dir)
-    )
-
+    """Document drop-dir -> per-batch band-index probe -> parquet alert
+    sink (run_gate_stream). Returns the StreamingQuery (caller stops it)."""
     sink = EpochParquetSink(alert_sink_dir, name="dedup_alerts")
-
-    def _probe(batch_df: DataFrame, epoch_id: int) -> None:
-        alerts = probe_band_index(
-            spark, batch_df, index_table, corpus, jaccard_threshold
-        )
-        # at-least-once retry safety: EpochParquetSink's epoch-overwrite
-        # contract; `epoch` reaches readers via partition discovery
-        sink.write(alerts, epoch_id)
-
-    return (
-        stream.writeStream.foreachBatch(_probe)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_gate_stream(
+        spark,
+        source_dir,
+        checkpoint_dir,
+        lambda batch_df, epoch_id: sink.write(
+            probe_band_index(
+                spark, batch_df, index_table, corpus, jaccard_threshold
+            ),
+            epoch_id,
+        ),
     )

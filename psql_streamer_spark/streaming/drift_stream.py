@@ -46,7 +46,7 @@ from pyspark.sql import functions as F
 
 from psql_streamer_spark.functions.text_hash import with_words
 from psql_streamer_spark.sources.tables import load_table
-from psql_streamer_spark.streaming.sinks import EpochParquetSink
+from psql_streamer_spark.streaming.sinks import EpochParquetSink, run_gate_stream
 
 DRIFT_TOP_K = 64
 # Triangular discrimination ranges [0, 2]; reference-vs-itself reads ~0
@@ -211,26 +211,14 @@ def start_drift_stream(
     verdict_sink_dir: str,
     checkpoint_dir: str,
 ):
-    """readStream over a document drop-dir -> per-epoch drift verdict ->
-    parquet epoch sink. Returns the StreamingQuery (caller stops it)."""
-    ref_tokens, ref_counts, ref_total = ref
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .json(source_dir)
-    )
-
+    """Document drop-dir -> per-epoch drift verdict -> parquet epoch sink
+    (run_gate_stream). Returns the StreamingQuery (caller stops it)."""
     sink = EpochParquetSink(verdict_sink_dir, name="drift_verdicts")
-
-    def _monitor(batch_df: DataFrame, epoch_id: int) -> None:
-        # at-least-once: a retried epoch overwrites its own partition
-        # (EpochParquetSink contract), never appends a duplicate verdict.
-        verdict = drift_batch(batch_df, ref_tokens, ref_counts, ref_total)
-        sink.write(verdict, epoch_id)
-
-    return (
-        stream.writeStream.foreachBatch(_monitor)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_gate_stream(
+        spark,
+        source_dir,
+        checkpoint_dir,
+        lambda batch_df, epoch_id: sink.write(
+            drift_batch(batch_df, *ref), epoch_id
+        ),
     )

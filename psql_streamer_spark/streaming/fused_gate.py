@@ -39,12 +39,16 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from psql_streamer_spark.streaming.sinks import EpochParquetSink
+from psql_streamer_spark.streaming.sinks import EpochParquetSink, run_gate_stream
 
 from psql_streamer_spark.functions.text_hash import with_words
 from psql_streamer_spark.operators.mlprep import BLOOM_M_BITS
 from psql_streamer_spark.streaming.decontam_stream import probe_contamination
-from psql_streamer_spark.streaming.dedup_stream import probe_band_index
+from psql_streamer_spark.streaming.dedup_stream import (
+    batch_band_postings,
+    probe_band_index,
+)
+from psql_streamer_spark.streaming.drift_stream import drift_batch
 from psql_streamer_spark.streaming.quality_stream import score_quality_batch
 
 
@@ -193,6 +197,67 @@ def fused_gate_verdicts(
     )
 
 
+def _fused_gate_epoch(
+    spark: SparkSession,
+    index_table: str,
+    bloom_words: list[int],
+    bench_grams: DataFrame,
+    weights: list[int],
+    verdict_sink_dir: str,
+    jaccard_threshold: float,
+    m_bits: int,
+    langid_model,
+    allowed_langs: list[str] | None,
+    drift_ref,
+    drift_sink_dir: str | None,
+):
+    """The per-epoch body both fused starters share, wired once: the drift
+    and langid attachments are validated NOW, before any stream starts.
+
+    ``gate_epoch(batch_df, epoch_id, corpus, on_admit=None)`` writes the
+    epoch's fused verdicts (and its drift row) over ONE tokenize pass,
+    then hands (tokenized, verdicts, epoch_id) to ``on_admit``."""
+    verdict_sink = EpochParquetSink(verdict_sink_dir, name="fused_verdicts")
+    drift_sink = _drift_sink(drift_ref, drift_sink_dir)
+    _validate_langid_model(langid_model)
+
+    def gate_epoch(batch_df, epoch_id, corpus, on_admit=None) -> None:
+        # ONE tokenize pass: the persisted `__words` frame is scanned by
+        # all probes inside the single verdict-write action. (A
+        # concurrently-materialized variant was measured SLOWER — the
+        # extra persist/count actions cost more than the stage overlap
+        # bought; see BENCH_NOTES r14.)
+        tokenized = with_words(batch_df).persist()
+        verdicts = None
+        try:
+            verdicts = fused_gate_verdicts(
+                spark,
+                tokenized,
+                index_table,
+                corpus,
+                bloom_words,
+                bench_grams,
+                weights,
+                jaccard_threshold,
+                m_bits,
+                langid_model,
+                allowed_langs,
+            )
+            if on_admit is not None:
+                verdicts = verdicts.persist()  # on_admit reads it again
+            verdict_sink.write(verdicts, epoch_id)
+            if drift_sink is not None:
+                drift_sink.write(drift_batch(tokenized, *drift_ref), epoch_id)
+            if on_admit is not None:
+                on_admit(tokenized, verdicts, epoch_id)
+        finally:
+            if on_admit is not None and verdicts is not None:
+                verdicts.unpersist()
+            tokenized.unpersist()
+
+    return gate_epoch
+
+
 def start_fused_gate_stream(
     spark: SparkSession,
     source_dir: str,
@@ -223,55 +288,25 @@ def start_fused_gate_stream(
     does not touch the admit bit or the verdict schema (the alert means
     "retrain the gate models", a human/operator decision, not a per-doc
     admission signal)."""
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .json(source_dir)
+    gate_epoch = _fused_gate_epoch(
+        spark,
+        index_table,
+        bloom_words,
+        bench_grams,
+        weights,
+        verdict_sink_dir,
+        jaccard_threshold,
+        m_bits,
+        langid_model,
+        allowed_langs,
+        drift_ref,
+        drift_sink_dir,
     )
-    sink = EpochParquetSink(verdict_sink_dir, name="fused_verdicts")
-    drift_sink = _drift_sink(drift_ref, drift_sink_dir)
-    _validate_langid_model(langid_model)
-
-    def _gate(batch_df: DataFrame, epoch_id: int) -> None:
-        # ONE tokenize pass: the persisted `__words` frame is scanned by
-        # all probes inside the single verdict-write action. (A
-        # concurrently-materialized variant was measured SLOWER — the
-        # extra persist/count actions cost more than the stage overlap
-        # bought; see BENCH_NOTES r14.)
-        tokenized = with_words(batch_df).persist()
-        try:
-            sink.write(
-                fused_gate_verdicts(
-                    spark,
-                    tokenized,
-                    index_table,
-                    corpus,
-                    bloom_words,
-                    bench_grams,
-                    weights,
-                    jaccard_threshold,
-                    m_bits,
-                    langid_model,
-                    allowed_langs,
-                ),
-                epoch_id,
-            )
-            if drift_sink is not None:
-                from psql_streamer_spark.streaming.drift_stream import (
-                    drift_batch,
-                )
-
-                drift_sink.write(
-                    drift_batch(tokenized, *drift_ref), epoch_id
-                )
-        finally:
-            tokenized.unpersist()
-
-    return (
-        stream.writeStream.foreachBatch(_gate)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_gate_stream(
+        spark,
+        source_dir,
+        checkpoint_dir,
+        lambda batch_df, epoch_id: gate_epoch(batch_df, epoch_id, corpus),
     )
 
 
@@ -473,15 +508,32 @@ def start_fused_ingest_loop(
     Pass an index table the loop may own (e.g. a copy of
     band_index_table's output) — the appends (and with compact_every,
     the distinct rewrites) mutate it."""
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .json(source_dir)
-    )
-    verdict_sink = EpochParquetSink(verdict_sink_dir, name="fused_verdicts")
     admitted_sink = EpochParquetSink(admitted_dir, name="fused_admitted")
-    drift_sink = _drift_sink(drift_ref, drift_sink_dir)
-    _validate_langid_model(langid_model)
+    gate_epoch = _fused_gate_epoch(
+        spark,
+        index_table,
+        bloom_words,
+        bench_grams,
+        weights,
+        verdict_sink_dir,
+        jaccard_threshold,
+        m_bits,
+        langid_model,
+        allowed_langs,
+        drift_ref,
+        drift_sink_dir,
+    )
+
+    def _admit(tokenized: DataFrame, verdicts: DataFrame, epoch_id: int):
+        # rejected documents leave no trace in the store or the index
+        admitted = tokenized.join(
+            F.broadcast(verdicts.filter(F.col("admit")).select("doc_id")),
+            "doc_id",
+        )
+        admitted_sink.write(admitted.select("doc_id", "text"), epoch_id)
+        batch_band_postings(admitted).write.insertInto(
+            index_table, overwrite=False
+        )
 
     def _gate(batch_df: DataFrame, epoch_id: int) -> None:
         from pyspark.errors import AnalysisException
@@ -537,53 +589,6 @@ def start_fused_ingest_loop(
         except AnalysisException:  # no tail partitions yet
             pass
 
-        tokenized = with_words(batch_df).persist()
-        verdicts = None
-        try:
-            verdicts = fused_gate_verdicts(
-                spark,
-                tokenized,
-                index_table,
-                live_corpus,
-                bloom_words,
-                bench_grams,
-                weights,
-                jaccard_threshold,
-                m_bits,
-                langid_model,
-                allowed_langs,
-            ).persist()
-            verdict_sink.write(verdicts, epoch_id)
-            if drift_sink is not None:
-                from psql_streamer_spark.streaming.drift_stream import (
-                    drift_batch,
-                )
+        gate_epoch(batch_df, epoch_id, live_corpus, _admit)
 
-                drift_sink.write(
-                    drift_batch(tokenized, *drift_ref), epoch_id
-                )
-            admitted = tokenized.join(
-                F.broadcast(
-                    verdicts.filter(F.col("admit")).select("doc_id")
-                ),
-                "doc_id",
-            )
-            admitted_sink.write(admitted.select("doc_id", "text"), epoch_id)
-            from psql_streamer_spark.streaming.dedup_stream import (
-                batch_band_postings,
-            )
-
-            batch_band_postings(admitted).write.insertInto(
-                index_table, overwrite=False
-            )
-        finally:
-            if verdicts is not None:
-                verdicts.unpersist()
-            tokenized.unpersist()
-
-    return (
-        stream.writeStream.foreachBatch(_gate)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_gate_stream(spark, source_dir, checkpoint_dir, _gate)

@@ -42,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from psql_streamer_spark.streaming.sinks import EpochParquetSink
+from psql_streamer_spark.streaming.sinks import EpochParquetSink, run_gate_stream
 
 from psql_streamer_spark.operators.multimodal import (
     MM_COSINE_DUP,
@@ -158,29 +158,23 @@ def start_mm_near_dup_stream(
     alert_sink_dir: str,
     checkpoint_dir: str,
 ):
-    """readStream over a payload drop-dir (JSON rows carrying base64 is
-    overkill here; the test feeds text re-encoded like _media_frame) ->
-    per-batch posting-table probe -> per-epoch parquet alert sink.
-    Returns the StreamingQuery (caller stops it)."""
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .json(source_dir)
-    )
-
+    """Payload drop-dir (JSON rows carrying base64 is overkill here; the
+    test feeds text re-encoded like _media_frame) -> per-batch
+    posting-table probe -> per-epoch parquet alert sink
+    (run_gate_stream). Returns the StreamingQuery (caller stops it)."""
     sink = EpochParquetSink(alert_sink_dir, name="mm_dedup_alerts")
-
-    def _probe(batch_df: DataFrame, epoch_id: int) -> None:
-        media = batch_df.select(
-            "doc_id", F.encode("text", "utf-8").alias("payload")
-        )
-        alerts = probe_mm_bucket_index(spark, media, index_table)
-        # at-least-once retry safety: EpochParquetSink's epoch-overwrite
-        sink.write(alerts, epoch_id)
-
-    return (
-        stream.writeStream.foreachBatch(_probe)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_gate_stream(
+        spark,
+        source_dir,
+        checkpoint_dir,
+        lambda batch_df, epoch_id: sink.write(
+            probe_mm_bucket_index(
+                spark,
+                batch_df.select(
+                    "doc_id", F.encode("text", "utf-8").alias("payload")
+                ),
+                index_table,
+            ),
+            epoch_id,
+        ),
     )

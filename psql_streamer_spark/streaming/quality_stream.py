@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pyspark.sql import functions as F
 
-from psql_streamer_spark.streaming.sinks import EpochParquetSink
+from psql_streamer_spark.streaming.sinks import EpochParquetSink, run_gate_stream
 
 from psql_streamer_spark.functions.text_hash import with_words
 from psql_streamer_spark.operators.text import (
@@ -153,27 +153,15 @@ def start_quality_stream(
     verdict_sink_dir: str,
     checkpoint_dir: str,
 ):
-    """readStream over a document drop-dir -> per-batch model scoring ->
-    parquet verdict sink. Returns the StreamingQuery (caller stops it)."""
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .json(source_dir)
-    )
-
+    """Document drop-dir -> per-batch model scoring -> parquet verdict
+    sink (run_gate_stream). Returns the StreamingQuery (caller stops
+    it)."""
     sink = EpochParquetSink(verdict_sink_dir, name="quality_verdicts")
-
-    def _score(batch_df: DataFrame, epoch_id: int) -> None:
-        # foreachBatch is at-least-once: a retried epoch must REPLACE its
-        # prior (possibly committed) output, not append a duplicate set of
-        # verdicts — EpochParquetSink's epoch-overwrite contract; readers
-        # of the sink dir get `epoch` via partition discovery.
-        verdicts = score_quality_batch(spark, batch_df, w)
-        sink.write(verdicts, epoch_id)
-
-    return (
-        stream.writeStream.foreachBatch(_score)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_gate_stream(
+        spark,
+        source_dir,
+        checkpoint_dir,
+        lambda batch_df, epoch_id: sink.write(
+            score_quality_batch(spark, batch_df, w), epoch_id
+        ),
     )

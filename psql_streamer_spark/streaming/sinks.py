@@ -139,6 +139,28 @@ class EpochParquetSink:
         )
 
 
+def run_gate_stream(spark, source_dir: str, checkpoint_dir: str, epoch_fn):
+    """The document-gate stream shape, written once: a JSON drop-dir of
+    (doc_id, text) rows, one file per micro-batch, each batch handed to
+    ``epoch_fn(batch_df, epoch_id)``, drained with the availableNow
+    trigger. Returns the StreamingQuery (caller stops it).
+
+    foreachBatch is at-least-once: an epoch that fails after a partial
+    write is replayed under the same epoch id. The gates write through
+    EpochParquetSink, whose per-epoch overwrite makes the replay REPLACE
+    its prior output instead of appending a duplicate set of verdicts;
+    readers get ``epoch`` via partition discovery."""
+    return (
+        spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", "1")
+        .json(source_dir)
+        .writeStream.foreachBatch(epoch_fn)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 class FailNTimesSink(NoopSink):
     """Test double for the retry path (common/retry.go:41-76): fail the
     first N epochs, then succeed — proves no events are lost or

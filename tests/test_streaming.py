@@ -1996,3 +1996,42 @@ def test_fused_gate_rejects_empty_langid_prior(spark):
     prior = spark.createDataFrame([("en", 3)], "lang string, n_docs long")
     _validate_langid_model((model, prior))
     _validate_langid_model(None)
+
+
+def test_only_two_places_build_a_stream():
+    """One way to start a stream: every document gate goes through
+    sinks.run_gate_stream, and the configurable CDC pipeline through
+    CdcPipeline.start. A `readStream` or `.trigger` attribute anywhere
+    else under streaming/ is a hand-written copy of the gate shape."""
+    import ast
+    from pathlib import Path
+
+    import psql_streamer_spark.streaming as streaming
+
+    allowed = {"run_gate_stream", "CdcPipeline.start"}
+    found = []
+
+    def walk(node, scope, fname):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(
+                child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                walk(child, scope + (child.name,), fname)
+                continue
+            if isinstance(child, ast.Attribute) and child.attr in (
+                "readStream",
+                "trigger",
+            ):
+                found.append((fname, ".".join(scope), child.attr))
+            walk(child, scope, fname)
+
+    for path in sorted(Path(streaming.__file__).parent.glob("*.py")):
+        walk(ast.parse(path.read_text()), (), path.name)
+
+    stray = [f for f in found if f[1] not in allowed]
+    assert not stray, f"stream built outside {sorted(allowed)}: {stray}"
+    readers = sorted((f, s) for f, s, a in found if a == "readStream")
+    assert readers == [
+        ("pipeline.py", "CdcPipeline.start"),
+        ("sinks.py", "run_gate_stream"),
+    ]
