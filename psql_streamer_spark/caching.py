@@ -1,23 +1,42 @@
-"""Cache-lifetime discipline for lazily-returned query plans.
+"""The one rule for cache lifetime: this module decides when a cached
+frame is released.
 
-Operators persist an intermediate frame when it feeds multiple branches of
-the plan they return (signature indexes, inverted indexes). The action
-runs in the CALLER, so the operator cannot unpersist in a finally block —
-but never unpersisting leaks executor storage memory across invocations in
-a long-lived session serving many queries (the CacheManager
-"already cached" accumulation).
+Operators persist an intermediate frame when it feeds several branches of
+a plan (signature indexes, inverted indexes, a micro-batch read by every
+sink). Leaving it persisted leaks executor storage memory in a long-lived
+session (the CacheManager "already cached" accumulation), so every
+``.persist()`` outside this module is released by exactly one of three
+forms:
 
-``persist_for`` ties the cached frame's lifetime to the returned result:
-a ``weakref.finalize`` on the result DataFrame unpersists the intermediate
-as soon as the caller drops its last reference (CPython refcounting makes
-that prompt — right after the harness finishes collecting). While the
-result is alive, every action it runs still hits the cache; a re-invocation
-builds a fresh plan and its own cache, so release is always safe.
+- **registry** — ``INDEX_CACHE.get_or_build`` for build-once/probe-many
+  indexes. The builder returns a lazy plan; the registry persists and
+  materializes it, and releases it on LRU eviction or ``clear()``.
+- **``persist_for(cached, result)``** — the action runs in the CALLER of
+  an operator that returns a lazy plan, so the operator cannot release in
+  a ``finally``. A ``weakref.finalize`` on the result unpersists the
+  intermediate as soon as the caller drops its last reference (CPython
+  refcounting makes that prompt). While the result is alive every action
+  it runs still hits the cache; a re-invocation builds its own cache, so
+  release is always safe.
+- **``with persisted(df)``** — the actions run inside one scope (a
+  ``foreachBatch`` epoch, a build step): the frame is released when the
+  block exits, including when it raises. This is per-epoch state scoped
+  to the batch call, as in Structured Streaming (SIGMOD 2018).
+
+``localCheckpoint`` is exempt: it truncates lineage, so releasing its
+blocks early would break the frame, and Spark's ContextCleaner drops them
+once the frame is unreachable. ``tests/test_quality_metrics.py`` pins the
+rule: ``.unpersist(`` appears only here, and a function that calls
+``.persist()`` names ``persist_for``.
 """
 
 from __future__ import annotations
 
+import threading
 import weakref
+from collections import OrderedDict
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
@@ -40,6 +59,16 @@ def persist_for(cached: DataFrame, result: DataFrame) -> DataFrame:
     return result
 
 
+@contextmanager
+def persisted(df: DataFrame) -> Iterator[DataFrame]:
+    """Persist ``df`` for the ``with`` block and release it on exit,
+    including when the block raises."""
+    try:
+        yield df.persist()
+    finally:
+        _safe_unpersist(df)
+
+
 class MaterializedIndexCache:
     """Bounded LRU registry of materialized (persisted + computed) index
     frames, keyed by (application id, index name, dataset).
@@ -54,10 +83,11 @@ class MaterializedIndexCache:
     executor storage, and eviction unpersists immediately — the
     accumulation the round-2 review flagged cannot recur.
 
-    Builders must return an ALREADY materialized frame (persist + a cheap
-    action): multi-referenced lazy caches get re-planned per reference by
-    AQE as independent query-stage trees, recomputing the subtree before
-    the cache fills. Entries are keyed by applicationId so frames from a
+    Builders return a lazy plan; the registry persists it and runs a
+    cheap action before storing it. Materializing eagerly matters:
+    multi-referenced lazy caches get re-planned per reference by AQE as
+    independent query-stage trees, recomputing the subtree before the
+    cache fills. Entries are keyed by applicationId so frames from a
     stopped session are never returned (their eviction unpersist is a
     safe no-op). Invalidation on dataset mutation is out of scope — the
     engine's sources are immutable snapshots (TESTDATA parquet)."""
@@ -74,9 +104,6 @@ class MaterializedIndexCache:
         # a second dataset's hot indexes. Each entry is a sampled/
         # signature-sized frame (MEMORY_AND_DISK), so the bound is about
         # predictable storage, not memory safety.
-        import threading
-        from collections import OrderedDict
-
         self.max_entries = max_entries
         self._lru: OrderedDict[tuple, DataFrame] = OrderedDict()
         self._lock = threading.Lock()
@@ -87,15 +114,23 @@ class MaterializedIndexCache:
             if key in self._lru:
                 self._lru.move_to_end(key)
                 return self._lru[key]
-        df = build()  # outside the lock: builds run Spark jobs
+        # outside the lock: builds run Spark jobs
+        df = build().persist()
+        try:
+            df.count()
+        except BaseException:
+            _safe_unpersist(df)  # a failed build leaves no cache behind
+            raise
         with self._lock:
-            if key not in self._lru:
-                self._lru[key] = df
+            kept = self._lru.setdefault(key, df)
+            if kept is not df:
+                # another build registered the key meanwhile; drop ours
+                _safe_unpersist(df)
             self._lru.move_to_end(key)
             while len(self._lru) > self.max_entries:
                 _, old = self._lru.popitem(last=False)
                 _safe_unpersist(old)
-            return self._lru[key]
+            return kept
 
     def clear(self) -> None:
         with self._lock:

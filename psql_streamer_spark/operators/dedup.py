@@ -400,6 +400,36 @@ def minhash_lsh_candidates(
     )
 
 
+def _shingle_sets_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The session's materialized (doc_id, ss) shingle-set index."""
+    return INDEX_CACHE.get_or_build(
+        spark, "dedup_shingle_sets", sf_dir, lambda: _doc_shingle_sets(spark, sf_dir)
+    )
+
+
+def _minhash_sig_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The session's materialized MinHash signature index. Signatures
+    explode the cached shingle-set arrays, so a cold build tokenizes the
+    documents once for the signatures and the exact verify together."""
+
+    def _build() -> DataFrame:
+        sets = _shingle_sets_index(spark, sf_dir)
+        exploded = sets.select("doc_id", F.explode("ss").alias("shingle"))
+        return _minhash_signatures(spark, sf_dir, shingles=exploded)
+
+    return INDEX_CACHE.get_or_build(spark, "dedup_minhash_sig", sf_dir, _build)
+
+
+def _minhash_cand_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The session's materialized LSH candidate-pair index."""
+    return INDEX_CACHE.get_or_build(
+        spark,
+        "dedup_minhash_cand",
+        sf_dir,
+        lambda: minhash_lsh_candidates(_minhash_sig_index(spark, sf_dir)),
+    )
+
+
 @register("dedup_minhash_lsh_pairs", oracle=_SQL_MINHASH_LSH)
 def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH banding (4 bands x 4 rows): near-dup candidates only where a
@@ -430,42 +460,19 @@ def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # end (was twice: corpus for signatures + candidates for verify;
     # measured 8.2 s -> 6.7 s cold at sf0.1, and the verify step alone
     # 3.2 s -> 1.0 s).
-    def _build_sets() -> DataFrame:
-        s = _doc_shingle_sets(spark, sf_dir).persist()
-        s.count()
-        return s
-
-    sets = INDEX_CACHE.get_or_build(spark, "dedup_shingle_sets", sf_dir, _build_sets)
-
-    def _build_sig() -> DataFrame:
-        exploded = sets.select("doc_id", F.explode("ss").alias("shingle"))
-        s = _minhash_signatures(spark, sf_dir, shingles=exploded).persist()
-        s.count()
-        return s
-
-    sig = INDEX_CACHE.get_or_build(spark, "dedup_minhash_sig", sf_dir, _build_sig)
-
-    def _build_cand() -> DataFrame:
-        c = minhash_lsh_candidates(sig).persist()
-        c.count()
-        return c
-
-    cand = INDEX_CACHE.get_or_build(spark, "dedup_minhash_cand", sf_dir, _build_cand)
+    sets = _shingle_sets_index(spark, sf_dir)
+    cand = _minhash_cand_index(spark, sf_dir)
 
     # The verified-pairs frame is itself a build-once/probe-many artifact:
     # without it the exact-Jaccard verify re-runs the array_intersect
     # joins on every invocation (measured 2.5 s of a 2.6 s warm call at
     # sf0.1 — the whole repeat cost). Like sets/sig/cand it is immutable
     # for a given dataset snapshot, so it lives in the same registry.
-    def _build_verified() -> DataFrame:
-        v = _jaccard_pairs(
-            spark, sf_dir, candidates=cand, shingle_sets=sets
-        ).persist()
-        v.count()
-        return v
-
     return INDEX_CACHE.get_or_build(
-        spark, "dedup_minhash_verified", sf_dir, _build_verified
+        spark,
+        "dedup_minhash_verified",
+        sf_dir,
+        lambda: _jaccard_pairs(spark, sf_dir, candidates=cand, shingle_sets=sets),
     )
 
 
@@ -552,12 +559,9 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the raw lineage — correct in any composition, and the build-once/
     # probe-many shape this index wants anyway. Pinned in
     # tests/test_r10_regressions.py::test_simhash_pairs_stable_under_composition.)
-    def _build_sig() -> DataFrame:
-        s = _simhash(spark, sf_dir).persist()
-        s.count()
-        return s
-
-    sig = INDEX_CACHE.get_or_build(spark, "dedup_simhash_sig", sf_dir, _build_sig)
+    sig = INDEX_CACHE.get_or_build(
+        spark, "dedup_simhash_sig", sf_dir, lambda: _simhash(spark, sf_dir)
+    )
 
     def _build_pairs() -> DataFrame:
         banded = None
@@ -574,7 +578,7 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         a = banded.alias("a")
         b_ = banded.alias("b")
         hamming = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-        result = (
+        return (
             a.join(
                 b_,
                 (F.col("a.band") == F.col("b.band"))
@@ -588,10 +592,7 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .filter(F.col("hamming") <= 3)
             .distinct()
-            .persist()
         )
-        result.count()
-        return result
 
     return INDEX_CACHE.get_or_build(
         spark, "dedup_simhash_pairs", sf_dir, _build_pairs
@@ -742,12 +743,9 @@ def simhash64_banded_pairs(
     width = 32 // per_half
     mask = (1 << width) - 1
 
-    def _build_sig64() -> DataFrame:
-        s = _simhash64(spark, sf_dir).persist()
-        s.count()
-        return s
-
-    sig = INDEX_CACHE.get_or_build(spark, "dedup_simhash64_sig", sf_dir, _build_sig64)
+    sig = INDEX_CACHE.get_or_build(
+        spark, "dedup_simhash64_sig", sf_dir, lambda: _simhash64(spark, sf_dir)
+    )
 
     def _build_pairs64() -> DataFrame:
         banded = None
@@ -768,7 +766,7 @@ def simhash64_banded_pairs(
         hamming = F.bit_count(
             F.col("a.sh_lo").bitwiseXOR(F.col("b.sh_lo"))
         ) + F.bit_count(F.col("a.sh_hi").bitwiseXOR(F.col("b.sh_hi")))
-        result = (
+        return (
             a.join(
                 b_,
                 (F.col("a.band") == F.col("b.band"))
@@ -782,10 +780,7 @@ def simhash64_banded_pairs(
             )
             .filter(F.col("hamming") <= max_hamming)
             .distinct()
-            .persist()
         )
-        result.count()
-        return result
 
     return INDEX_CACHE.get_or_build(
         spark,
@@ -1881,20 +1876,8 @@ def dedup_minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFram
     candidate indexes; the estimate path touches NO document text — at
     100 TB that is the difference between joining two 64-byte signature
     rows and re-shingling the corpus."""
-
-    def _build_sig() -> DataFrame:
-        s = _minhash_signatures(spark, sf_dir).persist()
-        s.count()
-        return s
-
-    sig = INDEX_CACHE.get_or_build(spark, "dedup_minhash_sig", sf_dir, _build_sig)
-
-    def _build_cand() -> DataFrame:
-        c = minhash_lsh_candidates(sig).persist()
-        c.count()
-        return c
-
-    cand = INDEX_CACHE.get_or_build(spark, "dedup_minhash_cand", sf_dir, _build_cand)
+    sig = _minhash_sig_index(spark, sf_dir)
+    cand = _minhash_cand_index(spark, sf_dir)
     eq = sum(
         (F.when(F.col(f"a.mh{j}") == F.col(f"b.mh{j}"), 1).otherwise(0))
         for j in range(16)
@@ -1951,20 +1934,7 @@ def dedup_levenshtein_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix sides, and keeps pairs whose Levenshtein distance is <= 20% of
     the longer prefix. JVM-side levenshtein (codegen'd, with its own
     early-exit threshold form) — no Python in the path."""
-
-    def _build_sig() -> DataFrame:
-        s = _minhash_signatures(spark, sf_dir).persist()
-        s.count()
-        return s
-
-    sig = INDEX_CACHE.get_or_build(spark, "dedup_minhash_sig", sf_dir, _build_sig)
-
-    def _build_cand() -> DataFrame:
-        c = minhash_lsh_candidates(sig).persist()
-        c.count()
-        return c
-
-    cand = INDEX_CACHE.get_or_build(spark, "dedup_minhash_cand", sf_dir, _build_cand)
+    cand = _minhash_cand_index(spark, sf_dir)
     pre = load_table(spark, "documents", sf_dir).select(
         "doc_id", F.substring("text", 1, LEV_PREFIX).alias("p")
     )
@@ -2775,20 +2745,8 @@ def dedup_incremental_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs only, probed out of the cached shingle-set arrays."""
     from psql_streamer_spark.operators.mlprep import md5_bucket
 
-    def _build_sets() -> DataFrame:
-        s = _doc_shingle_sets(spark, sf_dir).persist()
-        s.count()
-        return s
-
-    sets = INDEX_CACHE.get_or_build(spark, "dedup_shingle_sets", sf_dir, _build_sets)
-
-    def _build_sig() -> DataFrame:
-        exploded = sets.select("doc_id", F.explode("ss").alias("shingle"))
-        s = _minhash_signatures(spark, sf_dir, shingles=exploded).persist()
-        s.count()
-        return s
-
-    sig = INDEX_CACHE.get_or_build(spark, "dedup_minhash_sig", sf_dir, _build_sig)
+    sets = _shingle_sets_index(spark, sf_dir)
+    sig = _minhash_sig_index(spark, sf_dir)
 
     def _build_banded() -> DataFrame:
         bands = F.array(
@@ -2797,7 +2755,7 @@ def dedup_incremental_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for b, key in band_key_exprs()
             ]
         )
-        b = (
+        return (
             sig.select("doc_id", F.explode(bands).alias("bk"))
             .select(
                 "doc_id",
@@ -2810,10 +2768,7 @@ def dedup_incremental_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             # corpus-side Exchange — the in-session analogue of the
             # bucketed band_index_table
             .repartition(spark.sparkContext.defaultParallelism, "band", "band_key")
-            .persist()
         )
-        b.count()
-        return b
 
     banded = INDEX_CACHE.get_or_build(spark, "dedup_band_index", sf_dir, _build_banded)
 

@@ -28,6 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from psql_streamer_spark.caching import persist_for, persisted
 from psql_streamer_spark.registry import register
 from psql_streamer_spark.sources.tables import load_table
 
@@ -578,8 +579,6 @@ def mm_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     luck involved (pinned in tests/test_mm_embedding.py)."""
     import numpy as np
 
-    from psql_streamer_spark.caching import persist_for
-
     hist = _mm_hist_frame(spark, sf_dir).persist()
     n_docs, S = _mm_model_of(hist)  # count also materializes the persist
     v = hist.select(
@@ -655,59 +654,58 @@ def mm_bucket_index_table(spark: SparkSession, sf_dir: str) -> str:
     def _build(table: str) -> None:
         from pyspark.sql import Window
 
-        hist = _mm_hist_frame(spark, sf_dir).persist()
-        n_docs, S = _mm_model_of(hist)
-        # Index-level replica collapse (r17, the second half of r15
-        # verdict #1): byte-identical payloads have identical histograms,
-        # hence identical signatures under ANY centering model — so the
-        # index stores ONE posting per unique vector (gid = the group's
-        # min doc_id) plus a (gid, doc_id) members sidecar. Index rows
-        # fall from O(N x tables) to O(u x tables), and every probe-side
-        # bucket materialization is bounded by the unique count instead
-        # of the replica count (a multi-million-row boilerplate cluster
-        # was an OOM in the screening worker before this). The centering
-        # model (n_docs, S) still sums over ALL docs — replicas weigh the
-        # model exactly as the full miner's does.
-        w = Window.partitionBy("h")
-        grouped = hist.select(
-            "doc_id", "h", F.min("doc_id").over(w).alias("gid")
-        ).persist()
-        grouped.select("gid", "doc_id").write.mode("overwrite").saveAsTable(
-            f"{table}__members"
-        )
-        # the centering model rides beside the postings: a STREAMING
-        # probe must sign brand-new payloads with the same (n, S, mask)
-        # the index was built under — signature compatibility, the same
-        # contract as the band index's shared expressions
-        spark.createDataFrame(
-            [(n_docs, S, _mm_planes(n_docs))],
-            "n_docs long, s array<long>, planes int",
-        ).write.mode("overwrite").saveAsTable(f"{table}__model")
-        # the RAW histogram rides with every posting: the bucket screen
-        # and the exact rescore both read vectors straight from the
-        # index — a delta probe never re-reads the corpus
-        uniq = grouped.filter(F.col("doc_id") == F.col("gid")).select(
-            "doc_id", "h"
-        )
-        sig = _mm_signed_postings(
-            uniq, n_docs, S, _mm_planes(n_docs)
-        ).select(
-            F.col("doc_id").alias("gid"),
-            F.concat_ws(
-                "|",
-                F.col("tbl").cast("string"),
-                F.col("bucket").cast("string"),
-            ).alias("skey"),
-            "e",
-        )
-        (
-            sig.write.bucketBy(MM_BUCKET_INDEX_BUCKETS, "skey")
-            .sortBy("skey")
-            .mode("overwrite")
-            .saveAsTable(table)
-        )
-        grouped.unpersist()
-        hist.unpersist()
+        with persisted(_mm_hist_frame(spark, sf_dir)) as hist:
+            n_docs, S = _mm_model_of(hist)
+            # Index-level replica collapse (r17, the second half of r15
+            # verdict #1): byte-identical payloads have identical histograms,
+            # hence identical signatures under ANY centering model — so the
+            # index stores ONE posting per unique vector (gid = the group's
+            # min doc_id) plus a (gid, doc_id) members sidecar. Index rows
+            # fall from O(N x tables) to O(u x tables), and every probe-side
+            # bucket materialization is bounded by the unique count instead
+            # of the replica count (a multi-million-row boilerplate cluster
+            # was an OOM in the screening worker before this). The centering
+            # model (n_docs, S) still sums over ALL docs — replicas weigh the
+            # model exactly as the full miner's does.
+            w = Window.partitionBy("h")
+            grouped = hist.select(
+                "doc_id", "h", F.min("doc_id").over(w).alias("gid")
+            )
+            with persisted(grouped):
+                grouped.select("gid", "doc_id").write.mode("overwrite").saveAsTable(
+                    f"{table}__members"
+                )
+                # the centering model rides beside the postings: a STREAMING
+                # probe must sign brand-new payloads with the same (n, S, mask)
+                # the index was built under — signature compatibility, the same
+                # contract as the band index's shared expressions
+                spark.createDataFrame(
+                    [(n_docs, S, _mm_planes(n_docs))],
+                    "n_docs long, s array<long>, planes int",
+                ).write.mode("overwrite").saveAsTable(f"{table}__model")
+                # the RAW histogram rides with every posting: the bucket screen
+                # and the exact rescore both read vectors straight from the
+                # index — a delta probe never re-reads the corpus
+                uniq = grouped.filter(F.col("doc_id") == F.col("gid")).select(
+                    "doc_id", "h"
+                )
+                sig = _mm_signed_postings(
+                    uniq, n_docs, S, _mm_planes(n_docs)
+                ).select(
+                    F.col("doc_id").alias("gid"),
+                    F.concat_ws(
+                        "|",
+                        F.col("tbl").cast("string"),
+                        F.col("bucket").cast("string"),
+                    ).alias("skey"),
+                    "e",
+                )
+                (
+                    sig.write.bucketBy(MM_BUCKET_INDEX_BUCKETS, "skey")
+                    .sortBy("skey")
+                    .mode("overwrite")
+                    .saveAsTable(table)
+                )
 
     return app_scoped_bucketed_table(spark, f"mm_bucket_index_{tag}", _build)
 
@@ -831,8 +829,6 @@ def mm_dedup_embedding_incremental(
     before mapInPandas, so only colliding payloads pay the feature
     extraction). Same verify expression and threshold as the full miner,
     so a pair alerts here iff the full miner would emit it today."""
-    from psql_streamer_spark.caching import persist_for
-
     cand = mm_incremental_candidates(spark, sf_dir, bucket).persist()
     ids = (
         cand.select(F.explode(F.array("doc_a", "doc_b")).alias("doc_id"))
@@ -911,6 +907,4 @@ def mm_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("n_hot_buckets"),
     )
-    from psql_streamer_spark.caching import persist_for
-
     return persist_for(hist, out)

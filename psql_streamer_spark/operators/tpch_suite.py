@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from psql_streamer_spark.caching import persist_for
 from psql_streamer_spark.functions.numeric import davg, dsum, sql_davg, sql_dsum
 from psql_streamer_spark.registry import register
 from psql_streamer_spark.sources.tables import load_table
@@ -1259,13 +1260,14 @@ def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("n_supp") >= 2) & (F.col("n_late_supp") == 1))
     )
     s = load_table(spark, "supplier", sf_dir).select("s_suppkey", "s_name")
-    return (
+    result = (
         only_late.join(s, F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy("s_name")
         .agg(F.count("*").alias("numwait"))
         .orderBy(F.desc("numwait"), F.asc("s_name"))
         .limit(20)
     )
+    return persist_for(l1, result)
 
 
 # --------------------------------------------------------------------------

@@ -44,6 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from psql_streamer_spark.caching import persisted
 from psql_streamer_spark.functions.text_hash import with_words
 from psql_streamer_spark.sources.tables import load_table
 from psql_streamer_spark.streaming.sinks import EpochParquetSink, run_gate_stream
@@ -66,17 +67,11 @@ def build_reference_distribution(
     the collect is bounded at k rows + one scalar (driver model state,
     not data)."""
     d = with_words(load_table(spark, "documents", sf_dir))
-    counts = (
-        d.select(F.explode("__words").alias("token"))
-        .groupBy("token")
-        .count()
-        .persist()  # two actions (top-k + total) share one corpus scan
-    )
-    try:
+    counts = d.select(F.explode("__words").alias("token")).groupBy("token").count()
+    # two actions (top-k + total) share one corpus scan
+    with persisted(counts):
         top = counts.orderBy(F.col("count").desc(), "token").limit(k).collect()
         total = counts.agg(F.sum("count").alias("t")).collect()[0]["t"] or 0
-    finally:
-        counts.unpersist()
     return (
         [r["token"] for r in top],
         [int(r["count"]) for r in top],

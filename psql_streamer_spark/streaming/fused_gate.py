@@ -35,12 +35,14 @@ oracle-registered.
 from __future__ import annotations
 
 import os
+from contextlib import nullcontext
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from psql_streamer_spark.streaming.sinks import EpochParquetSink, run_gate_stream
 
+from psql_streamer_spark.caching import persisted
 from psql_streamer_spark.functions.text_hash import with_words
 from psql_streamer_spark.operators.mlprep import BLOOM_M_BITS
 from psql_streamer_spark.streaming.decontam_stream import probe_contamination
@@ -227,9 +229,7 @@ def _fused_gate_epoch(
         # concurrently-materialized variant was measured SLOWER — the
         # extra persist/count actions cost more than the stage overlap
         # bought; see BENCH_NOTES r14.)
-        tokenized = with_words(batch_df).persist()
-        verdicts = None
-        try:
+        with persisted(with_words(batch_df)) as tokenized:
             verdicts = fused_gate_verdicts(
                 spark,
                 tokenized,
@@ -243,17 +243,14 @@ def _fused_gate_epoch(
                 langid_model,
                 allowed_langs,
             )
-            if on_admit is not None:
-                verdicts = verdicts.persist()  # on_admit reads it again
-            verdict_sink.write(verdicts, epoch_id)
-            if drift_sink is not None:
-                drift_sink.write(drift_batch(tokenized, *drift_ref), epoch_id)
-            if on_admit is not None:
-                on_admit(tokenized, verdicts, epoch_id)
-        finally:
-            if on_admit is not None and verdicts is not None:
-                verdicts.unpersist()
-            tokenized.unpersist()
+            # on_admit reads the verdicts again
+            keep = persisted if on_admit is not None else nullcontext
+            with keep(verdicts):
+                verdict_sink.write(verdicts, epoch_id)
+                if drift_sink is not None:
+                    drift_sink.write(drift_batch(tokenized, *drift_ref), epoch_id)
+                if on_admit is not None:
+                    on_admit(tokenized, verdicts, epoch_id)
 
     return gate_epoch
 

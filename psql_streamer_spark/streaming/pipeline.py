@@ -30,6 +30,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from psql_streamer_spark.caching import persisted
 from psql_streamer_spark.routing import topic_expr
 from psql_streamer_spark.schema import ACTIONS
 from psql_streamer_spark.streaming.sinks import Sink
@@ -136,9 +137,6 @@ class CdcPipeline:
         self.spark = spark
         self.source_path = source_path
         self.checkpoint_dir = checkpoint_dir
-        self.sinks = [r.sink for r in self.routes]
-        self.topic_mapping = dict(topic_mapping or {})
-        self.topic_fallback = topic_fallback
         self.dlq_sink = dlq_sink
         # wire-format decoder: raw lines -> Event envelope. Defaults to the
         # reference's own JSON wire format; sources/cdc_formats.py provides
@@ -163,8 +161,9 @@ class CdcPipeline:
         # columns. The counters ride an `observe` node (CollectMetrics)
         # computed as a SIDE EFFECT of the first sink write that
         # materializes the frame — no dedicated stats job per micro-batch.
-        # The cache is released in finally (a leaked persist per
-        # micro-batch is a storage-memory leak on an always-on stream).
+        # The cache is released when the epoch exits, failed or not (a
+        # leaked persist per micro-batch is a storage-memory leak on an
+        # always-on stream).
         from pyspark.sql import Observation
 
         decoded = self.decoder(batch_df)
@@ -195,9 +194,8 @@ class CdcPipeline:
                 F.count(F.when(F.col("_keep"), 1)).alias("n_valid"),
                 F.count(F.when(F.col("_keep") & any_topic, 1)).alias("n_routed"),
             )
-            .persist()
         )
-        try:
+        with persisted(annotated):
             # fan-out: every sink gets the batch routed by its own mapping;
             # any failure aborts the epoch BEFORE offsets commit
             # (all-or-nothing ACK). The first write materializes the cache
@@ -235,8 +233,6 @@ class CdcPipeline:
                 self.stats.events_dlq += counts["n_dlq"]
                 self.stats.events_routed += counts["n_routed"]
                 self.stats.events_discarded += counts["n_valid"] - counts["n_routed"]
-        finally:
-            annotated.unpersist()
 
     # -- lifecycle ---------------------------------------------------------
     def start(self, available_now: bool = False):

@@ -313,6 +313,111 @@ def test_index_cache_lru_evicts_and_unpersists(spark):
     assert not dfs[1].storageLevel.useMemory and not df3.storageLevel.useMemory
 
 
+def test_index_cache_releases_the_losing_build(spark):
+    """When the key is registered while a build runs (here the builder
+    re-enters get_or_build for its own key), the registry keeps the first
+    frame and unpersists the one it drops instead of leaking its cache."""
+    from psql_streamer_spark.caching import MaterializedIndexCache
+
+    cache = MaterializedIndexCache(max_entries=2)
+    winner, loser = spark.range(5), spark.range(7)
+
+    def materialized(df):
+        df.persist()
+        df.count()
+        return df
+
+    def build_loser():
+        cache.get_or_build(spark, "idx", "ds", lambda: materialized(winner))
+        return materialized(loser)
+
+    assert cache.get_or_build(spark, "idx", "ds", build_loser) is winner
+    assert winner.storageLevel.useMemory
+    assert not loser.storageLevel.useMemory
+    cache.clear()
+
+
+def test_persisted_releases_its_frame_when_the_body_raises(spark):
+    import time
+
+    from psql_streamer_spark.caching import persisted
+
+    df = spark.range(11)
+    before = _cached_rdd_ids(spark)
+    with pytest.raises(RuntimeError, match="epoch failed"):
+        with persisted(df):
+            df.count()
+            created = _cached_rdd_ids(spark) - before
+            raise RuntimeError("epoch failed")
+    assert created, "persisted() must cache the frame for the block"
+    assert not df.storageLevel.useMemory
+    for _ in range(100):  # block removal is async (blocking=False)
+        if not (created & _cached_rdd_ids(spark)):
+            break
+        time.sleep(0.1)
+    assert not (created & _cached_rdd_ids(spark))
+
+
+def test_one_cache_lifetime_rule():
+    """psql_streamer_spark/caching.py decides when every cached frame is
+    released: only it calls ``.unpersist(``, and a top-level function or
+    method that calls ``.persist()`` ties the frame to its result with
+    ``persist_for``. Frames scoped to one block use ``caching.persisted``;
+    index frames go through ``INDEX_CACHE``, whose builders return lazy
+    plans. ``localCheckpoint`` is out of scope (Spark's ContextCleaner
+    releases it)."""
+    import ast
+    from pathlib import Path
+
+    import psql_streamer_spark
+
+    # both callers release `g` through persist_for
+    allowed = {("operators/dedup.py", "_capped_pair_counts")}
+
+    def calls(node, attr):
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == attr
+        )
+
+    def names(node):
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                yield n.id
+            elif isinstance(n, ast.Attribute):
+                yield n.attr
+
+    funcs = (ast.FunctionDef, ast.AsyncFunctionDef)
+    root = Path(psql_streamer_spark.__file__).parent
+    unpersists, unpaired, seen = [], [], set()
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "caching.py":
+            continue
+        tree = ast.parse(path.read_text(), filename=str(path))
+        unpersists += [
+            f"{rel}:{n.lineno}" for n in ast.walk(tree) if calls(n, "unpersist")
+        ]
+        units = [n for n in tree.body if isinstance(n, funcs)] + [
+            m
+            for c in tree.body
+            if isinstance(c, ast.ClassDef)
+            for m in c.body
+            if isinstance(m, funcs)
+        ]
+        for fn in units:
+            if not any(calls(n, "persist") for n in ast.walk(fn)):
+                continue
+            if (rel, fn.name) in allowed:
+                seen.add((rel, fn.name))
+            elif "persist_for" not in set(names(fn)):
+                unpaired.append(f"{rel}:{fn.lineno} {fn.name}")
+    assert not unpersists, f".unpersist( outside caching.py: {unpersists}"
+    assert not unpaired, f".persist() without persist_for: {unpaired}"
+    assert seen == allowed, f"stale allowlist entries: {allowed - seen}"
+
+
 def test_lsh_band_bucket_cap_guards_boilerplate_skew(spark):
     """Boilerplate-heavy corpus (10%+ identical template docs): every band
     key the template hashes to becomes one hot bucket -> quadratic
