@@ -54,6 +54,7 @@ TOML shape (mirrors psql-streamer.toml; reference key names kept):
 
 from __future__ import annotations
 
+import math
 import tomllib
 from dataclasses import dataclass, field
 from pathlib import Path
@@ -85,21 +86,27 @@ _GO_UNIT_MS = {"ms": 1, "s": 1000, "m": 60_000, "h": 3_600_000}
 
 
 def parse_duration_ms(v: Any) -> int:
-    """Go-style duration ("5ms", "1s", "2m") or bare seconds → milliseconds."""
-    if isinstance(v, (int, float)):
-        return round(v * 1000)
-    s = str(v).strip()
-    for unit in ("ms", "s", "m", "h"):  # ms before s: "5ms" must not match "s"
-        num = s[: -len(unit)]
-        if s.endswith(unit) and num.replace(".", "", 1).isdigit():
-            if num.isdigit():  # integer quantity: stay in exact int math
-                return int(num) * _GO_UNIT_MS[unit]
-            return round(float(num) * _GO_UNIT_MS[unit])
-    raise ConfigError(f"unparseable duration: {v!r}")
-
-
-def _as_trigger_interval(v: Any) -> str:
-    return f"{parse_duration_ms(v)} milliseconds"
+    """Go-style duration ("5ms", "1s", "2m") or bare seconds → milliseconds.
+    Anything else, NaN and infinity included, raises ConfigError."""
+    if isinstance(v, int):
+        return v * 1000
+    if isinstance(v, float):
+        ms = v * 1000
+    else:
+        s = str(v).strip()
+        for unit in ("ms", "s", "m", "h"):  # ms before s: "5ms" must not match "s"
+            num = s[: -len(unit)]
+            # isdecimal, not isdigit: "²" is a digit that int() rejects
+            if s.endswith(unit) and num.replace(".", "", 1).isdecimal():
+                if num.isdecimal():  # integer quantity: stay in exact int math
+                    return int(num) * _GO_UNIT_MS[unit]
+                ms = float(num) * _GO_UNIT_MS[unit]
+                break
+        else:
+            raise ConfigError(f"unparseable duration: {v!r}")
+    if not math.isfinite(ms):
+        raise ConfigError(f"unparseable duration: {v!r}")
+    return round(ms)
 
 
 # -- sink factory (sink/sink.go:24-40: kafka / stub_log / stub_discard) -----
@@ -388,16 +395,9 @@ def compile_config(spark: SparkSession, conf: dict | str | Path) -> Engine:
                 raise ConfigError(
                     f"source '{name}': batchSize should be > 0"
                 )
+        flush_ms = None
         if "batchFlushInterval" in sc:
-            try:
-                flush_ms = parse_duration_ms(sc["batchFlushInterval"])
-            except ConfigError:
-                raise
-            except (ValueError, TypeError):
-                raise ConfigError(
-                    f"source '{name}': unparseable batchFlushInterval: "
-                    f"{sc['batchFlushInterval']!r}"
-                ) from None
+            flush_ms = parse_duration_ms(sc["batchFlushInterval"])
             if flush_ms <= 0:
                 raise ConfigError(
                     f"source '{name}': batchFlushInterval should be > 0"
@@ -409,9 +409,7 @@ def compile_config(spark: SparkSession, conf: dict | str | Path) -> Engine:
             routes=routes,
             max_files_per_trigger=batch_size,
             processing_interval=(
-                _as_trigger_interval(sc["batchFlushInterval"])
-                if "batchFlushInterval" in sc
-                else None
+                f"{flush_ms} milliseconds" if flush_ms is not None else None
             ),
             **extra,
         )

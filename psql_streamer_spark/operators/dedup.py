@@ -21,7 +21,6 @@ from __future__ import annotations
 
 import math
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,7 +51,7 @@ from psql_streamer_spark.functions.text_hash import (
     SQL_H32B,
     SQL_WORDS,
 )
-from psql_streamer_spark.caching import INDEX_CACHE, persist_for
+from psql_streamer_spark.caching import INDEX_CACHE, persist_for, warehouse_table
 from psql_streamer_spark.registry import register
 from psql_streamer_spark.sources.tables import load_table
 
@@ -2805,13 +2804,6 @@ def dedup_incremental_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bucket-local join — the corpus is never re-shuffled, plan-asserted.
 # --------------------------------------------------------------------------
 BAND_INDEX_BUCKETS = 16
-# first-use sweep age gate for dead apps' band-index dirs: generous enough
-# that no live app (pytest session, oracle sweep, bench run — all well under
-# an hour of index lifetime) can be swept mid-scan, tight enough that the
-# warehouse never accumulates more than a few hours of app litter
-BAND_INDEX_SWEEP_AGE_SEC = 6 * 3600
-
-
 
 # the hot-bucket reporting threshold for the index-stats diagnostic: a
 # bucket bigger than this contributes O(cap^2) candidate pairs on its
@@ -2874,137 +2866,6 @@ def dedup_band_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def touch_app_table_liveness(spark: SparkSession, table: str) -> None:
-    """Refresh the warehouse-dir mtime of an app-scoped index table.
-
-    The first-use litter sweep's age gate treats a RECENT mtime as "a
-    live app owns this" — but reads never update mtime, so a >gate-lived
-    READ-ONLY consumer (a streaming probe running for hours against an
-    index built at startup) would look dead to a newly starting app.
-    Called on EVERY app_scoped_bucketed_table resolution (the tableExists
-    fast path every batch consumer goes through) and once per streaming
-    probe invocation (probes receive the table NAME, not the resolver).
-    One utime syscall on the local FS the warehouse mechanism targets; a
-    failure falls back to the age gate alone — and is WARNED once per
-    table, because a silently absent liveness signal would re-open the
-    sweep race for >gate-lived readers.
-
-    Also refreshes the ``<table>__model`` companion dir when present:
-    indexes that carry a trained sidecar (mm_bucket_index_table writes
-    its centering model as ``{table}__model``) match the same sweep
-    prefix, so a >gate-lived probe that only touched the posting dir
-    would keep the postings alive while a newly starting app's sweep
-    removed the model out from under it — the exact race this function
-    exists to prevent."""
-    from urllib.parse import urlparse
-
-    try:
-        warehouse = urlparse(
-            spark.conf.get("spark.sql.warehouse.dir")
-        ).path
-        os.utime(os.path.join(warehouse, table), None)
-        for suffix in _SIDECAR_SUFFIXES:
-            side_dir = os.path.join(warehouse, table + suffix)
-            if os.path.isdir(side_dir):
-                os.utime(side_dir, None)
-    except OSError as exc:
-        if table not in _TOUCH_WARNED:
-            _TOUCH_WARNED.add(table)
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "liveness touch failed for warehouse table %s (%s): "
-                "only the %ss age gate protects it from litter sweeps",
-                table,
-                exc,
-                BAND_INDEX_SWEEP_AGE_SEC,
-            )
-
-
-_TOUCH_WARNED: set = set()
-
-# Sidecar dirs that ride beside an app-scoped index table and share its
-# lifetime: the trained centering model (mm_bucket_index_table) and the
-# replica-group members map (r17 index collapse). Liveness touches and
-# the litter sweep's age deferral treat each `<table><suffix>` dir as
-# live iff its base table is.
-_SIDECAR_SUFFIXES = ("__model", "__members")
-
-
-def app_scoped_bucketed_table(spark: SparkSession, base: str, build) -> str:
-    """Shared per-app warehouse-table discipline for build-once bucketed
-    indexes (band_index_table's contract, factored for reuse by the mm
-    bucket index): APPLICATION-scoped name (concurrent apps never rewrite
-    each other's live files), stale same-name dir cleared before rebuild,
-    and a first-use age-gated sweep of dead apps' leftovers under the
-    same ``<base>_`` prefix. ``build(table_name)`` must saveAsTable the
-    content (deterministic, so any app's rebuild is equivalent).
-
-    Sweep safety: the age gate is the guard — a live WRITER's dir is
-    younger than the gate by construction, and long-lived READ-ONLY
-    consumers keep their dir young via touch_app_table_liveness
-    (refreshed on every resolver fast-path hit here, and once per
-    invocation by the streaming probes, which receive the table name
-    rather than resolving it). The prefix match may also catch a sibling dataset
-    whose tag extends this one ('..._sf0_1' vs '..._sf0_1_extra');
-    that's still litter-vs-live decided by the same age+liveness gate,
-    never a correctness issue."""
-    import re as _re
-    import shutil
-    from urllib.parse import urlparse
-
-    app = _re.sub(r"\W+", "_", spark.sparkContext.applicationId)
-    table = f"{base}_{app}"
-    if not spark.catalog.tableExists(table):
-        # the default in-memory catalog forgets the table on session stop
-        # but the files survive in the warehouse dir — clear a stale
-        # location so the rebuild (deterministic content) can write
-        warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        stale = os.path.join(warehouse, table)
-        if os.path.exists(stale):
-            shutil.rmtree(stale)
-        # first-use sweep of dead apps' leftovers for this index family;
-        # age-gated so a concurrently-live app is untouched, ignore_errors
-        # so two sweepers racing on the same corpse is benign
-        prefix = f"{base}_"
-        now = time.time()
-        if os.path.isdir(warehouse):
-            for n in os.listdir(warehouse):
-                d = os.path.join(warehouse, n)
-                if n.startswith(prefix) and n != table and os.path.isdir(d):
-                    try:
-                        old = now - os.path.getmtime(d) > BAND_INDEX_SWEEP_AGE_SEC
-                        # a sidecar dir (X__model / X__members) is live iff
-                        # its base table X is live: liveness touches refresh
-                        # both, but an old touch path (or a probe that only
-                        # refreshed the base) must not strand the sidecar —
-                        # defer to the SIBLING's age when it exists
-                        if old:
-                            for suffix in _SIDECAR_SUFFIXES:
-                                if not n.endswith(suffix):
-                                    continue
-                                sib = os.path.join(
-                                    warehouse, n[: -len(suffix)]
-                                )
-                                if os.path.isdir(sib):
-                                    old = (
-                                        now - os.path.getmtime(sib)
-                                        > BAND_INDEX_SWEEP_AGE_SEC
-                                    )
-                                break
-                    except OSError:
-                        continue
-                    if old:
-                        shutil.rmtree(d, ignore_errors=True)
-        build(table)
-    else:
-        # fast path = an existing consumer resolving its table: refresh
-        # liveness here so EVERY batch consumer (not just the streaming
-        # probes) keeps its dir younger than the sweep gate
-        touch_app_table_liveness(spark, table)
-    return table
-
-
 def band_index_table(spark: SparkSession, sf_dir: str) -> str:
     """Build-once bucketed band-index table for a dataset snapshot.
 
@@ -3019,26 +2880,8 @@ def band_index_table(spark: SparkSession, sf_dir: str) -> str:
     appended per batch and compacted (sources/io.compact_parquet); here it
     is written on first use per session (the default in-memory catalog
     scopes table metadata to the session; files land in the gitignored
-    warehouse dir) and reused by every later invocation.
-
-    The table name is APPLICATION-scoped: the in-memory catalog never
-    shared metadata across Spark apps anyway, but two concurrent apps
-    sharing one warehouse dir under a single name DID share files — app B,
-    seeing no catalog entry, would rmtree-and-rewrite the directory app A
-    was actively scanning (observed twice as FAILED_READ_FILE.FILE_NOT_EXIST
-    when pytest and an oracle sweep ran concurrently). Per-app names make
-    the rebuild safe; stale dirs from FINISHED apps (names never collide
-    across apps, so a name-collision clear alone would accumulate one dir
-    per app per dataset forever) are swept on first use: any sibling
-    ``band_index_<tag>_*`` dir belonging to another app and older than
-    ``BAND_INDEX_SWEEP_AGE_SEC`` is removed before the new build. The age
-    gate keeps the sweep safe under exactly the concurrency that motivated
-    per-app names — a LIVE sibling app's dir is necessarily younger than
-    the gate (written this session), so only dead apps' leftovers are
-    eligible; growth is bounded by apps-per-window instead of apps-ever."""
-    import re
-
-    tag = re.sub(r"\W+", "_", sf_dir.strip("/"))
+    warehouse dir) and reused by every later invocation, through
+    caching.warehouse_table."""
 
     def _build(table: str) -> None:
         sig = _minhash_signatures(spark, sf_dir)
@@ -3061,7 +2904,7 @@ def band_index_table(spark: SparkSession, sf_dir: str) -> str:
             .saveAsTable(table)
         )
 
-    return app_scoped_bucketed_table(spark, f"band_index_{tag}", _build)
+    return warehouse_table(spark, "band_index", sf_dir, _build)
 
 
 def materialized_band_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:

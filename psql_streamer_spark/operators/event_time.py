@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from psql_streamer_spark.caching import warehouse_table
 from psql_streamer_spark.functions.numeric import dsum, sql_dsum
 from psql_streamer_spark.registry import register
 from psql_streamer_spark.sources.tables import load_table
@@ -394,29 +395,18 @@ EVT_PRUNE_END = "2024-01-12"
 def events_date_partitioned_table(spark: SparkSession, sf_dir: str) -> str:
     """Write the events table ONCE per session as a date-partitioned
     table (``event_date=YYYY-MM-DD/`` directories) and return its name —
-    the ingest-side half of partition pruning, same write-once lifecycle
-    and stale-dir handling as dedup.band_index_table. 30 partitions at
-    any SF (the synthetic corpus spans 30 days); on a real lake this is
-    the daily-append layout, and the partition count grows with DAYS,
-    never with rows/day — which is why pruning survives any corpus
-    width."""
-    import os
-    import re
-    import shutil
-    from urllib.parse import urlparse
+    the ingest-side half of partition pruning. 30 partitions at any SF
+    (the synthetic corpus spans 30 days); on a real lake this is the
+    daily-append layout, and the partition count grows with DAYS, never
+    with rows/day — which is why pruning survives any corpus width."""
 
-    tag = re.sub(r"\W+", "_", sf_dir.strip("/"))
-    table = f"events_by_date_{tag}"
-    if not spark.catalog.tableExists(table):
-        warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        stale = os.path.join(warehouse, table)
-        if os.path.exists(stale):
-            shutil.rmtree(stale)
+    def _build(table: str) -> None:
         e = load_table(spark, "events", sf_dir).withColumn(
             "event_date", F.to_date("ts")
         )
         e.write.partitionBy("event_date").mode("overwrite").saveAsTable(table)
-    return table
+
+    return warehouse_table(spark, "events_by_date", sf_dir, _build)
 
 
 @register(

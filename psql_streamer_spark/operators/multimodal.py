@@ -28,7 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from psql_streamer_spark.caching import persist_for, persisted
+from psql_streamer_spark.caching import persist_for, persisted, warehouse_table
 from psql_streamer_spark.registry import register
 from psql_streamer_spark.sources.tables import load_table
 
@@ -347,7 +347,6 @@ from psql_streamer_spark.operators.dedup import (  # noqa: E402
     _SIM_SQL_DOT as _MM_SQL_DOT,
     _SIM_SQL_NORM as _MM_SQL_NORM,
     _SQL_DELTA_PRED as _SQL_MM_DELTA_PRED,
-    app_scoped_bucketed_table,
     screen_delta_group_pairs,
     screen_unique_pairs,
 )
@@ -647,9 +646,6 @@ def mm_bucket_index_table(spark: SparkSession, sf_dir: str) -> str:
     Signatures use the corpus centering model (n, S) computed at build
     time — the model is baked into the postings, exactly like a trained
     IVF's centroids ride with its index."""
-    import re
-
-    tag = re.sub(r"\W+", "_", sf_dir.strip("/"))
 
     def _build(table: str) -> None:
         from pyspark.sql import Window
@@ -707,7 +703,7 @@ def mm_bucket_index_table(spark: SparkSession, sf_dir: str) -> str:
                     .saveAsTable(table)
                 )
 
-    return app_scoped_bucketed_table(spark, f"mm_bucket_index_{tag}", _build)
+    return warehouse_table(spark, "mm_bucket_index", sf_dir, _build)
 
 
 def mm_bucket_index_model(spark: SparkSession, table: str) -> tuple:

@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from psql_streamer_spark.caching import persist_for
+from psql_streamer_spark.caching import persist_for, warehouse_table
 from psql_streamer_spark.functions.numeric import davg, dsum, sql_davg, sql_dsum
 from psql_streamer_spark.registry import register
 from psql_streamer_spark.sources.tables import load_table
@@ -107,11 +107,10 @@ LAKE_LEAF_SALT = 8
 
 def lineitem_shipmonth_partitioned_table(spark: SparkSession, sf_dir: str) -> str:
     """Write lineitem ONCE per session as a ship-month partitioned table
-    (``l_shipmonth=YYYY-MM/`` directories) and return its name — same
-    write-once lifecycle and stale-dir handling as
-    events_date_partitioned_table. The synthetic corpus spans 83 months,
-    so the partition count grows with MONTHS, never rows/month — the
-    daily/monthly-append layout a real lake runs.
+    (``l_shipmonth=YYYY-MM/`` directories) and return its name. The
+    synthetic corpus spans 83 months, so the partition count grows with
+    MONTHS, never rows/month — the daily/monthly-append layout a real
+    lake runs.
 
     The write repartitions by (month, salt): month alone bounds files
     per leaf but collapses each month to ONE writer task and ONE file —
@@ -124,18 +123,8 @@ def lineitem_shipmonth_partitioned_table(spark: SparkSession, sf_dir: str) -> st
     so splits come free either way — the salt is the small-SF/local
     parallelism knob, and the leaf layout and pruning are unchanged by
     it."""
-    import os
-    import re
-    import shutil
-    from urllib.parse import urlparse
 
-    tag = re.sub(r"\W+", "_", sf_dir.strip("/"))
-    table = f"lineitem_by_shipmonth_{tag}"
-    if not spark.catalog.tableExists(table):
-        warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        stale = os.path.join(warehouse, table)
-        if os.path.exists(stale):
-            shutil.rmtree(stale)
+    def _build(table: str) -> None:
         l = load_table(spark, "lineitem", sf_dir).withColumn(
             "l_shipmonth", F.date_format("l_shipdate", "yyyy-MM")
         )
@@ -153,7 +142,8 @@ def lineitem_shipmonth_partitioned_table(spark: SparkSession, sf_dir: str) -> st
             .mode("overwrite")
             .saveAsTable(table)
         )
-    return table
+
+    return warehouse_table(spark, "lineitem_by_shipmonth", sf_dir, _build)
 
 
 @register(
@@ -245,21 +235,11 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 def orders_ordermonth_partitioned_table(spark: SparkSession, sf_dir: str) -> str:
     """Write orders ONCE per session as an order-month partitioned table
-    (``o_ordermonth=YYYY-MM/``) and return its name — same write-once
-    lifecycle, stale-dir handling, and repartition-by-month write
-    discipline as lineitem_shipmonth_partitioned_table."""
-    import os
-    import re
-    import shutil
-    from urllib.parse import urlparse
+    (``o_ordermonth=YYYY-MM/``) and return its name — same
+    repartition-by-month write discipline as
+    lineitem_shipmonth_partitioned_table."""
 
-    tag = re.sub(r"\W+", "_", sf_dir.strip("/"))
-    table = f"orders_by_ordermonth_{tag}"
-    if not spark.catalog.tableExists(table):
-        warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        stale = os.path.join(warehouse, table)
-        if os.path.exists(stale):
-            shutil.rmtree(stale)
+    def _build(table: str) -> None:
         o = load_table(spark, "orders", sf_dir).withColumn(
             "o_ordermonth", F.date_format("o_orderdate", "yyyy-MM")
         )
@@ -274,7 +254,8 @@ def orders_ordermonth_partitioned_table(spark: SparkSession, sf_dir: str) -> str
             .mode("overwrite")
             .saveAsTable(table)
         )
-    return table
+
+    return warehouse_table(spark, "orders_by_ordermonth", sf_dir, _build)
 
 
 @register(
@@ -349,18 +330,8 @@ def lineitem_clustered_table(spark: SparkSession, sf_dir: str) -> str:
     local files straddle every key and the stat-read fraction stayed
     ~0.86 vs 0.82 unsorted. Range-splitting narrows the FILE, which
     survives any row-group geometry.)"""
-    import os
-    import re
-    import shutil
-    from urllib.parse import urlparse
 
-    tag = re.sub(r"\W+", "_", sf_dir.strip("/"))
-    table = f"lineitem_clustered_{tag}"
-    if not spark.catalog.tableExists(table):
-        warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        stale = os.path.join(warehouse, table)
-        if os.path.exists(stale):
-            shutil.rmtree(stale)
+    def _build(table: str) -> None:
         l = load_table(spark, "lineitem", sf_dir).withColumn(
             "l_shipmonth", F.date_format("l_shipdate", "yyyy-MM")
         )
@@ -378,7 +349,8 @@ def lineitem_clustered_table(spark: SparkSession, sf_dir: str) -> str:
             .mode("overwrite")
             .saveAsTable(table)
         )
-    return table
+
+    return warehouse_table(spark, "lineitem_clustered", sf_dir, _build)
 
 
 @register(
@@ -475,18 +447,8 @@ def lineitem_zorder_table(spark: SparkSession, sf_dir: str) -> str:
     that code. The morton column is layout-only and dropped before the
     write — the data is byte-identical to raw lineitem, only file
     ASSIGNMENT changes."""
-    import os
-    import re
-    import shutil
-    from urllib.parse import urlparse
 
-    tag = re.sub(r"\W+", "_", sf_dir.strip("/"))
-    table = f"lineitem_zorder_{tag}"
-    if not spark.catalog.tableExists(table):
-        warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        stale = os.path.join(warehouse, table)
-        if os.path.exists(stale):
-            shutil.rmtree(stale)
+    def _build(table: str) -> None:
         l = load_table(spark, "lineitem", sf_dir)
         n_buckets = 1 << Z_BITS
         bp = quantile_bucket(l, "l_partkey", n_buckets)
@@ -500,7 +462,8 @@ def lineitem_zorder_table(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .saveAsTable(table)
         )
-    return table
+
+    return warehouse_table(spark, "lineitem_zorder", sf_dir, _build)
 
 
 def _zorder_lookup(

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from psql_streamer_spark.caching import touch_app_table_liveness
 from psql_streamer_spark.streaming.sinks import EpochParquetSink, run_gate_stream
 
 from psql_streamer_spark.functions.text_hash import (
@@ -81,10 +82,6 @@ def probe_band_index(
     batch side is micro-batch-sized and shuffles trivially. Verification
     re-shingles ONLY the colliding corpus docs plus the batch docs.
     """
-    from psql_streamer_spark.operators.dedup import (
-        touch_app_table_liveness,
-    )
-
     touch_app_table_liveness(spark, index_table)  # see its docstring
     banded = batch_band_postings(batch_df).select(
         F.col("doc_id").alias("new_doc_id"), "bkey"

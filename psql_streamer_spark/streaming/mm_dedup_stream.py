@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from psql_streamer_spark.caching import touch_app_table_liveness
 from psql_streamer_spark.streaming.sinks import EpochParquetSink, run_gate_stream
 
 from psql_streamer_spark.operators.multimodal import (
@@ -95,10 +96,6 @@ def probe_mm_bucket_index(
     cosine); members expand only after the threshold filter, via one
     join against the (gid, doc_id) sidecar — a hot replica cluster costs
     one cosine, not one per member."""
-    from psql_streamer_spark.operators.dedup import (
-        touch_app_table_liveness,
-    )
-
     touch_app_table_liveness(spark, index_table)  # see its docstring
     new_posts = batch_mm_postings(spark, batch_df, index_table)
     idx = spark.table(index_table)

@@ -6,8 +6,14 @@ Each transform is a pure DataFrame->DataFrame function (composable with
 the whole chain stays inside WholeStageCodegen instead of a per-event
 Go callback.
 
-Works identically on batch and streaming DataFrames (same API), which is
-how the batch oracle checks validate the streaming hot path's logic.
+Works identically on batch and streaming DataFrames (same API). The
+streaming epoch body (``CdcPipeline._process_batch``) shares
+``decode_cdc_json``, ``is_valid_event``, ``with_default_key`` and
+``serialize_passthrough`` (and ``routing.topic_expr``) with the batch
+operators, so the batch oracle checks cover those. It does NOT call
+``filter_dml``, ``routing.route`` or ``validate_split``: it writes its own
+DML filter, per-route topic filter and DLQ split as columns on one
+annotated frame, so the batch oracle checks do not exercise those three.
 """
 
 from __future__ import annotations

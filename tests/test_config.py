@@ -58,9 +58,13 @@ def test_parse_go_durations(raw, ms):
     assert parse_duration_ms(raw) == ms
 
 
-def test_parse_duration_rejects_garbage():
+@pytest.mark.parametrize(
+    "raw", ["fast", "²s", float("nan")], ids=["fast", "superscript_two", "nan"]
+)
+def test_parse_duration_rejects_garbage(raw):
+    # "²" passes str.isdigit() but int() rejects it; round(nan) raises
     with pytest.raises(ConfigError):
-        parse_duration_ms("fast")
+        parse_duration_ms(raw)
 
 
 # -- validation parity (config.go) ------------------------------------------

@@ -4,6 +4,9 @@ loudly rather than fake silently."""
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -358,6 +361,44 @@ def test_persisted_releases_its_frame_when_the_body_raises(spark):
     assert not (created & _cached_rdd_ids(spark))
 
 
+def _calls(node, attr):
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == attr
+    )
+
+
+def _names(node):
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            yield n.id
+        elif isinstance(n, ast.Attribute):
+            yield n.attr
+
+
+def _package_modules():
+    """(path relative to the package, parsed module, its top-level
+    functions and methods) for every module but caching.py."""
+    import psql_streamer_spark
+
+    funcs = (ast.FunctionDef, ast.AsyncFunctionDef)
+    root = Path(psql_streamer_spark.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "caching.py":
+            continue
+        tree = ast.parse(path.read_text(), filename=str(path))
+        units = [n for n in tree.body if isinstance(n, funcs)] + [
+            m
+            for c in tree.body
+            if isinstance(c, ast.ClassDef)
+            for m in c.body
+            if isinstance(m, funcs)
+        ]
+        yield rel, tree, units
+
+
 def test_one_cache_lifetime_rule():
     """psql_streamer_spark/caching.py decides when every cached frame is
     released: only it calls ``.unpersist(``, and a top-level function or
@@ -366,55 +407,55 @@ def test_one_cache_lifetime_rule():
     index frames go through ``INDEX_CACHE``, whose builders return lazy
     plans. ``localCheckpoint`` is out of scope (Spark's ContextCleaner
     releases it)."""
-    import ast
-    from pathlib import Path
-
-    import psql_streamer_spark
-
     # both callers release `g` through persist_for
     allowed = {("operators/dedup.py", "_capped_pair_counts")}
 
-    def calls(node, attr):
-        return (
-            isinstance(node, ast.Call)
-            and isinstance(node.func, ast.Attribute)
-            and node.func.attr == attr
-        )
-
-    def names(node):
-        for n in ast.walk(node):
-            if isinstance(n, ast.Name):
-                yield n.id
-            elif isinstance(n, ast.Attribute):
-                yield n.attr
-
-    funcs = (ast.FunctionDef, ast.AsyncFunctionDef)
-    root = Path(psql_streamer_spark.__file__).parent
     unpersists, unpaired, seen = [], [], set()
-    for path in sorted(root.rglob("*.py")):
-        rel = path.relative_to(root).as_posix()
-        if rel == "caching.py":
-            continue
-        tree = ast.parse(path.read_text(), filename=str(path))
+    for rel, tree, units in _package_modules():
         unpersists += [
-            f"{rel}:{n.lineno}" for n in ast.walk(tree) if calls(n, "unpersist")
-        ]
-        units = [n for n in tree.body if isinstance(n, funcs)] + [
-            m
-            for c in tree.body
-            if isinstance(c, ast.ClassDef)
-            for m in c.body
-            if isinstance(m, funcs)
+            f"{rel}:{n.lineno}" for n in ast.walk(tree) if _calls(n, "unpersist")
         ]
         for fn in units:
-            if not any(calls(n, "persist") for n in ast.walk(fn)):
+            if not any(_calls(n, "persist") for n in ast.walk(fn)):
                 continue
             if (rel, fn.name) in allowed:
                 seen.add((rel, fn.name))
-            elif "persist_for" not in set(names(fn)):
+            elif "persist_for" not in set(_names(fn)):
                 unpaired.append(f"{rel}:{fn.lineno} {fn.name}")
     assert not unpersists, f".unpersist( outside caching.py: {unpersists}"
     assert not unpaired, f".persist() without persist_for: {unpaired}"
+    assert seen == allowed, f"stale allowlist entries: {allowed - seen}"
+
+
+def test_one_warehouse_table_rule():
+    """psql_streamer_spark/caching.py names, builds, reuses and sweeps
+    every derived warehouse table: only it calls ``tableExists(`` or
+    reads the ``spark.sql.warehouse.dir`` conf, and a top-level function
+    or method that calls ``.saveAsTable(`` routes through
+    ``warehouse_table``."""
+    # rewrites a table its caller owns (the fused ingest loop's index)
+    allowed = {("streaming/fused_gate.py", "compact_loop_index")}
+
+    outside, unrouted, seen = [], [], set()
+    for rel, tree, units in _package_modules():
+        outside += [
+            f"{rel}:{n.lineno}"
+            for n in ast.walk(tree)
+            if _calls(n, "tableExists")
+            or (
+                isinstance(n, ast.Constant)
+                and n.value == "spark.sql.warehouse.dir"
+            )
+        ]
+        for fn in units:
+            if not any(_calls(n, "saveAsTable") for n in ast.walk(fn)):
+                continue
+            if (rel, fn.name) in allowed:
+                seen.add((rel, fn.name))
+            elif "warehouse_table" not in set(_names(fn)):
+                unrouted.append(f"{rel}:{fn.lineno} {fn.name}")
+    assert not outside, f"warehouse lookups outside caching.py: {outside}"
+    assert not unrouted, f".saveAsTable( without warehouse_table: {unrouted}"
     assert seen == allowed, f"stale allowlist entries: {allowed - seen}"
 
 

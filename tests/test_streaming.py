@@ -631,50 +631,78 @@ def test_streaming_near_dup_alerts(spark, tmp_path):
     assert got == want
 
 
-def test_band_index_first_use_sweep_removes_only_dead_app_litter(spark):
-    """Per-app band-index names never collide, so without a sweep the
-    warehouse grows one dir per app per dataset forever. First use must
-    remove sibling dirs older than the age gate (dead apps) and keep
-    younger ones (a possibly-live concurrent app)."""
+@pytest.mark.parametrize(
+    "family, module, builder",
+    [
+        ("band_index", "dedup", "band_index_table"),
+        (
+            "lineitem_by_shipmonth",
+            "tpch_suite",
+            "lineitem_shipmonth_partitioned_table",
+        ),
+        (
+            "orders_by_ordermonth",
+            "tpch_suite",
+            "orders_ordermonth_partitioned_table",
+        ),
+        ("lineitem_clustered", "tpch_suite", "lineitem_clustered_table"),
+        ("lineitem_zorder", "tpch_suite", "lineitem_zorder_table"),
+        ("events_by_date", "event_time", "events_date_partitioned_table"),
+    ],
+    ids=["band_index", "shipmonth", "ordermonth", "clustered", "zorder", "events"],
+)
+def test_band_index_first_use_sweep_removes_only_dead_app_litter(
+    spark, family, module, builder
+):
+    """Per-app warehouse-table names never collide, so without a sweep
+    the warehouse grows one dir per app per dataset forever. First use
+    must remove the family's dirs older than the age gate (dead apps),
+    under this dataset's tag or any other, and keep younger ones (a
+    possibly-live concurrent app)."""
+    import importlib
     import os
     import re
     import shutil
     import time as _time
     from urllib.parse import urlparse
 
-    from psql_streamer_spark.operators.dedup import (
-        BAND_INDEX_SWEEP_AGE_SEC,
-        band_index_table,
-    )
+    from psql_streamer_spark.caching import WAREHOUSE_SWEEP_AGE_SEC
     from tests.conftest import SF_SMALL
 
+    build = getattr(
+        importlib.import_module(f"psql_streamer_spark.operators.{module}"),
+        builder,
+    )
     warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
     os.makedirs(warehouse, exist_ok=True)
     tag = re.sub(r"\W+", "_", SF_SMALL.strip("/"))
-    dead = os.path.join(warehouse, f"band_index_{tag}_local_0000_dead")
-    young = os.path.join(warehouse, f"band_index_{tag}_local_0000_live")
-    os.makedirs(dead, exist_ok=True)
-    os.makedirs(young, exist_ok=True)
-    old = _time.time() - BAND_INDEX_SWEEP_AGE_SEC - 120
+    dead = os.path.join(warehouse, f"{family}_{tag}_local_0000_dead")
+    other = os.path.join(warehouse, f"{family}_othertag_local_0000_dead")
+    young = os.path.join(warehouse, f"{family}_{tag}_local_0000_live")
+    for d in (dead, other, young):
+        os.makedirs(d, exist_ok=True)
+    old = _time.time() - WAREHOUSE_SWEEP_AGE_SEC - 120
     os.utime(dead, (old, old))
+    os.utime(other, (old, old))
 
     # force the build (=sweep) path even if an earlier test already built
-    # this app's index in the shared session
+    # this app's table in the shared session
     app = re.sub(r"\W+", "_", spark.sparkContext.applicationId)
-    mine = f"band_index_{tag}_{app}"
+    mine = f"{family}_{tag}_{app}"
     spark.sql(f"DROP TABLE IF EXISTS {mine}")
     try:
-        table = band_index_table(spark, SF_SMALL)
-        assert table == mine
+        assert build(spark, SF_SMALL) == mine
         assert not os.path.exists(dead), "dead app litter must be swept"
+        assert not os.path.exists(other), "other datasets' litter swept too"
         assert os.path.exists(young), "young sibling (possibly live) kept"
     finally:
-        shutil.rmtree(young, ignore_errors=True)
+        for d in (dead, other, young):
+            shutil.rmtree(d, ignore_errors=True)
 
 
 def test_app_scoped_fast_path_refreshes_liveness(spark):
     """Every batch consumer resolves its index through
-    app_scoped_bucketed_table's tableExists fast path — that resolution
+    warehouse_table's tableExists fast path — that resolution
     must refresh the dir mtime, or a >sweep-gate-lived batch session
     becomes sweepable by a newly starting app (the review-found hole the
     r14 liveness protocol closes)."""
@@ -682,16 +710,14 @@ def test_app_scoped_fast_path_refreshes_liveness(spark):
     import time as _time
     from urllib.parse import urlparse
 
-    from psql_streamer_spark.operators.dedup import (
-        BAND_INDEX_SWEEP_AGE_SEC,
-        band_index_table,
-    )
+    from psql_streamer_spark.caching import WAREHOUSE_SWEEP_AGE_SEC
+    from psql_streamer_spark.operators.dedup import band_index_table
     from tests.conftest import SF_SMALL
 
     table = band_index_table(spark, SF_SMALL)  # build (or reuse)
     warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
     d = os.path.join(warehouse, table)
-    old = _time.time() - BAND_INDEX_SWEEP_AGE_SEC - 120
+    old = _time.time() - WAREHOUSE_SWEEP_AGE_SEC - 120
     os.utime(d, (old, old))
     assert band_index_table(spark, SF_SMALL) == table  # fast path
     assert _time.time() - os.path.getmtime(d) < 60, (
@@ -713,10 +739,10 @@ def test_liveness_touch_refreshes_model_sibling(spark, tmp_path):
     import time as _time
     from urllib.parse import urlparse
 
-    from psql_streamer_spark.operators.dedup import (
-        BAND_INDEX_SWEEP_AGE_SEC,
-        app_scoped_bucketed_table,
+    from psql_streamer_spark.caching import (
+        WAREHOUSE_SWEEP_AGE_SEC,
         touch_app_table_liveness,
+        warehouse_table,
     )
 
     warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
@@ -726,7 +752,7 @@ def test_liveness_touch_refreshes_model_sibling(spark, tmp_path):
     model = d + "__model"
     os.makedirs(d, exist_ok=True)
     os.makedirs(model, exist_ok=True)
-    old = _time.time() - BAND_INDEX_SWEEP_AGE_SEC - 120
+    old = _time.time() - WAREHOUSE_SWEEP_AGE_SEC - 120
     try:
         os.utime(d, (old, old))
         os.utime(model, (old, old))
@@ -757,7 +783,7 @@ def test_liveness_touch_refreshes_model_sibling(spark, tmp_path):
             spark.range(1).write.saveAsTable(name)
 
         try:
-            app_scoped_bucketed_table(spark, "livenessmodel_test", _build)
+            warehouse_table(spark, "livenessmodel", "test", _build)
             assert os.path.isdir(live_model), (
                 "sweep must not reap an aged __model whose base is live"
             )
