@@ -110,6 +110,21 @@ def parse_duration_ms(v: Any) -> int:
 
 
 # -- sink factory (sink/sink.go:24-40: kafka / stub_log / stub_discard) -----
+def _int_option(name: str, conf: dict, key: str) -> int:
+    try:
+        return int(conf[key])
+    except (TypeError, ValueError):
+        raise ConfigError(
+            f"Unable to init sink '{name}': {key} should be an integer, got {conf[key]!r}"
+        ) from None
+
+
+def _sink_path(name: str, conf: dict) -> str:
+    if not conf.get("path"):
+        raise ConfigError(f"Unable to init sink '{name}': path not specified")
+    return conf["path"]
+
+
 def _kafka_sink(name: str, conf: dict) -> Sink:
     hosts = conf.get("hosts") or []
     if not hosts:
@@ -137,10 +152,10 @@ def _kafka_sink(name: str, conf: dict) -> Sink:
     if "batchTimeout" in conf:  # linger
         producer_conf["kafka.linger.ms"] = str(parse_duration_ms(conf["batchTimeout"]))
     if "requiredAcks" in conf:
-        acks = int(conf["requiredAcks"])
+        acks = _int_option(name, conf, "requiredAcks")
         producer_conf["kafka.acks"] = "all" if acks == -1 else str(acks)
     if "maxAttempts" in conf:
-        producer_conf["kafka.retries"] = str(int(conf["maxAttempts"]))
+        producer_conf["kafka.retries"] = str(_int_option(name, conf, "maxAttempts"))
     return KafkaSink(
         bootstrap_servers=",".join(hosts), name=name, producer_conf=producer_conf
     )
@@ -152,11 +167,11 @@ _SINK_FACTORY: dict[str, Callable[[str, dict], Sink]] = {
     "stub_discard": lambda name, conf: NoopSink(name),
     # engine extensions: durable sinks (not in the reference)
     "parquet": lambda name, conf: ParquetSink(
-        conf["path"], name, partition_cols=conf.get("partitionBy")
+        _sink_path(name, conf), name, partition_cols=conf.get("partitionBy")
     ),
-    "parquet_epoch": lambda name, conf: EpochParquetSink(conf["path"], name),
+    "parquet_epoch": lambda name, conf: EpochParquetSink(_sink_path(name, conf), name),
     "snapshot": lambda name, conf: SnapshotSink(
-        conf["path"], conf.get("keyField", "a"), name
+        _sink_path(name, conf), conf.get("keyField", "a"), name
     ),
 }
 
@@ -247,9 +262,16 @@ def compile_config(spark: SparkSession, conf: dict | str | Path) -> Engine:
     if not isinstance(conf, dict):
         conf = load_toml(conf)
 
-    ticker = float(conf.get("tickerInterval", 0))
-    if ticker < 0:
-        raise ConfigError("tickerInterval should be >= 0")  # config.go:46-48
+    try:
+        ticker = float(conf.get("tickerInterval", 0))
+    except (TypeError, ValueError):
+        ticker = math.nan
+    # NaN fails every comparison, so `< 0` alone let it through and it
+    # silently turned the ticker off
+    if not (math.isfinite(ticker) and ticker >= 0):
+        raise ConfigError(  # config.go:46-48
+            f"tickerInterval should be >= 0, got {conf.get('tickerInterval')!r}"
+        )
 
     # reference requires http (config.go:51-53); we default it off-by-port-0
     http_listen = conf.get("http")

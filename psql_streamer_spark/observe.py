@@ -28,6 +28,12 @@ ERROR_HEALTH_THRESHOLD = 30  # consecutive errors before unhealthy (F6)
 # sink/prom/prometheus.go:10-43), at micro-batch granularity
 DURATION_BUCKETS_MS = (5, 10, 25, 50, 100, 250, 500, 1000, 2500, 5000, 10000)
 
+# the parts of an epoch's triggerExecution that StreamingQueryProgress
+# reports in durationMs, exported as per-phase sums and counts
+EPOCH_PHASES = (
+    "latestOffset", "getBatch", "queryPlanning", "addBatch", "walCommit", "commitOffsets",
+)
+
 
 @dataclass
 class QueryStats:
@@ -41,6 +47,8 @@ class QueryStats:
     duration_bucket_counts: list = field(
         default_factory=lambda: [0] * (len(DURATION_BUCKETS_MS) + 1)
     )
+    phase_sum_ms: dict = field(default_factory=dict)
+    phase_count: dict = field(default_factory=dict)
 
     def observe_duration(self, ms: float) -> None:
         self.last_batch_duration_ms = ms
@@ -49,6 +57,14 @@ class QueryStats:
             if ms <= le:
                 self.duration_bucket_counts[i] += 1
         self.duration_bucket_counts[-1] += 1  # +Inf
+
+    def observe_phases(self, duration_ms: dict) -> None:
+        """Add the epoch phases present in one progress's durationMs (an
+        epoch that finds no new data reports only some of them)."""
+        for ph in EPOCH_PHASES:
+            if ph in duration_ms:
+                self.phase_sum_ms[ph] = self.phase_sum_ms.get(ph, 0.0) + float(duration_ms[ph])
+                self.phase_count[ph] = self.phase_count.get(ph, 0) + 1
 
     @property
     def healthy(self) -> bool:
@@ -86,6 +102,7 @@ class EngineListener(StreamingQueryListener):
             st.input_rows += int(p.numInputRows)
             st.consecutive_errors = 0
             st.observe_duration(float(p.durationMs.get("triggerExecution", 0)))
+            st.observe_phases(p.durationMs)
         log.info("progress %s", st.as_line())
 
     def onQueryTerminated(self, event):
@@ -116,8 +133,9 @@ class EngineListener(StreamingQueryListener):
         return True, "\n".join(s.as_line() for s in sts) or "no queries"
 
     def metrics_text(self) -> str:
-        """Prometheus exposition format (O2): counters, gauges, and a
-        per-query batch-duration histogram (_bucket/_sum/_count)."""
+        """Prometheus exposition format (O2): counters, gauges, a
+        per-query batch-duration histogram (_bucket/_sum/_count), and the
+        per-query, per-phase epoch durations (_sum/_count)."""
         lines = []
         for s in self.stats().values():
             labels = f'{{query="{s.name}"}}'
@@ -137,6 +155,15 @@ class EngineListener(StreamingQueryListener):
                 f"engine_batch_duration_ms_sum{labels} {s.duration_sum_ms}",
                 f"engine_batch_duration_ms_count{labels} {s.duration_bucket_counts[-1]}",
             ]
+            # fixed phase order, and no iteration over a dict the
+            # listener thread may be growing
+            for ph in EPOCH_PHASES:
+                if ph in s.phase_count:
+                    phase = f'{{query="{s.name}",phase="{ph}"}}'
+                    lines += [
+                        f"engine_epoch_phase_ms_sum{phase} {s.phase_sum_ms[ph]}",
+                        f"engine_epoch_phase_ms_count{phase} {s.phase_count[ph]}",
+                    ]
         return "\n".join(lines) + ("\n" if lines else "")
 
 

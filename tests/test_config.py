@@ -122,6 +122,43 @@ def test_negative_ticker_is_fatal(spark, tmp_path):
         compile_config(spark, conf)
 
 
+_KAFKA = {"type": "kafka", "hosts": ["b1:9092"], "topicFallback": "fb"}
+
+
+@pytest.mark.parametrize(
+    "edit,match",
+    [
+        (lambda c: c["sink"].update(k={**_KAFKA, "requiredAcks": "all"}),
+         "Unable to init sink 'k': requiredAcks"),
+        (lambda c: c["sink"].update(k={**_KAFKA, "requiredAcks": None}),
+         "Unable to init sink 'k': requiredAcks"),
+        (lambda c: c["sink"].update(k={**_KAFKA, "maxAttempts": "3x"}),
+         "Unable to init sink 'k': maxAttempts"),
+        (lambda c: c["sink"].update(k={"type": "parquet"}),
+         "Unable to init sink 'k': path"),
+        (lambda c: c["sink"].update(k={"type": "parquet_epoch"}),
+         "Unable to init sink 'k': path"),
+        (lambda c: c["sink"].update(k={"type": "snapshot"}),
+         "Unable to init sink 'k': path"),
+        (lambda c: c.update(tickerInterval="abc"), "tickerInterval"),
+        (lambda c: c.update(tickerInterval=float("nan")), "tickerInterval"),
+        (lambda c: c.update(tickerInterval=float("inf")), "tickerInterval"),
+    ],
+    ids=["acks_all", "acks_none", "attempts_3x", "parquet_no_path",
+         "parquet_epoch_no_path", "snapshot_no_path", "ticker_abc",
+         "ticker_nan", "ticker_inf"],
+)
+def test_bad_values_raise_config_error(spark, tmp_path, edit, match):
+    """A bad value is a ConfigError naming what it was for, never a raw
+    ValueError, TypeError or KeyError from the conversion."""
+    conf = _base_conf(tmp_path)
+    edit(conf)
+    for sc in conf["sink"].values():
+        sc.setdefault("sources", ["pg1"])
+    with pytest.raises(ConfigError, match=match):
+        compile_config(spark, conf)
+
+
 def test_file_source_requires_checkpoint_root(spark, tmp_path):
     # sources that need Bolt complain if boltdb is nil (config.go:55-61)
     conf = _base_conf(tmp_path)

@@ -1,0 +1,113 @@
+"""The fork-free local file system that `session.get_spark` installs on a
+local session (`psql_streamer_spark/jvm/NoForkLocalFs.java`), checked
+against stock Hadoop: the classes the `file` scheme resolves to, the
+modes files and directories get, link probes, Hive's rename rule and the
+checksum check on read."""
+
+from __future__ import annotations
+
+import os
+import stat
+
+import pytest
+
+from psql_streamer_spark.session import LOCAL_ABSTRACT_FS, LOCAL_FS, _with_local_fs
+
+
+@pytest.fixture()
+def hadoop(spark):
+    return spark._jvm.org.apache.hadoop
+
+
+@pytest.fixture()
+def local_fs(spark, hadoop):
+    return hadoop.fs.FileSystem.getLocal(spark._jsc.hadoopConfiguration())
+
+
+def _mode(path) -> int:
+    return stat.S_IMODE(os.lstat(path).st_mode)
+
+
+def test_file_scheme_resolves_to_the_shim(spark, hadoop, local_fs):
+    conf = spark._jsc.hadoopConfiguration()
+    assert local_fs.getClass().getName() == LOCAL_FS
+    fc = hadoop.fs.FileContext.getLocalFSFileContext(conf)
+    assert fc.getDefaultFileSystem().getClass().getName() == LOCAL_ABSTRACT_FS
+
+
+def test_conf_merge_appends_the_jar_and_keeps_a_callers_scheme(spark):
+    out = _with_local_fs({
+        "spark.driver.extraClassPath": "/opt/x.jar",
+        "spark.hadoop.fs.file.impl": "org.apache.hadoop.fs.LocalFileSystem",
+    })
+    first, jar = out["spark.driver.extraClassPath"].split(os.pathsep)
+    assert first == "/opt/x.jar" and jar.endswith(".jar") and os.path.isfile(jar)
+    assert out["spark.hadoop.fs.file.impl"] == "org.apache.hadoop.fs.LocalFileSystem"
+    assert out["spark.hadoop.fs.AbstractFileSystem.file.impl"] == LOCAL_ABSTRACT_FS
+
+
+def test_written_files_and_dirs_keep_their_modes(spark, tmp_path):
+    out = tmp_path / "out"
+    spark.range(20).selectExpr("id", "id % 3 AS k").write.partitionBy("k").parquet(str(out))
+    dirs, files = [str(out)], []
+    for root, ds, fs in os.walk(out):
+        dirs += [os.path.join(root, d) for d in ds]
+        files += [os.path.join(root, f) for f in fs]
+    assert len(dirs) == 4 and any(f.endswith(".crc") for f in files)
+    assert {_mode(d) for d in dirs} == {0o755}
+    assert {_mode(f) for f in files} == {0o644}
+
+
+def test_set_permission_applies_plain_and_sticky_modes(hadoop, local_fs, tmp_path):
+    f, d = tmp_path / "f", tmp_path / "d"
+    f.write_text("x")
+    d.mkdir()
+    FsPermission = hadoop.fs.permission.FsPermission
+    local_fs.setPermission(hadoop.fs.Path(str(f)), FsPermission("640"))
+    local_fs.setPermission(hadoop.fs.Path(str(d)), FsPermission("1777"))
+    assert _mode(f) == 0o640
+    assert _mode(d) == 0o1777
+
+
+def test_link_status_agrees_with_stock(spark, hadoop, local_fs, tmp_path):
+    stock = hadoop.fs.RawLocalFileSystem()
+    stock.initialize(spark._jvm.java.net.URI("file:///"), spark._jsc.hadoopConfiguration())
+    shim = local_fs.getRaw()
+    target = tmp_path / "target"
+    target.write_text("payload")
+    (tmp_path / "link").symlink_to(target)
+
+    def status(fs, path):
+        try:
+            st = fs.getFileLinkStatus(hadoop.fs.Path(path))
+        except Exception as e:  # py4j wraps the Java exception
+            assert "java.io.FileNotFoundException" in str(e)
+            return "missing"
+        return (str(st.getPath()), st.isSymlink(), st.isFile(), st.isDirectory(),
+                st.getLen(), str(st.getSymlink()) if st.isSymlink() else None)
+
+    for name in ("link", "target", "missing"):
+        for path in (str(tmp_path / name), f"file:{tmp_path / name}"):
+            assert status(shim, path) == status(stock, path), path
+    assert status(shim, str(tmp_path / "link"))[1] is True
+    assert status(shim, str(tmp_path / "missing")) == "missing"
+
+
+def test_rename_onto_an_existing_file_is_refused(hadoop, local_fs, tmp_path):
+    src, dst = tmp_path / "src", tmp_path / "dst"
+    src.write_text("new")
+    dst.write_text("old")
+    assert local_fs.rename(hadoop.fs.Path(str(src)), hadoop.fs.Path(str(dst))) is False
+    assert src.read_text() == "new" and dst.read_text() == "old"
+
+
+def test_flipped_byte_fails_the_checksum_on_read(spark, tmp_path):
+    out = tmp_path / "out"
+    spark.range(5000).selectExpr("id", "cast(id * 7 AS string) AS s").coalesce(1) \
+        .write.parquet(str(out))
+    (data,) = [p for p in out.iterdir() if p.name.endswith(".parquet")]
+    raw = bytearray(data.read_bytes())
+    raw[len(raw) // 2] ^= 0xFF
+    data.write_bytes(bytes(raw))
+    with pytest.raises(Exception, match="ChecksumException"):
+        spark.read.parquet(str(out)).collect()

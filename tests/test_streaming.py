@@ -2061,3 +2061,101 @@ def test_only_two_places_build_a_stream():
         ("pipeline.py", "CdcPipeline.start"),
         ("sinks.py", "run_gate_stream"),
     ]
+
+
+def _spawned_commands(spark, tmp_path, body) -> list[str]:
+    """Command lines of every process the JVM started while ``body()`` ran,
+    from a Java Flight Recorder recording of ``jdk.ProcessStart``."""
+    jvm = spark._jvm
+    rec = jvm.jdk.jfr.Recording()
+    try:
+        rec.enable("jdk.ProcessStart")
+        rec.start()
+        body()
+        rec.stop()
+        dump = jvm.java.io.File(str(tmp_path / "spawns.jfr")).toPath()
+        rec.dump(dump)
+    finally:
+        rec.close()
+    events = jvm.jdk.jfr.consumer.RecordingFile.readAllEvents(dump)
+    return [str(e.getString("command")) for e in events]
+
+
+def test_cdc_epochs_spawn_no_chmod_or_readlink(spark, dirs):
+    """The local file system applies modes and answers link probes without
+    forking (session.py, jvm/NoForkLocalFs.java). Stock Hadoop without its
+    native library spawns `chmod` for every file and directory a sink or
+    the checkpoint creates and `readlink` on every checkpoint rename: 156
+    of them over these two epochs (two parquet routes, one partitioned by
+    table, plus a parquet DLQ)."""
+    from psql_streamer_spark.streaming.pipeline import SinkRoute
+    from psql_streamer_spark.streaming.sinks import EpochParquetSink
+
+    src, ckpt, tmp = dirs
+    tables = [f"t{i}" for i in range(5)]
+    for f in range(2):
+        lines = [_event(f * 100 + i, table=tables[i % 5]) for i in range(99)]
+        _write_batch(src, f"b{f}.json", lines + ["not json"])
+    pipe = CdcPipeline(
+        spark, str(src), ckpt,
+        routes=[
+            SinkRoute(EpochParquetSink(str(tmp / "primary"), name="primary"),
+                      {t: f"topic_{t}" for t in tables}),
+            SinkRoute(ParquetSink(str(tmp / "by_table"), name="by_table",
+                                  partition_cols=["table"]),
+                      {"t0": "hot"}, "cold"),
+        ],
+        dlq_sink=EpochParquetSink(str(tmp / "dlq"), name="dlq"),
+        max_files_per_trigger=1,
+    )
+    commands = _spawned_commands(spark, tmp, pipe.run_to_completion)
+
+    assert pipe.stats.events_in == 200 and pipe.stats.events_dlq == 2
+    assert spark.read.parquet(str(tmp / "by_table")).count() == 198
+    forks = [c for c in commands if c.split(" ")[0].rsplit("/", 1)[-1]
+             in ("chmod", "readlink")]
+    assert not forks, f"{len(forks)} chmod/readlink spawns, e.g. {forks[:3]}"
+
+
+def test_metrics_carry_epoch_phases(spark, dirs):
+    """/metrics splits each query's epochs into the durationMs phases of
+    StreamingQueryProgress, as a per-phase sum and count."""
+    import time
+    import urllib.request
+
+    from psql_streamer_spark.observe import EPOCH_PHASES, EngineListener, StatusServer
+
+    src, ckpt, _ = dirs
+    _write_batch(src, "b1.json", [_event(i) for i in range(3)])
+    listener = EngineListener()
+    spark.streams.addListener(listener)
+    try:
+        CdcPipeline(
+            spark, str(src), ckpt, sinks=[NoopSink()], topic_mapping={"test": "t"}
+        ).run_to_completion()
+        # progress events reach a Python listener asynchronously
+        def seen() -> bool:
+            stats = listener.stats().values()
+            return bool(stats) and all(
+                ph in st.phase_count for st in stats for ph in EPOCH_PHASES
+            )
+
+        deadline = time.time() + 60
+        while time.time() < deadline and not seen():
+            time.sleep(0.2)
+        server = StatusServer(listener)
+        port = server.start()
+        try:
+            metrics = urllib.request.urlopen(f"http://127.0.0.1:{port}/metrics").read().decode()
+        finally:
+            server.stop()
+    finally:
+        spark.streams.removeListener(listener)
+
+    (name,) = listener.stats()
+    for ph in EPOCH_PHASES:
+        labels = f'{{query="{name}",phase="{ph}"}}'
+        assert f"engine_epoch_phase_ms_sum{labels} " in metrics, ph
+        count = [ln for ln in metrics.splitlines()
+                 if ln.startswith(f"engine_epoch_phase_ms_count{labels} ")]
+        assert count and int(count[0].split()[-1]) >= 1, ph
