@@ -91,7 +91,7 @@ def _run_config(
     spark, work: str, name: str, n: int, events_per_file: int,
     files_per_trigger: int, sink_factory=None,
 ) -> dict:
-    from psql_streamer_spark.streaming.pipeline import CdcPipeline
+    from psql_streamer_spark.streaming.pipeline import CdcPipeline, SinkRoute
     from psql_streamer_spark.streaming.sinks import EpochParquetSink
 
     src = os.path.join(work, name, "src")
@@ -114,9 +114,13 @@ def _run_config(
         spark,
         source_path=src,
         checkpoint_dir=ckpt,
-        sinks=[sink_factory(out) if sink_factory else EpochParquetSink(out)],
-        topic_mapping=dict(TOPIC_MAPPING),
-        topic_fallback="topic_other",
+        routes=[
+            SinkRoute(
+                sink_factory(out) if sink_factory else EpochParquetSink(out),
+                dict(TOPIC_MAPPING),
+                "topic_other",
+            ),
+        ],
         max_files_per_trigger=files_per_trigger,
     )
     t0 = time.time()

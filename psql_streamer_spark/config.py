@@ -119,6 +119,18 @@ def _int_option(name: str, conf: dict, key: str) -> int:
         ) from None
 
 
+def _str_list(name: str, conf: dict, key: str) -> list[str]:
+    """A list-of-strings option, empty when absent. A bare string is
+    refused: iterating it would split it into characters."""
+    v = conf.get(key) or []
+    if not isinstance(v, list) or not all(isinstance(x, str) for x in v):
+        raise ConfigError(
+            f"Unable to init sink '{name}': {key} should be a list of strings,"
+            f" got {v!r}"
+        )
+    return v
+
+
 def _sink_path(name: str, conf: dict) -> str:
     if not conf.get("path"):
         raise ConfigError(f"Unable to init sink '{name}': path not specified")
@@ -126,7 +138,7 @@ def _sink_path(name: str, conf: dict) -> str:
 
 
 def _kafka_sink(name: str, conf: dict) -> Sink:
-    hosts = conf.get("hosts") or []
+    hosts = _str_list(name, conf, "hosts")
     if not hosts:
         raise ConfigError(f"sink '{name}': hosts not specified")
     # fail fast, not discard-everything-at-runtime (kafka.go:119-130): with
@@ -167,7 +179,9 @@ _SINK_FACTORY: dict[str, Callable[[str, dict], Sink]] = {
     "stub_discard": lambda name, conf: NoopSink(name),
     # engine extensions: durable sinks (not in the reference)
     "parquet": lambda name, conf: ParquetSink(
-        _sink_path(name, conf), name, partition_cols=conf.get("partitionBy")
+        _sink_path(name, conf),
+        name,
+        partition_cols=_str_list(name, conf, "partitionBy"),
     ),
     "parquet_epoch": lambda name, conf: EpochParquetSink(_sink_path(name, conf), name),
     "snapshot": lambda name, conf: SnapshotSink(
@@ -275,6 +289,13 @@ def compile_config(spark: SparkSession, conf: dict | str | Path) -> Engine:
 
     # reference requires http (config.go:51-53); we default it off-by-port-0
     http_listen = conf.get("http")
+    if http_listen:
+        http_host, _, http_port = str(http_listen).rpartition(":")
+        port_ok = http_port.isascii() and http_port.isdigit()
+        if not (port_ok and int(http_port) <= 65535):
+            raise ConfigError(
+                f"http should be ip:port with a port in 0-65535, got {http_listen!r}"
+            )
     ckpt_root = conf.get("boltdb")  # optional, needed by file sources (:55-61)
 
     src_confs: dict[str, dict] = dict(conf.get("source") or {})
@@ -295,7 +316,7 @@ def compile_config(spark: SparkSession, conf: dict | str | Path) -> Engine:
     # subscription graph: source name → [sink objs] (config.go:98-110)
     subs: dict[str, list[str]] = {n: [] for n in src_confs}
     for name, sc in sink_confs.items():
-        srcs = sc.get("sources") or []
+        srcs = _str_list(name, sc, "sources")
         if not srcs:
             raise ConfigError(f"Sink '{name}': no sources defined")  # :98-100
         for sn in srcs:
@@ -377,18 +398,13 @@ def compile_config(spark: SparkSession, conf: dict | str | Path) -> Engine:
                 )
             extra = {"decoder": dialects[sc["dialect"]]}
         if stype == "file_pgoutput":
-            from psql_streamer_spark.sources.pgoutput_cdc import (
-                FRAME_SCHEMA,
-                PgoutputStreamDecoder,
-            )
+            from psql_streamer_spark.sources.pgoutput_cdc import PgoutputStreamDecoder
 
             extra = {
                 "decoder": PgoutputStreamDecoder(
                     host=sc.get("host", "unknown"),
                     database=sc.get("database", "unknown"),
                 ),
-                "source_format": "parquet",
-                "source_schema": FRAME_SCHEMA,
             }
         # mux knob validation parity (mux/mux.go via Test_New): the
         # reference rejects non-positive batchSize / batchFlushInterval at
@@ -439,8 +455,9 @@ def compile_config(spark: SparkSession, conf: dict | str | Path) -> Engine:
     listener = EngineListener()
     server = None
     if http_listen:
-        host, _, port = str(http_listen).rpartition(":")
-        server = StatusServer(listener, host=host or "127.0.0.1", port=int(port))
+        server = StatusServer(
+            listener, host=http_host or "127.0.0.1", port=int(http_port)
+        )
     engine = Engine(
         spark,
         pipelines=pipelines,
@@ -450,16 +467,5 @@ def compile_config(spark: SparkSession, conf: dict | str | Path) -> Engine:
         ticker_interval_s=ticker,
     )
     if server is not None:
-        server.extra_stats = _EngineStatsProxy(engine)  # live view for /stats
+        server.stats_fn = engine.stats  # live view for /stats
     return engine
-
-
-class _EngineStatsProxy(dict):
-    """Dict-shaped live view of engine stats for StatusServer.extra_stats."""
-
-    def __init__(self, engine: Engine):
-        super().__init__()
-        self._engine = engine
-
-    def items(self):
-        return self._engine.stats().items()

@@ -14,6 +14,7 @@ from __future__ import annotations
 import json
 import logging
 import threading
+from collections.abc import Callable
 from dataclasses import dataclass, field
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
@@ -212,7 +213,7 @@ class StatusServer:
     listener: EngineListener
     host: str = "127.0.0.1"
     port: int = 0  # 0 = ephemeral
-    extra_stats: dict = field(default_factory=dict)
+    stats_fn: Callable[[], dict] = dict  # extra /stats entries, read per request
     debug: bool = False
     _httpd: ThreadingHTTPServer | None = None
     _thread: threading.Thread | None = None
@@ -227,7 +228,6 @@ class StatusServer:
 
     def start(self) -> int:
         listener = self.listener
-        extra = self.extra_stats
         server = self
 
         class Handler(BaseHTTPRequestHandler):
@@ -249,7 +249,7 @@ class StatusServer:
                     body = {
                         name: st.as_line() for name, st in listener.stats().items()
                     }
-                    body.update({k: str(v) for k, v in extra.items()})
+                    body.update({k: str(v) for k, v in server.stats_fn().items()})
                     self._send(200, json.dumps(body) + "\n", "application/json")
                 elif self.path == "/metrics":
                     self._send(200, listener.metrics_text())

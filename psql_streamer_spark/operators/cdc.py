@@ -5,12 +5,9 @@ The driver's synthetic `events` table stands in for the replication stream
 (md5-based uuid instead of uuid() so the DuckDB oracle can reproduce it),
 then exercise each hot-path transform: DML filter (T1), envelope (T3),
 routing with fallback/discard (R1), key-gen (T7), serialization (T6),
-validation/DLQ (T5). The streaming epoch body
-(``CdcPipeline._process_batch``) shares ``decode_cdc_json``,
-``is_valid_event``, ``topic_expr``, ``with_default_key`` and
-``serialize_passthrough`` with these queries; it writes its own DML
-filter, per-route filter and DLQ split in place of ``filter_dml``,
-``route`` and ``validate_split``.
+validation/DLQ (T5). The streaming epoch
+(``CdcPipeline._process_batch``) runs the same functions these queries
+check.
 """
 
 from __future__ import annotations

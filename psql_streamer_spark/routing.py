@@ -20,13 +20,14 @@ def topic_expr(
     table_col: str = "table",
 ) -> Column:
     """Build the routing expression: mapped topic, else fallback, else NULL
-    (NULL = discard, counted by the caller)."""
+    (NULL = discard, counted by the caller). Always string-typed, even with
+    no mapping and no fallback."""
     expr: Column | None = None
     for table, topic in mapping.items():
         cond = F.col(table_col) == table
         expr = F.when(cond, topic) if expr is None else expr.when(cond, topic)
     if expr is None:
-        return F.lit(fallback)
+        return F.lit(fallback).cast("string")  # a typed NULL when no fallback
     return expr.otherwise(F.lit(fallback))  # lit(None) when no fallback
 
 

@@ -356,7 +356,13 @@ class PgoutputStreamDecoder:
     (tiny, usually empty after the first batch) + the Arrow-batched parse
     of the batch itself. The cache is driver-held metadata, bounded by
     table count x schema versions.
+
+    The frames are parquet files of FRAME_SCHEMA rows, so the decoder
+    carries that reader shape for ``CdcPipeline.start``.
     """
+
+    source_format = "parquet"
+    source_schema = FRAME_SCHEMA
 
     def __init__(
         self,

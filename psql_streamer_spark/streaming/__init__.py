@@ -1,4 +1,4 @@
-from psql_streamer_spark.streaming.pipeline import CdcPipeline
+from psql_streamer_spark.streaming.pipeline import CdcPipeline, SinkRoute
 from psql_streamer_spark.streaming.sinks import (
     KafkaSink,
     MemorySink,
@@ -20,6 +20,7 @@ __all__ = [
     "NoopSink",
     "ParquetSink",
     "Sink",
+    "SinkRoute",
     "dedup_events_within_watermark",
     "session_window_stats",
     "sessionize_with_state",

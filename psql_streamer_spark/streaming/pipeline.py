@@ -31,13 +31,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from psql_streamer_spark.caching import persisted
-from psql_streamer_spark.routing import topic_expr
-from psql_streamer_spark.schema import ACTIONS
+from psql_streamer_spark.routing import route, topic_expr
 from psql_streamer_spark.streaming.sinks import Sink
 from psql_streamer_spark.transforms import (
     decode_cdc_json,
+    filter_dml,
+    is_dml_event,
     is_valid_event,
     serialize_passthrough,
+    validate_split,
     with_default_key,
 )
 
@@ -107,33 +109,16 @@ class CdcPipeline:
         spark: SparkSession,
         source_path: str,
         checkpoint_dir: str,
-        sinks: list[Sink] | None = None,
-        topic_mapping: dict[str, str] | None = None,
-        topic_fallback: str | None = None,
-        routes: list[SinkRoute] | None = None,
+        routes: list[SinkRoute],
         dlq_sink: Sink | None = None,
-        dml_only: bool = True,
         max_files_per_trigger: int | None = None,
         processing_interval: str | None = None,
         decoder=None,
-        source_format: str = "text",
-        source_schema: str | None = None,
     ):
-        # two spellings: `sinks` + shared mapping (all sinks route alike),
-        # or explicit per-sink `routes` (the reference's per-sink rules)
-        if routes is not None:
-            if sinks:
-                raise ValueError("pass either sinks or routes, not both")
-            if not routes:
-                raise ValueError("at least one sink required (config.go:98-110)")
-            self.routes = list(routes)
-        else:
-            if not sinks:
-                raise ValueError("at least one sink required (config.go:98-110)")
-            self.routes = [
-                SinkRoute(s, dict(topic_mapping or {}), topic_fallback)
-                for s in sinks
-            ]
+        # one route per sink, each with its own rules (kafka.go:116-135)
+        if not routes:
+            raise ValueError("at least one sink required (config.go:98-110)")
+        self.routes = list(routes)
         self.spark = spark
         self.source_path = source_path
         self.checkpoint_dir = checkpoint_dir
@@ -143,12 +128,6 @@ class CdcPipeline:
         # decode_wal2json / decode_debezium for the other dialects a PG CDC
         # feed ships (the reference's `type` switch, source/source.go:23-37)
         self.decoder = decoder if decoder is not None else decode_cdc_json
-        # reader shape: "text" for JSON-lines dialects; "parquet" (+ schema)
-        # for captured binary pgoutput frame files (sources/pgoutput_cdc.
-        # FRAME_SCHEMA with a PgoutputStreamDecoder)
-        self.source_format = source_format
-        self.source_schema = source_schema
-        self.dml_only = dml_only
         self.max_files_per_trigger = max_files_per_trigger
         self.processing_interval = processing_interval
         self.stats = PipelineStats()
@@ -156,61 +135,51 @@ class CdcPipeline:
 
     # -- the per-epoch body (the mux flush) --------------------------------
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        # ONE annotated frame serves every branch and every counter (mux
-        # buffer reuse, B2): validity/DML flags and the routed topic are
-        # columns. The counters ride an `observe` node (CollectMetrics)
-        # computed as a SIDE EFFECT of the first sink write that
-        # materializes the frame — no dedicated stats job per micro-batch.
-        # The cache is released when the epoch exits, failed or not (a
-        # leaked persist per micro-batch is a storage-memory leak on an
-        # always-on stream).
+        # ONE cached decoded frame serves every branch and every counter
+        # (mux buffer reuse, B2); each branch is the batch transform the
+        # oracle checks, applied to that frame. The counters ride an
+        # `observe` node (CollectMetrics) computed as a SIDE EFFECT of the
+        # first sink write that materializes the frame — no dedicated
+        # stats job per micro-batch. The cache is released when the epoch
+        # exits, failed or not (a leaked persist per micro-batch is a
+        # storage-memory leak on an always-on stream).
         from pyspark.sql import Observation
 
         decoded = self.decoder(batch_df)
-        keep = is_valid_event(decoded)
-        if self.dml_only:
-            keep = keep & F.col("action").isin(*ACTIONS)
-        # each route evaluates its OWN topic expression (per-sink rules);
         # `routed`/`discarded` use union semantics: an event counts as
         # routed if ANY route takes it, discarded if none does
-        route_topics = [
-            topic_expr(r.topic_mapping, r.topic_fallback) for r in self.routes
-        ]
-        route_takes = [
-            F.lit(True) if r.passthrough else t.isNotNull()
-            for r, t in zip(self.routes, route_topics)
-        ]
-        any_topic = route_takes[0]
-        for t in route_takes[1:]:
-            any_topic = any_topic | t
-        obs = Observation()
-        annotated = (
-            decoded.withColumn("_valid", is_valid_event(decoded))
-            .withColumn("_keep", keep)
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("n_in"),
-                F.count(F.when(~F.col("_valid"), 1)).alias("n_dlq"),
-                F.count(F.when(F.col("_keep"), 1)).alias("n_valid"),
-                F.count(F.when(F.col("_keep") & any_topic, 1)).alias("n_routed"),
+        any_route = F.lit(False)
+        for r in self.routes:
+            takes = F.lit(True) if r.passthrough else (
+                topic_expr(r.topic_mapping, r.topic_fallback).isNotNull()
             )
+            any_route = any_route | takes
+        ok = is_valid_event(decoded)
+        event = ok & is_dml_event(decoded)
+        obs = Observation()
+        observed = decoded.observe(
+            obs,
+            F.count(F.lit(1)).alias("n_in"),
+            F.count(F.when(~ok, 1)).alias("n_dlq"),
+            F.count(F.when(event, 1)).alias("n_valid"),
+            F.count(F.when(event & any_route, 1)).alias("n_routed"),
         )
-        with persisted(annotated):
+        with persisted(observed):
+            valid, dlq = validate_split(observed)
+            events = filter_dml(valid)
             # fan-out: every sink gets the batch routed by its own mapping;
             # any failure aborts the epoch BEFORE offsets commit
             # (all-or-nothing ACK). The first write materializes the cache
             # and fires the observed counters.
-            for route, topic in zip(self.routes, route_topics):
-                deliverable = (
-                    annotated.filter(F.col("_keep"))
-                    .withColumn("topic", topic.cast("string"))
-                    .drop("_valid", "_keep")
-                )
-                if not route.passthrough:
-                    deliverable = deliverable.filter(F.col("topic").isNotNull())
-                out = serialize_passthrough(with_default_key(deliverable))
+            for r in self.routes:
+                if r.passthrough:
+                    routed = events.withColumn("topic", topic_expr({}))
+                else:
+                    routed = route(events, r.topic_mapping, r.topic_fallback)
                 try:
-                    route.sink.write(out, batch_id)
+                    r.sink.write(
+                        serialize_passthrough(with_default_key(routed)), batch_id
+                    )
                 except Exception:
                     with self.stats._lock:
                         self.stats.sink_errors += 1
@@ -221,10 +190,7 @@ class CdcPipeline:
             # DLQ after the primary fan-out (an epoch retry re-dead-letters
             # either way — at-least-once); skipped entirely on clean batches
             if self.dlq_sink is not None and counts["n_dlq"]:
-                self.dlq_sink.write(
-                    annotated.filter(~F.col("_valid")).drop("_valid", "_keep"),
-                    batch_id,
-                )
+                self.dlq_sink.write(dlq, batch_id)
 
             with self.stats._lock:
                 self.stats.batches += 1
@@ -236,9 +202,15 @@ class CdcPipeline:
 
     # -- lifecycle ---------------------------------------------------------
     def start(self, available_now: bool = False):
-        reader = self.spark.readStream.format(self.source_format)
-        if self.source_schema is not None:
-            reader = reader.schema(self.source_schema)
+        # the reader shape belongs to the wire format: JSON-lines dialects
+        # read text; a decoder of binary frame files (sources/pgoutput_cdc.
+        # PgoutputStreamDecoder) declares its own format and schema
+        reader = self.spark.readStream.format(
+            getattr(self.decoder, "source_format", "text")
+        )
+        schema = getattr(self.decoder, "source_schema", None)
+        if schema is not None:
+            reader = reader.schema(schema)
         if self.max_files_per_trigger is not None:
             reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)
         raw = reader.load(self.source_path)

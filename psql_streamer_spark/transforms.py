@@ -6,14 +6,9 @@ Each transform is a pure DataFrame->DataFrame function (composable with
 the whole chain stays inside WholeStageCodegen instead of a per-event
 Go callback.
 
-Works identically on batch and streaming DataFrames (same API). The
-streaming epoch body (``CdcPipeline._process_batch``) shares
-``decode_cdc_json``, ``is_valid_event``, ``with_default_key`` and
-``serialize_passthrough`` (and ``routing.topic_expr``) with the batch
-operators, so the batch oracle checks cover those. It does NOT call
-``filter_dml``, ``routing.route`` or ``validate_split``: it writes its own
-DML filter, per-route topic filter and DLQ split as columns on one
-annotated frame, so the batch oracle checks do not exercise those three.
+Works identically on batch and streaming DataFrames (same API): the
+streaming epoch (``CdcPipeline._process_batch``) runs the same functions
+the batch oracle checks.
 """
 
 from __future__ import annotations
@@ -29,9 +24,14 @@ Handler = Callable[[DataFrame], DataFrame]
 
 
 # -- T1: message-type dispatch (postgres.go:320-331) -----------------------
-def filter_dml(df: DataFrame, action_col: str = "action") -> DataFrame:
+def is_dml_event(df: DataFrame) -> Column:
+    """Insert/update/delete — not a Begin/Commit/Origin-style record."""
+    return F.col("action").isin(*ACTIONS)
+
+
+def filter_dml(df: DataFrame) -> DataFrame:
     """Keep insert/update/delete; drop Begin/Commit/Origin-style records."""
-    return df.filter(F.col(action_col).isin(*ACTIONS))
+    return df.filter(is_dml_event(df))
 
 
 # -- T2/T4: JSON decode (kafka.go:180, postgres.go:379-428) -----------------

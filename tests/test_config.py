@@ -143,10 +143,22 @@ _KAFKA = {"type": "kafka", "hosts": ["b1:9092"], "topicFallback": "fb"}
         (lambda c: c.update(tickerInterval="abc"), "tickerInterval"),
         (lambda c: c.update(tickerInterval=float("nan")), "tickerInterval"),
         (lambda c: c.update(tickerInterval=float("inf")), "tickerInterval"),
+        # a bare string would be split into characters
+        (lambda c: c["sink"].update(k={**_KAFKA, "hosts": "broker:9092"}),
+         "Unable to init sink 'k': hosts should be a list of strings"),
+        (lambda c: c["sink"].update(
+            k={"type": "parquet", "path": "/x", "partitionBy": "table"}),
+         "Unable to init sink 'k': partitionBy should be a list of strings"),
+        (lambda c: c["sink"].update(k={"type": "stub_log", "sources": "pg1"}),
+         "Unable to init sink 'k': sources should be a list of strings"),
+        (lambda c: c.update(http="localhost"), "http should be ip:port"),
+        (lambda c: c.update(http="127.0.0.1:http"), "http should be ip:port"),
+        (lambda c: c.update(http="127.0.0.1:70000"), "http should be ip:port"),
     ],
     ids=["acks_all", "acks_none", "attempts_3x", "parquet_no_path",
          "parquet_epoch_no_path", "snapshot_no_path", "ticker_abc",
-         "ticker_nan", "ticker_inf"],
+         "ticker_nan", "ticker_inf", "hosts_str", "partition_by_str",
+         "sources_str", "http_no_port", "http_named_port", "http_port_range"],
 )
 def test_bad_values_raise_config_error(spark, tmp_path, edit, match):
     """A bad value is a ConfigError naming what it was for, never a raw

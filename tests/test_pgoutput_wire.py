@@ -558,11 +558,8 @@ class TestStreamingPipeline:
     def test_relation_cache_survives_micro_batches(self, spark, tmp_path):
         from pyspark.sql import functions as F
 
-        from psql_streamer_spark.sources.pgoutput_cdc import (
-            FRAME_SCHEMA,
-            PgoutputStreamDecoder,
-        )
-        from psql_streamer_spark.streaming.pipeline import CdcPipeline
+        from psql_streamer_spark.sources.pgoutput_cdc import PgoutputStreamDecoder
+        from psql_streamer_spark.streaming.pipeline import CdcPipeline, SinkRoute
         from psql_streamer_spark.streaming.sinks import MemorySink
 
         rel = Relation(
@@ -583,12 +580,11 @@ class TestStreamingPipeline:
 
         sink = MemorySink("m")
         pipe = CdcPipeline(
-            spark, src, str(tmp_path / "ckpt"), sinks=[sink],
-            topic_mapping={"users": "t"}, max_files_per_trigger=1,
+            spark, src, str(tmp_path / "ckpt"),
+            routes=[SinkRoute(sink, {"users": "t"})], max_files_per_trigger=1,
             decoder=PgoutputStreamDecoder(
                 host="h", database="d", uuid=F.col("wal_position").cast("string")
             ),
-            source_format="parquet", source_schema=FRAME_SCHEMA,
         )
         pipe.run_to_completion()
         assert pipe.stats.batches >= 2  # the epochs really were separate
@@ -620,6 +616,6 @@ class TestStreamingPipeline:
         }
         engine = compile_config(spark, conf)
         pipe = engine.pipelines["pg1"]
-        assert pipe.source_format == "parquet"
+        assert pipe.decoder.source_format == "parquet"
         assert isinstance(pipe.decoder, PgoutputStreamDecoder)
         assert pipe.decoder.host == "db9" and pipe.decoder.database == "prod"

@@ -10,7 +10,13 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from psql_streamer_spark.streaming import CdcPipeline, MemorySink, NoopSink, ParquetSink
+from psql_streamer_spark.streaming import (
+    CdcPipeline,
+    MemorySink,
+    NoopSink,
+    ParquetSink,
+    SinkRoute,
+)
 from psql_streamer_spark.streaming.sinks import FailNTimesSink, KafkaSink
 
 
@@ -53,8 +59,10 @@ def test_end_to_end_routing_and_fanout(spark, dirs):
         spark,
         str(src),
         ckpt,
-        sinks=[s1, s2],
-        topic_mapping={"test": "topic_test"},
+        routes=[
+            SinkRoute(s1, {"test": "topic_test"}),
+            SinkRoute(s2, {"test": "topic_test"}),
+        ],
         dlq_sink=dlq,
     )
     pipe.run_to_completion()
@@ -81,8 +89,7 @@ def test_checkpoint_resume_no_reprocessing(spark, dirs):
     _write_batch(src, "b1.json", [_event(i) for i in range(3)])
 
     mk = lambda: CdcPipeline(  # noqa: E731
-        spark, str(src), ckpt, sinks=[ParquetSink(str(out))],
-        topic_mapping={"test": "t"},
+        spark, str(src), ckpt, routes=[SinkRoute(ParquetSink(str(out)), {"test": "t"})],
     )
     mk().run_to_completion()
     first = spark.read.parquet(str(out)).count()
@@ -103,8 +110,8 @@ def test_batch_size_cap_maps_to_max_files(spark, dirs):
         _write_batch(src, f"b{b}.json", [_event(b * 10 + i) for i in range(2)])
     sink = NoopSink()
     pipe = CdcPipeline(
-        spark, str(src), ckpt, sinks=[sink],
-        topic_mapping={"test": "t"}, max_files_per_trigger=1,
+        spark, str(src), ckpt,
+        routes=[SinkRoute(sink, {"test": "t"})], max_files_per_trigger=1,
     )
     pipe.run_to_completion()
     assert sink.events == 8
@@ -122,7 +129,11 @@ def test_sink_failure_blocks_offset_commit_then_retry_succeeds(spark, dirs):
     good = MemorySink("good")
     flaky = FailNTimesSink(fail_times=1)
     pipe = CdcPipeline(
-        spark, str(src), ckpt, sinks=[flaky, good], topic_mapping={"test": "t"}
+        spark, str(src), ckpt,
+        routes=[
+            SinkRoute(flaky, {"test": "t"}),
+            SinkRoute(good, {"test": "t"}),
+        ],
     )
     with pytest.raises(Exception, match="injected temporary failure"):
         pipe.run_to_completion()
@@ -130,7 +141,11 @@ def test_sink_failure_blocks_offset_commit_then_retry_succeeds(spark, dirs):
 
     # "retry forever": restart the query; same batch redelivered
     pipe2 = CdcPipeline(
-        spark, str(src), ckpt, sinks=[flaky, good], topic_mapping={"test": "t"}
+        spark, str(src), ckpt,
+        routes=[
+            SinkRoute(flaky, {"test": "t"}),
+            SinkRoute(good, {"test": "t"}),
+        ],
     )
     pipe2.run_to_completion()
     assert flaky.events == 4  # delivered after its failure budget
@@ -146,8 +161,7 @@ def test_fallback_topic_and_stats(spark, dirs):
     )
     sink = MemorySink()
     pipe = CdcPipeline(
-        spark, str(src), ckpt, sinks=[sink],
-        topic_mapping={"test": "topic_test"}, topic_fallback="fb",
+        spark, str(src), ckpt, routes=[SinkRoute(sink, {"test": "topic_test"}, "fb")],
     )
     pipe.run_to_completion()
     by_topic = {}
@@ -162,8 +176,6 @@ def test_per_sink_routing_rules_do_not_leak(spark, dirs):
     """R1 per-sink: two sinks subscribed to one source route the SAME
     batch by their OWN mapping/fallback (kafka.go:116-135) — one sink's
     rules must not apply to the other."""
-    from psql_streamer_spark.streaming.pipeline import SinkRoute
-
     src, ckpt, _ = dirs
     _write_batch(
         src, "b1.json",
@@ -214,8 +226,8 @@ def test_snapshot_sink_materializes_current_state(spark, dirs, tmp_path):
 
     snap = SnapshotSink(str(tmp_path / "snap"), key_field="a")
     pipe = CdcPipeline(
-        spark, str(src), ckpt, sinks=[snap],
-        topic_mapping={"users": "t"}, max_files_per_trigger=1,
+        spark, str(src), ckpt,
+        routes=[SinkRoute(snap, {"users": "t"})], max_files_per_trigger=1,
     )
     pipe.run_to_completion()
 
@@ -261,7 +273,7 @@ def test_pipeline_with_wal2json_decoder(spark, dirs):
 
     sink, dlq = MemorySink("m"), MemorySink("dlq")
     pipe = CdcPipeline(
-        spark, str(src), ckpt, sinks=[sink], topic_mapping={"test": "t"},
+        spark, str(src), ckpt, routes=[SinkRoute(sink, {"test": "t"})],
         dlq_sink=dlq, decoder=decode_wal2json,
     )
     pipe.run_to_completion()
@@ -279,7 +291,7 @@ def test_rewind_reprocesses_from_override(spark, dirs):
     _write_batch(src, "b1.json", [_event(i) for i in range(4)])
     sink = MemorySink("m")
     pipe = CdcPipeline(
-        spark, str(src), ckpt, sinks=[sink], topic_mapping={"test": "t"}
+        spark, str(src), ckpt, routes=[SinkRoute(sink, {"test": "t"})]
     )
     pipe.run_to_completion()
     assert sink.events == 4
@@ -296,7 +308,7 @@ def test_kafka_sink_fails_descriptively_without_jar(spark, dirs):
     _write_batch(src, "b1.json", [_event(1)])
     pipe = CdcPipeline(
         spark, str(src), ckpt,
-        sinks=[KafkaSink("localhost:9092")], topic_mapping={"test": "t"},
+        routes=[SinkRoute(KafkaSink("localhost:9092"), {"test": "t"})],
     )
     with pytest.raises(Exception, match="spark-sql-kafka|kafka"):
         pipe.run_to_completion()
@@ -359,11 +371,13 @@ def test_observability_listener_and_http(spark, dirs):
     spark.streams.addListener(listener)
     try:
         pipe = CdcPipeline(
-            spark, str(src), ckpt, sinks=[NoopSink()], topic_mapping={"test": "t"}
+            spark, str(src), ckpt, routes=[SinkRoute(NoopSink(), {"test": "t"})]
         )
         pipe.run_to_completion()
 
-        server = StatusServer(listener, extra_stats={"pipeline": pipe.stats.as_line()})
+        server = StatusServer(
+            listener, stats_fn=lambda: {"pipeline": pipe.stats.as_line()}
+        )
         port = server.start()
         try:
             get = lambda p: urllib.request.urlopen(  # noqa: E731
@@ -403,8 +417,8 @@ def test_snapshot_sink_tombstone_blocks_stale_resurrection(spark, dirs, tmp_path
 
     snap = SnapshotSink(str(tmp_path / "snap"), key_field="a")
     pipe = CdcPipeline(
-        spark, str(src), ckpt, sinks=[snap],
-        topic_mapping={"users": "t"}, max_files_per_trigger=1,
+        spark, str(src), ckpt,
+        routes=[SinkRoute(snap, {"users": "t"})], max_files_per_trigger=1,
     )
     pipe.run_to_completion()
     assert snap.current(spark).count() == 0  # still deleted
@@ -424,8 +438,8 @@ def test_snapshot_sink_prunes_old_versions(spark, dirs, tmp_path):
         _write_batch(src, f"b{b}.json", [_event(b * 10 + i) for i in range(2)])
     snap = SnapshotSink(str(tmp_path / "snap"), key_field="a", keep_versions=2)
     CdcPipeline(
-        spark, str(src), ckpt, sinks=[snap],
-        topic_mapping={"test": "t"}, max_files_per_trigger=1,
+        spark, str(src), ckpt,
+        routes=[SinkRoute(snap, {"test": "t"})], max_files_per_trigger=1,
     ).run_to_completion()
     versions = [d for d in os.listdir(str(tmp_path / "snap")) if d.startswith("v")]
     assert len(versions) == 2  # 4 epochs, retention 2
@@ -435,11 +449,49 @@ def test_snapshot_sink_prunes_old_versions(spark, dirs, tmp_path):
 def test_topic_requiring_sink_without_rules_discards(spark):
     """A Kafka-style sink with no mapping/fallback must DISCARD (reference
     noTopic path) — never passthrough NULL topics into the producer."""
-    from psql_streamer_spark.streaming.pipeline import SinkRoute
-
     assert SinkRoute(MemorySink("m")).passthrough  # stub: takes everything
     assert not SinkRoute(KafkaSink("b:9092")).passthrough  # kafka: discards
     assert not SinkRoute(MemorySink("m"), {"t": "x"}).passthrough
+
+
+def test_passthrough_route_end_to_end(spark, dirs):
+    """A rule-less route on a stub-style sink takes every valid DML event
+    with a string-typed NULL topic, beside a mapped route and a DLQ. An
+    event counts as routed if any route takes it (union semantics)."""
+    from psql_streamer_spark.streaming.sinks import EpochParquetSink
+
+    src, ckpt, tmp = dirs
+    no_uuid = json.loads(_event(5))
+    no_uuid["UUID"] = ""
+    lines = [
+        _event(1),
+        _event(2, table="users"),
+        _event(3, table="ghost"),  # unmapped: passthrough only
+        _event(4, action="begin"),  # non-DML: dropped, not dead-lettered
+        "not json",  # -> DLQ
+        json.dumps(no_uuid),  # -> DLQ
+    ]
+    _write_batch(src, "b1.json", lines)
+    everything = EpochParquetSink(str(tmp / "all"), name="all")
+    users, dlq = MemorySink("users"), MemorySink("dlq")
+    pipe = CdcPipeline(
+        spark, str(src), ckpt,
+        routes=[SinkRoute(everything), SinkRoute(users, {"users": "t_users"})],
+        dlq_sink=dlq,
+    )
+    pipe.run_to_completion()
+
+    out = everything.read(spark)
+    assert dict(out.dtypes)["topic"] == "string"
+    assert sorted((r.table, r.topic) for r in out.collect()) == [
+        ("ghost", None), ("test", None), ("users", None)
+    ]
+    assert [(r.table, r.topic) for r in users.rows] == [("users", "t_users")]
+    assert dlq.events == 2
+    st = pipe.stats
+    assert (st.events_in, st.events_valid, st.events_dlq) == (6, 3, 2)
+    assert st.events_routed == st.events_valid
+    assert st.events_discarded == 0
 
 
 _SNAP_SCHEMA = "table string, action string, wal_position long, columns map<string,string>"
@@ -509,8 +561,8 @@ def test_rewind_retention_audit_blocks_partial_replay(spark, dirs, tmp_path):
     _write_batch(src, "late.json", [_event(3), _event(4)])
     sink = MemorySink("m")
     pipe = CdcPipeline(
-        spark, str(src), ckpt, sinks=[sink],
-        topic_mapping={"test": "t"}, max_files_per_trigger=1,
+        spark, str(src), ckpt,
+        routes=[SinkRoute(sink, {"test": "t"})], max_files_per_trigger=1,
     )
     pipe.run_to_completion()
     assert sink.events == 4
@@ -544,8 +596,8 @@ def test_epoch_parquet_sink_idempotent_under_replay(spark, dirs, tmp_path):
 
     out = EpochParquetSink(str(tmp_path / "epochs"))
     pipe = CdcPipeline(
-        spark, str(src), ckpt, sinks=[out],
-        topic_mapping={"test": "t"}, max_files_per_trigger=1,
+        spark, str(src), ckpt,
+        routes=[SinkRoute(out, {"test": "t"})], max_files_per_trigger=1,
     )
     pipe.run_to_completion()
     first = out.read(spark)
@@ -825,8 +877,7 @@ def test_engine_stop_ordering_and_drain(spark, dirs):
 
     sink = OrderedSink("s1")
     pipe = CdcPipeline(
-        spark, str(src), ckpt, sinks=[sink],
-        topic_mapping={"test": "t"},
+        spark, str(src), ckpt, routes=[SinkRoute(sink, {"test": "t"})],
         max_files_per_trigger=1,  # 12 slow epochs -> stop lands mid-stream
         processing_interval="50 milliseconds",
     )
@@ -870,8 +921,8 @@ def test_engine_stop_ordering_and_drain(spark, dirs):
     # the one uncommitted epoch may replay (at-least-once)
     sink2 = MemorySink("s2")
     pipe2 = CdcPipeline(
-        spark, str(src), ckpt, sinks=[sink2],
-        topic_mapping={"test": "t"}, max_files_per_trigger=1,
+        spark, str(src), ckpt,
+        routes=[SinkRoute(sink2, {"test": "t"})], max_files_per_trigger=1,
     )
     pipe2.run_to_completion()
     uuids = {
@@ -900,8 +951,12 @@ def test_parquet_sink_partitioned_lake_layout(spark, dirs):
         spark,
         str(src),
         ckpt,
-        sinks=[ParquetSink(str(out), partition_cols=["table"])],
-        topic_mapping={"users": "t.users", "orders": "t.orders"},
+        routes=[
+            SinkRoute(
+                ParquetSink(str(out), partition_cols=["table"]),
+                {"users": "t.users", "orders": "t.orders"},
+            ),
+        ],
     ).run_to_completion()
 
     lake = spark.read.parquet(str(out))
@@ -951,8 +1006,12 @@ def test_streaming_lake_cluster_on_compact(spark, dirs):
         spark,
         str(src),
         ckpt,
-        sinks=[ParquetSink(str(out), partition_cols=["table"])],
-        topic_mapping={"users": "t.users", "orders": "t.orders"},
+        routes=[
+            SinkRoute(
+                ParquetSink(str(out), partition_cols=["table"]),
+                {"users": "t.users", "orders": "t.orders"},
+            ),
+        ],
         max_files_per_trigger=1,
     ).run_to_completion()
     before = sorted(
@@ -1003,8 +1062,12 @@ def test_streaming_lake_lifecycle_ingest_compact_pruned_read(spark, dirs):
         spark,
         str(src),
         ckpt,
-        sinks=[ParquetSink(str(out), partition_cols=["table"])],
-        topic_mapping={"users": "t.users", "orders": "t.orders"},
+        routes=[
+            SinkRoute(
+                ParquetSink(str(out), partition_cols=["table"]),
+                {"users": "t.users", "orders": "t.orders"},
+            ),
+        ],
         max_files_per_trigger=1,
     ).run_to_completion()
 
@@ -1899,8 +1962,12 @@ def test_streaming_lake_retention_leg(spark, dirs):
         spark,
         str(src),
         ckpt,
-        sinks=[ParquetSink(str(out), partition_cols=["table"])],
-        topic_mapping={"users": "t.users", "orders": "t.orders"},
+        routes=[
+            SinkRoute(
+                ParquetSink(str(out), partition_cols=["table"]),
+                {"users": "t.users", "orders": "t.orders"},
+            ),
+        ],
         max_files_per_trigger=1,
     ).run_to_completion()
     compact_parquet(spark, str(out), target_file_mb=128)
@@ -2063,6 +2130,39 @@ def test_only_two_places_build_a_stream():
     ]
 
 
+def test_one_cdc_epoch_path():
+    """One CDC epoch path: the streaming epoch runs the batch transforms
+    the oracle checks (validate_split, filter_dml, routing.route). A
+    `.filter(`/`.isin(` call or the ACTIONS list in streaming/pipeline.py
+    is a second copy of the DML filter, the topic filter or the DLQ
+    split."""
+    import ast
+    from pathlib import Path
+
+    import psql_streamer_spark.streaming.pipeline as pipeline
+
+    tree = ast.parse(Path(pipeline.__file__).read_text())
+    epoch = next(
+        n for n in ast.walk(tree)
+        if isinstance(n, ast.FunctionDef) and n.name == "_process_batch"
+    )
+    called = {
+        n.func.id for n in ast.walk(epoch)
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Name)
+    }
+    assert {"validate_split", "filter_dml", "route"} <= called, called
+    copies = [
+        (f".{n.func.attr}(", n.lineno) for n in ast.walk(tree)
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+        and n.func.attr in ("filter", "isin")
+    ] + [
+        ("ACTIONS", n.lineno) for n in ast.walk(tree)
+        if (isinstance(n, ast.Name) and n.id == "ACTIONS")
+        or (isinstance(n, ast.alias) and n.name == "ACTIONS")
+    ]
+    assert not copies, f"epoch logic written outside the batch transforms: {copies}"
+
+
 def _spawned_commands(spark, tmp_path, body) -> list[str]:
     """Command lines of every process the JVM started while ``body()`` ran,
     from a Java Flight Recorder recording of ``jdk.ProcessStart``."""
@@ -2088,7 +2188,6 @@ def test_cdc_epochs_spawn_no_chmod_or_readlink(spark, dirs):
     the checkpoint creates and `readlink` on every checkpoint rename: 156
     of them over these two epochs (two parquet routes, one partitioned by
     table, plus a parquet DLQ)."""
-    from psql_streamer_spark.streaming.pipeline import SinkRoute
     from psql_streamer_spark.streaming.sinks import EpochParquetSink
 
     src, ckpt, tmp = dirs
@@ -2131,7 +2230,7 @@ def test_metrics_carry_epoch_phases(spark, dirs):
     spark.streams.addListener(listener)
     try:
         CdcPipeline(
-            spark, str(src), ckpt, sinks=[NoopSink()], topic_mapping={"test": "t"}
+            spark, str(src), ckpt, routes=[SinkRoute(NoopSink(), {"test": "t"})]
         ).run_to_completion()
         # progress events reach a Python listener asynchronously
         def seen() -> bool:
