@@ -131,6 +131,27 @@ def _str_list(name: str, conf: dict, key: str) -> list[str]:
     return v
 
 
+def _route_rules(name: str, conf: dict) -> tuple[dict[str, str], str | None]:
+    """A sink's (tableTopicMapping, topicFallback): a table of string
+    topics and an optional string. Anything else would escape as a raw
+    ValueError or build a non-string `topic` column."""
+    mapping = conf.get("tableTopicMapping") or {}
+    if not isinstance(mapping, dict) or not all(
+        isinstance(t, str) and isinstance(v, str) for t, v in mapping.items()
+    ):
+        raise ConfigError(
+            f"Unable to init sink '{name}': tableTopicMapping should be a table"
+            f" of string topics, got {mapping!r}"
+        )
+    fallback = conf.get("topicFallback")
+    if fallback is not None and not isinstance(fallback, str):
+        raise ConfigError(
+            f"Unable to init sink '{name}': topicFallback should be a string,"
+            f" got {fallback!r}"
+        )
+    return dict(mapping), fallback
+
+
 def _sink_path(name: str, conf: dict) -> str:
     if not conf.get("path"):
         raise ConfigError(f"Unable to init sink '{name}': path not specified")
@@ -146,8 +167,7 @@ def _kafka_sink(name: str, conf: dict) -> Sink:
     # discard path — runtime discard is only for unmapped tables when a
     # mapping exists. A mapping topic equal to the fallback is a config
     # error too (kafka.go:127-130).
-    mapping = dict(conf.get("tableTopicMapping") or {})
-    fallback = conf.get("topicFallback")
+    mapping, fallback = _route_rules(name, conf)
     if not mapping and not fallback:
         raise ConfigError(
             f"sink '{name}': at least one of topicFallback or "
@@ -344,12 +364,7 @@ def compile_config(spark: SparkSession, conf: dict | str | Path) -> Engine:
         # mapping/fallback — never a merged pipeline-level mapping, which
         # would let one sink's rules leak into another's
         routes = [
-            SinkRoute(
-                sinks[sn],
-                dict(sink_confs[sn].get("tableTopicMapping") or {}),
-                sink_confs[sn].get("topicFallback"),
-            )
-            for sn in subs[name]
+            SinkRoute(sinks[sn], *_route_rules(sn, sink_confs[sn])) for sn in subs[name]
         ]
         extra: dict = {}
         # wire-dialect selection for file_cdc (S1 decode parity): the
@@ -468,4 +483,5 @@ def compile_config(spark: SparkSession, conf: dict | str | Path) -> Engine:
     )
     if server is not None:
         server.stats_fn = engine.stats  # live view for /stats
+        server.pipeline_stats_fn = lambda: {n: p.stats for n, p in pipelines.items()}
     return engine

@@ -2,7 +2,8 @@
 
 Reference parity (§2.7):
   O1 per-object counters  -> PipelineStats + QueryProgressListener totals
-  O2 Prometheus metrics   -> metrics_text() in Prometheus exposition format
+  O2 Prometheus metrics   -> metrics_text() + pipeline_metrics_text() in
+                             Prometheus exposition format
   O3 HTTP control plane   -> StatusServer (/health /status /stats /metrics)
   O4 stats ticker         -> listener logs every progress event
   F6 error-threshold      -> consecutive-error health flip (threshold 30,
@@ -168,6 +169,30 @@ class EngineListener(StreamingQueryListener):
         return "\n".join(lines) + ("\n" if lines else "")
 
 
+# PipelineStats fields exported as engine_pipeline_events_total{kind=...}
+_PIPELINE_EVENT_KINDS = (
+    ("in", "events_in"), ("valid", "events_valid"), ("dlq", "events_dlq"),
+    ("routed", "events_routed"), ("discarded", "events_discarded"),
+)
+
+
+def pipeline_metrics_text(pipelines: dict) -> str:
+    """Prometheus lines for each source's PipelineStats (the per-epoch
+    `Observation` counters, summed): events by kind, and sink errors."""
+    lines = []
+    for name, st in pipelines.items():
+        with st._lock:  # one epoch's counts, never half of one
+            for kind, attr in _PIPELINE_EVENT_KINDS:
+                lines.append(
+                    f'engine_pipeline_events_total{{source="{name}",kind="{kind}"}}'
+                    f" {getattr(st, attr)}"
+                )
+            lines.append(
+                f'engine_pipeline_sink_errors_total{{source="{name}"}} {st.sink_errors}'
+            )
+    return "\n".join(lines) + ("\n" if lines else "")
+
+
 class StatsTicker:
     """Periodic stats logger (O4: stats.go:10-36, started from main.go:47-50).
     Calls `stats_fn() -> dict[str,str]` every `interval_s` and logs one
@@ -214,6 +239,8 @@ class StatusServer:
     host: str = "127.0.0.1"
     port: int = 0  # 0 = ephemeral
     stats_fn: Callable[[], dict] = dict  # extra /stats entries, read per request
+    # source name -> PipelineStats for /metrics, read per request
+    pipeline_stats_fn: Callable[[], dict] = dict
     debug: bool = False
     _httpd: ThreadingHTTPServer | None = None
     _thread: threading.Thread | None = None
@@ -252,7 +279,9 @@ class StatusServer:
                     body.update({k: str(v) for k, v in server.stats_fn().items()})
                     self._send(200, json.dumps(body) + "\n", "application/json")
                 elif self.path == "/metrics":
-                    self._send(200, listener.metrics_text())
+                    self._send(200, listener.metrics_text() + pipeline_metrics_text(
+                        server.pipeline_stats_fn()
+                    ))
                 elif self.path.startswith("/debug"):
                     parts = self.path.strip("/").split("/")
                     if len(parts) != 2:

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from psql_streamer_spark.transforms import once_per_jvm
+
 
 def topic_expr(
     mapping: dict[str, str],
@@ -21,9 +23,16 @@ def topic_expr(
 ) -> Column:
     """Build the routing expression: mapped topic, else fallback, else NULL
     (NULL = discard, counted by the caller). Always string-typed, even with
-    no mapping and no fallback."""
+    no mapping and no fallback. Built once per JVM and route map."""
+    return _topic_expr(tuple(mapping.items()), fallback, table_col)
+
+
+@once_per_jvm
+def _topic_expr(
+    mapping: tuple[tuple[str, str], ...], fallback: str | None, table_col: str
+) -> Column:
     expr: Column | None = None
-    for table, topic in mapping.items():
+    for table, topic in mapping:
         cond = F.col(table_col) == table
         expr = F.when(cond, topic) if expr is None else expr.when(cond, topic)
     if expr is None:
@@ -42,8 +51,13 @@ def route(
     replaces the reference's per-topic batch grouping (R2) with zero extra
     stages."""
     return df.withColumn("topic", topic_expr(mapping, fallback, table_col)).filter(
-        F.col("topic").isNotNull()
+        _has_topic()
     )
+
+
+@once_per_jvm
+def _has_topic() -> Column:
+    return F.col("topic").isNotNull()
 
 
 def routing_stats(

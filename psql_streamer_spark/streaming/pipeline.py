@@ -27,7 +27,7 @@ import os
 import threading
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from psql_streamer_spark.caching import persisted
@@ -132,6 +132,28 @@ class CdcPipeline:
         self.processing_interval = processing_interval
         self.stats = PipelineStats()
         self.query = None
+        self._counters: tuple[Column, ...] | None = None
+
+    def _epoch_counters(self, decoded: DataFrame) -> tuple[Column, ...]:
+        """The epoch's `observe` counters, built on the first epoch and
+        reused by every later one (each Column call is py4j round trips;
+        see transforms.once_per_jvm)."""
+        # `routed`/`discarded` use union semantics: an event counts as
+        # routed if ANY route takes it, discarded if none does
+        any_route = F.lit(False)
+        for r in self.routes:
+            takes = F.lit(True) if r.passthrough else (
+                topic_expr(r.topic_mapping, r.topic_fallback).isNotNull()
+            )
+            any_route = any_route | takes
+        ok = is_valid_event(decoded)
+        event = ok & is_dml_event(decoded)
+        return (
+            F.count(F.lit(1)).alias("n_in"),
+            F.count(F.when(~ok, 1)).alias("n_dlq"),
+            F.count(F.when(event, 1)).alias("n_valid"),
+            F.count(F.when(event & any_route, 1)).alias("n_routed"),
+        )
 
     # -- the per-epoch body (the mux flush) --------------------------------
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -146,24 +168,10 @@ class CdcPipeline:
         from pyspark.sql import Observation
 
         decoded = self.decoder(batch_df)
-        # `routed`/`discarded` use union semantics: an event counts as
-        # routed if ANY route takes it, discarded if none does
-        any_route = F.lit(False)
-        for r in self.routes:
-            takes = F.lit(True) if r.passthrough else (
-                topic_expr(r.topic_mapping, r.topic_fallback).isNotNull()
-            )
-            any_route = any_route | takes
-        ok = is_valid_event(decoded)
-        event = ok & is_dml_event(decoded)
+        if self._counters is None:
+            self._counters = self._epoch_counters(decoded)
         obs = Observation()
-        observed = decoded.observe(
-            obs,
-            F.count(F.lit(1)).alias("n_in"),
-            F.count(F.when(~ok, 1)).alias("n_dlq"),
-            F.count(F.when(event, 1)).alias("n_valid"),
-            F.count(F.when(event & any_route, 1)).alias("n_routed"),
-        )
+        observed = decoded.observe(obs, *self._counters)
         with persisted(observed):
             valid, dlq = validate_split(observed)
             events = filter_dml(valid)

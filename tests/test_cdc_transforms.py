@@ -117,6 +117,36 @@ def test_empty_mapping_routes_everything_to_fallback(spark, raw_df):
     assert route(decoded, {}, fallback=None).count() == 0
 
 
+def test_once_per_jvm_memoizes_per_arguments_and_jvm(spark, monkeypatch):
+    """Column expressions are built once per JVM and argument tuple: the same
+    arguments return the same Column object, different ones (or a new
+    JVM) build a new one, and the LRU stays within its bound."""
+    from psql_streamer_spark import transforms
+
+    mapping = {"a": "ta", "b": "tb"}
+    col = topic_expr(mapping, "fb")
+    assert topic_expr(dict(mapping), "fb") is col
+    assert topic_expr({"a": "ta"}, "fb") is not col
+    assert topic_expr(mapping, "other") is not col
+    assert topic_expr(mapping, "fb", table_col="tbl") is not col
+
+    monkeypatch.setattr(transforms, "_jvm_key", lambda: "another JVM")
+    rebuilt = topic_expr(mapping, "fb")
+    assert rebuilt is not col
+    assert topic_expr(mapping, "fb") is rebuilt
+    monkeypatch.undo()
+    assert topic_expr(mapping, "fb") is col
+
+    built = []
+    build = transforms.once_per_jvm(lambda i: built.append(i) or object())
+    maxsize = build.cache_info().maxsize
+    for i in range(maxsize + 10):
+        build(i)
+    assert build(maxsize + 9) is build(maxsize + 9)
+    assert len(built) == maxsize + 10
+    assert build.cache_info().currsize == maxsize
+
+
 def test_serialize_roundtrip(spark, raw_df):
     """decode -> serialize -> decode is identity on valid events."""
     decoded, _ = validate_split(decode_cdc_json(raw_df))

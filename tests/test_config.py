@@ -154,11 +154,23 @@ _KAFKA = {"type": "kafka", "hosts": ["b1:9092"], "topicFallback": "fb"}
         (lambda c: c.update(http="localhost"), "http should be ip:port"),
         (lambda c: c.update(http="127.0.0.1:http"), "http should be ip:port"),
         (lambda c: c.update(http="127.0.0.1:70000"), "http should be ip:port"),
+        # route maps become a string `topic` column and memo keys
+        (lambda c: c["sink"].update(k={**_KAFKA, "tableTopicMapping": "users"}),
+         "Unable to init sink 'k': tableTopicMapping should be a table of string"),
+        (lambda c: c["sink"].update(
+            k={"type": "stub_log", "tableTopicMapping": "users"}),
+         "Unable to init sink 'k': tableTopicMapping should be a table of string"),
+        (lambda c: c["sink"].update(
+            k={"type": "stub_log", "tableTopicMapping": {"users": 7}}),
+         "Unable to init sink 'k': tableTopicMapping should be a table of string"),
+        (lambda c: c["sink"].update(k={**_KAFKA, "topicFallback": 5}),
+         "Unable to init sink 'k': topicFallback should be a string"),
     ],
     ids=["acks_all", "acks_none", "attempts_3x", "parquet_no_path",
          "parquet_epoch_no_path", "snapshot_no_path", "ticker_abc",
          "ticker_nan", "ticker_inf", "hosts_str", "partition_by_str",
-         "sources_str", "http_no_port", "http_named_port", "http_port_range"],
+         "sources_str", "http_no_port", "http_named_port", "http_port_range",
+         "mapping_str", "mapping_str_stub", "mapping_int_topic", "fallback_int"],
 )
 def test_bad_values_raise_config_error(spark, tmp_path, edit, match):
     """A bad value is a ConfigError naming what it was for, never a raw
@@ -275,6 +287,8 @@ sources = ["pg1"]
         )
         live = json.loads(get("/stats").read())
         assert "source.pg1" in live and "routed 6" in live["source.pg1"]
+        metrics = get("/metrics").read().decode().splitlines()
+        assert 'engine_pipeline_events_total{source="pg1",kind="routed"} 6' in metrics
         assert get("/health").read() == b"OK\n"
         assert get("/debug/on").read() == b"Debug is now true\n"
         assert engine.server.debug is True

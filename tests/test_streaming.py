@@ -376,7 +376,9 @@ def test_observability_listener_and_http(spark, dirs):
         pipe.run_to_completion()
 
         server = StatusServer(
-            listener, stats_fn=lambda: {"pipeline": pipe.stats.as_line()}
+            listener,
+            stats_fn=lambda: {"pipeline": pipe.stats.as_line()},
+            pipeline_stats_fn=lambda: {"src": pipe.stats},
         )
         port = server.start()
         try:
@@ -389,6 +391,12 @@ def test_observability_listener_and_http(spark, dirs):
             assert "pipeline" in stats
             metrics = get("/metrics").read().decode()
             assert "engine_input_rows_total" in metrics
+            # the drained file's PipelineStats, exported per source
+            for kind, n in (("in", 3), ("valid", 3), ("dlq", 0),
+                            ("routed", 3), ("discarded", 0)):
+                line = f'engine_pipeline_events_total{{source="src",kind="{kind}"}} {n}'
+                assert line in metrics.splitlines(), (line, metrics)
+            assert 'engine_pipeline_sink_errors_total{source="src"} 0' in metrics
             assert get("/metrics").status == 200
         finally:
             server.stop()
@@ -2258,3 +2266,57 @@ def test_metrics_carry_epoch_phases(spark, dirs):
         count = [ln for ln in metrics.splitlines()
                  if ln.startswith(f"engine_epoch_phase_ms_count{labels} ")]
         assert count and int(count[0].split()[-1]) >= 1, ph
+
+
+def _epoch_round_trips(spark, mapping: dict, lines: list[str]) -> int:
+    """py4j round trips from Python in one warm `_process_batch`: two
+    NoopSink routes (``mapping``, and a fallback-only one) plus a NoopSink
+    DLQ, on a static frame. Two epochs warm the pipeline up first."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    pipe = CdcPipeline(
+        spark, "unused", "unused",
+        routes=[SinkRoute(NoopSink("mapped"), mapping),
+                SinkRoute(NoopSink("fallback"), {}, "fb")],
+        dlq_sink=NoopSink("dlq"),
+    )
+    batch = spark.createDataFrame([(ln,) for ln in lines], "value string")
+    for epoch in range(2):
+        pipe._process_batch(batch, epoch)
+
+    calls = 0
+    me = threading.get_ident()
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        nonlocal calls
+        if threading.get_ident() == me:  # not the listener's threads
+            calls += 1
+        return send(self, command)
+
+    ClientServerConnection.send_command = counting
+    try:
+        pipe._process_batch(batch, 2)
+    finally:
+        ClientServerConnection.send_command = send
+    assert pipe.stats.batches == 3 and pipe.stats.events_dlq == 3 * 5
+    return calls
+
+
+def test_epoch_builds_no_columns(spark):
+    """A warm CDC epoch rebuilds none of its Column expressions: they are
+    built once per JVM (transforms.once_per_jvm), so what is left is the
+    DataFrame operations, the cache and the writes. Each Column call costs
+    about ten py4j round trips (PySpark captures its call site), so the
+    rebuilt topic when-chains, predicates, projections and counters came
+    to 1,295 round trips per epoch with a 2-table mapping and 15,155 with
+    200 tables."""
+    lines = [_event(i, table=f"t{i % 7}") for i in range(95)] + ["not json"] * 5
+    wide = {f"t{i}": f"topic_{i}" for i in range(200)}
+    calls = _epoch_round_trips(spark, wide, lines)
+    # measured 45 on a 4-CPU box (15,155 before the memo); the bound
+    # leaves about 3x headroom
+    assert calls < 150, calls
+    assert _epoch_round_trips(spark, {"t0": "a", "t1": "b"}, lines) == calls
