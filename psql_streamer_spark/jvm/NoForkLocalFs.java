@@ -2,9 +2,11 @@ package psqlstreamer;
 
 import java.io.FileNotFoundException;
 import java.io.IOException;
+import java.io.OutputStream;
 import java.net.URI;
 import java.net.URISyntaxException;
 import java.nio.file.Files;
+import java.nio.file.LinkOption;
 import java.nio.file.NoSuchFileException;
 import java.nio.file.attribute.PosixFilePermission;
 import java.util.EnumSet;
@@ -23,7 +25,8 @@ import org.apache.hadoop.fs.local.LocalConfigKeys;
 import org.apache.hadoop.fs.permission.FsPermission;
 
 /**
- * Hadoop's local file system, minus its process spawns.
+ * Hadoop's local file system, minus its process spawns and its in-place
+ * truncates.
  *
  * <p>Without the native Hadoop library, {@link RawLocalFileSystem} runs
  * {@code chmod} for every file and directory it creates and {@code readlink}
@@ -31,12 +34,58 @@ import org.apache.hadoop.fs.permission.FsPermission;
  * classes apply the same modes and answer the same probes through
  * {@code java.nio.file} instead. Checksums are untouched: {@link Local} is a
  * {@link LocalFileSystem} and {@link Fs} a {@link ChecksumFs}, as stock.
+ *
+ * <p>An overwrite replaces the file instead of truncating it: stock opens
+ * the old file with {@code O_TRUNC}, and on ext4 truncating a recently
+ * written non-empty file blocks for 45-90 ms (p50 about 81 ms on a 4-CPU VM,
+ * ext4 mounted with {@code discard}), while unlinking it and creating it
+ * again takes about 0.13 ms. Every append into an existing parquet
+ * directory rewrites its {@code _SUCCESS} marker and that marker's
+ * {@code .crc}, so the stall sat in each job commit of a partitioned sink.
+ * See {@link Raw#createOutputStreamWithMode} for the rules it keeps.
  */
 public final class NoForkLocalFs {
   private NoForkLocalFs() {}
 
-  /** The raw layer: modes and link probes through NIO. */
+  /** The raw layer: modes, link probes and overwrites through NIO. */
   public static class Raw extends RawLocalFileSystem {
+    /**
+     * Opens {@code f} for writing; an overwrite of a regular file deletes it
+     * first, so the stream writes a new file, as {@code create(overwrite)}
+     * does on HDFS. Every create reaches this method: {@code create},
+     * {@code createNonRecursive}, both streams of a checksummed file (data
+     * and {@code .crc}) and the {@code FileContext} layer.
+     *
+     * <ul>
+     *   <li>A symlink is not replaced: the stream writes its target and the
+     *       link stays, as stock.
+     *   <li>{@code overwrite=false} on an existing file still fails with
+     *       {@code FileAlreadyExistsException}; {@code create} checks that
+     *       before it calls this method.
+     *   <li>When the delete fails (say, the directory is read-only but the
+     *       file is writable) the stream truncates the file in place, as
+     *       stock.
+     *   <li>A replaced file gets the mode of a newly created file, not the
+     *       old file's mode, which is HDFS's rule too (stock applies that
+     *       mode on an overwrite as well).
+     * </ul>
+     */
+    @Override
+    protected OutputStream createOutputStreamWithMode(
+        Path f, boolean append, FsPermission permission) throws IOException {
+      if (!append) {
+        java.nio.file.Path file = pathToFile(f).toPath();
+        if (Files.isRegularFile(file, LinkOption.NOFOLLOW_LINKS)) {
+          try {
+            Files.delete(file);
+          } catch (IOException e) {
+            // not replaceable: truncate it in place below, as stock does
+          }
+        }
+      }
+      return super.createOutputStreamWithMode(f, append, permission);
+    }
+
     /**
      * Applies a plain {@code rwxrwxrwx} mode with {@code Files.setPosixFilePermissions}.
      * A mode with sticky or set-id bits, or a file system without POSIX

@@ -20,6 +20,16 @@ the checkpoint's create-then-rename are unchanged. It is compiled once per
 checkout with ``javac`` against pyspark's ``hadoop-client-api`` jar and put
 on the driver class path, which in local mode is every task's class path
 too. Without ``javac`` the session is the stock one.
+
+The same shim replaces a file on overwrite instead of truncating it in
+place. Each append into an existing parquet directory rewrites its
+``_SUCCESS`` marker, and stock opened the marker's 8-byte ``.crc`` with
+``O_TRUNC``; on ext4 that truncate of a recently written file blocks for
+45-90 ms, against about 0.13 ms to unlink the file and create it again.
+In the ``cdc_trickle`` shape it held the ``table=``-partitioned sink for
+about 86 ms between its job's end and its SQL execution's end (3 ms once
+replaced), and that sink's write went from about 145 ms to about 60 ms
+per epoch. A symlink is still written through, as stock.
 """
 
 from __future__ import annotations

@@ -1,8 +1,9 @@
 """The fork-free local file system that `session.get_spark` installs on a
 local session (`psql_streamer_spark/jvm/NoForkLocalFs.java`), checked
 against stock Hadoop: the classes the `file` scheme resolves to, the
-modes files and directories get, link probes, Hive's rename rule and the
-checksum check on read."""
+modes files and directories get, link probes, Hive's rename rule, the
+checksum check on read, and overwrites that replace a file instead of
+truncating it."""
 
 from __future__ import annotations
 
@@ -12,6 +13,7 @@ import stat
 import pytest
 
 from psql_streamer_spark.session import LOCAL_ABSTRACT_FS, LOCAL_FS, _with_local_fs
+from psql_streamer_spark.streaming import ParquetSink
 
 
 @pytest.fixture()
@@ -111,3 +113,83 @@ def test_flipped_byte_fails_the_checksum_on_read(spark, tmp_path):
     data.write_bytes(bytes(raw))
     with pytest.raises(Exception, match="ChecksumException"):
         spark.read.parquet(str(out)).collect()
+
+
+def _write(hadoop, fs, path, data: bytes, overwrite: bool = True) -> None:
+    out = fs.create(hadoop.fs.Path(str(path)), overwrite)
+    out.write(bytearray(data))
+    out.close()
+
+
+def _read(hadoop, fs, path) -> bytes:
+    # a checksummed read: a stale or foreign .crc raises ChecksumException
+    stream = fs.open(hadoop.fs.Path(str(path)))
+    try:
+        return bytes(hadoop.io.IOUtils.readFullyToByteArray(stream))
+    finally:
+        stream.close()
+
+
+def test_overwrite_replaces_the_file(hadoop, local_fs, tmp_path):
+    f, crc = tmp_path / "f", tmp_path / ".f.crc"
+    _write(hadoop, local_fs, f, b"old bytes, several of them")
+    os.chmod(f, 0o600)
+    witness, crc_witness = tmp_path / "witness", tmp_path / "crc_witness"
+    os.link(f, witness)
+    os.link(crc, crc_witness)
+
+    _write(hadoop, local_fs, f, b"new")
+
+    # the witnesses hold the old inodes, so ext4 cannot hand their numbers back
+    assert not os.path.samefile(f, witness)
+    assert not os.path.samefile(crc, crc_witness)
+    assert witness.read_bytes() == b"old bytes, several of them"
+    assert _read(hadoop, local_fs, f) == b"new"
+    fresh = tmp_path / "fresh"
+    _write(hadoop, local_fs, fresh, b"new")
+    assert _mode(f) == _mode(fresh) == 0o644
+
+
+def test_overwrite_through_a_symlink_writes_the_target(spark, hadoop, local_fs, tmp_path):
+    stock = hadoop.fs.LocalFileSystem()
+    stock.initialize(spark._jvm.java.net.URI("file:///"), spark._jsc.hadoopConfiguration())
+    for name, fs in (("shim", local_fs), ("stock", stock)):
+        d = tmp_path / name
+        d.mkdir()
+        target, link = d / "target", d / "link"
+        _write(hadoop, fs, target, b"old")
+        link.symlink_to(target)
+        _write(hadoop, fs, link, b"new through the link")
+        assert link.is_symlink() and os.readlink(link) == str(target), name
+        assert target.read_bytes() == b"new through the link", name
+        assert _read(hadoop, fs, link) == b"new through the link", name
+
+
+def test_create_without_overwrite_still_refuses(hadoop, local_fs, tmp_path):
+    f = tmp_path / "f"
+    _write(hadoop, local_fs, f, b"kept")
+    with pytest.raises(Exception, match="FileAlreadyExistsException"):
+        _write(hadoop, local_fs, f, b"refused", overwrite=False)
+    assert _read(hadoop, local_fs, f) == b"kept"
+
+
+def test_partitioned_append_replaces_the_success_marker(spark, tmp_path):
+    """The second append into a partitioned parquet directory rewrites its
+    `_SUCCESS` marker and `._SUCCESS.crc`. Truncating the non-empty `.crc`
+    in place stalled each job commit on ext4: in the `cdc_trickle` shape,
+    the `table=`-partitioned sink spent about 86 ms between its job's end
+    and its SQL execution's end, against about 3 ms once the marker is
+    replaced. A replaced marker is a new inode."""
+    out = tmp_path / "lake"
+    sink = ParquetSink(str(out), partition_cols=["table"])
+    frame = spark.range(6).selectExpr("id", "IF(id % 2 = 0, 'users', 'orders') AS table")
+    sink.write(frame, 0)
+    marker, crc = out / "_SUCCESS", out / "._SUCCESS.crc"
+    os.link(marker, tmp_path / "marker_witness")
+    os.link(crc, tmp_path / "crc_witness")
+
+    sink.write(frame.limit(4), 1)
+
+    assert not os.path.samefile(marker, tmp_path / "marker_witness")
+    assert not os.path.samefile(crc, tmp_path / "crc_witness")
+    assert spark.read.parquet(str(out)).count() == 6 + 4
