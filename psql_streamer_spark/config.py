@@ -54,6 +54,7 @@ TOML shape (mirrors psql-streamer.toml; reference key names kept):
 
 from __future__ import annotations
 
+import functools
 import math
 import tomllib
 from dataclasses import dataclass, field
@@ -63,6 +64,7 @@ from typing import Any, Callable
 from pyspark.sql import SparkSession
 
 from psql_streamer_spark.observe import EngineListener, StatsTicker, StatusServer
+from psql_streamer_spark.sources.cdc_formats import DIALECTS, decode_dialect
 from psql_streamer_spark.streaming.pipeline import CdcPipeline, SinkRoute
 from psql_streamer_spark.streaming.sinks import (
     EpochParquetSink,
@@ -127,6 +129,16 @@ def _str_list(name: str, conf: dict, key: str) -> list[str]:
         raise ConfigError(
             f"Unable to init sink '{name}': {key} should be a list of strings,"
             f" got {v!r}"
+        )
+    return v
+
+
+def _source_str(name: str, conf: dict, key: str) -> str:
+    """A source's string option, "unknown" when absent (postgres.go:395-397)."""
+    v = conf.get(key, "unknown")
+    if not isinstance(v, str):
+        raise ConfigError(
+            f"Unable to init source '{name}': {key} should be a string, got {v!r}"
         )
     return v
 
@@ -368,59 +380,29 @@ def compile_config(spark: SparkSession, conf: dict | str | Path) -> Engine:
         ]
         extra: dict = {}
         # wire-dialect selection for file_cdc (S1 decode parity): the
-        # native engine JSON is the default; `dialect` swaps in one of
-        # the sources/cdc_formats decoders, with the same fail-fast-at-
-        # load contract as every other knob (configLoad parity). The
-        # auto dispatcher's provenance column is dropped for pipeline
-        # use — downstream handlers expect the canonical envelope.
+        # native engine JSON is the default; `dialect` names a
+        # cdc_formats.DIALECTS entry or "auto", with the same fail-fast-
+        # at-load contract as every other knob (configLoad parity)
+        stamps = {k: _source_str(name, sc, k) for k in ("host", "database")}
         if "dialect" in sc:
             if stype != "file_cdc":
                 raise ConfigError(
                     f"Unable to init source '{name}': 'dialect' applies"
                     f" only to file_cdc sources, not {stype!r}"
                 )
-            from psql_streamer_spark.sources.cdc_formats import (
-                decode_canal,
-                decode_cdc_auto,
-                decode_debezium,
-                decode_maxwell,
-                decode_wal2json,
-            )
-
-            # bind host/database through default args, NOT closure
-            # capture: both names are reassigned later in this function
-            # (and per loop iteration), and the decoder only runs at
-            # stream time — a late-bound closure would stamp every
-            # event with whatever the variables hold by then
-            src_host = sc.get("host", "unknown")
-            src_db = sc.get("database", "unknown")
-            dialects = {
-                "wal2json": lambda df, h=src_host, d=src_db: decode_wal2json(
-                    df, host=h, database=d
-                ),
-                "debezium": lambda df: decode_debezium(df),
-                "maxwell": lambda df, h=src_host: decode_maxwell(df, host=h),
-                "canal": lambda df, h=src_host: decode_canal(df, host=h),
-                "auto": lambda df, h=src_host, d=src_db: decode_cdc_auto(
-                    df, host=h, database=d
-                ).drop("dialect"),
-            }
+            dialects = sorted([*DIALECTS, "auto"])
             if sc["dialect"] not in dialects:
                 raise ConfigError(
                     f"Unable to init source '{name}': unknown dialect"
-                    f" {sc['dialect']!r} (expected one of"
-                    f" {sorted(dialects)})"
+                    f" {sc['dialect']!r} (expected one of {dialects})"
                 )
-            extra = {"decoder": dialects[sc["dialect"]]}
+            extra = {"decoder": functools.partial(
+                decode_dialect, dialect=sc["dialect"], **stamps
+            )}
         if stype == "file_pgoutput":
             from psql_streamer_spark.sources.pgoutput_cdc import PgoutputStreamDecoder
 
-            extra = {
-                "decoder": PgoutputStreamDecoder(
-                    host=sc.get("host", "unknown"),
-                    database=sc.get("database", "unknown"),
-                ),
-            }
+            extra = {"decoder": PgoutputStreamDecoder(**stamps)}
         # mux knob validation parity (mux/mux.go via Test_New): the
         # reference rejects non-positive batchSize / batchFlushInterval at
         # LOAD time. Spark would surface batchSize<=0 only at stream start

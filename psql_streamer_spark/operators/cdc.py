@@ -20,6 +20,7 @@ from psql_streamer_spark.routing import route, routing_stats
 from psql_streamer_spark.sources.tables import load_table
 from psql_streamer_spark.transforms import (
     filter_dml,
+    latest_per_key,
     serialize_passthrough,
     validate_split,
     with_default_key,
@@ -263,9 +264,10 @@ def cdc_validate_dlq_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# CDC envelope dialect decoders (S1 decode parity): wal2json v2 + Debezium.
-# The events table is re-serialized into each dialect's wire JSON, then run
-# through the REAL decoder (sources/cdc_formats.py) — the oracle computes
+# CDC envelope dialect decoders (S1 decode parity): wal2json v2, Debezium,
+# Maxwell, Canal and the mixed feed. The events table is re-serialized into
+# each dialect's wire JSON, then run through the REAL decoder
+# (sources/cdc_formats.decode_dialect) — the oracle computes
 # the expected decode output directly, so the whole build->parse->normalize
 # round trip is what's verified (golden-fixture decode, SURVEY §5 pattern).
 # --------------------------------------------------------------------------
@@ -333,14 +335,14 @@ def _wal2json_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def cdc_wal2json_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """wal2json v2 round trip: wire JSON -> decode_wal2json -> envelope.
+    """wal2json v2 round trip: wire JSON -> decode_dialect -> envelope.
     Exercises the action-letter map (B dropped by T1), hex LSN -> numeric
     WAL position, µs timestamp reparse, and the columns->map transport."""
-    from psql_streamer_spark.sources.cdc_formats import decode_wal2json
+    from psql_streamer_spark.sources.cdc_formats import decode_dialect
 
     raw = _wal2json_lines(spark, sf_dir)
-    decoded = decode_wal2json(
-        raw, uuid=F.md5(F.col("event_id").cast("string"))
+    decoded = decode_dialect(
+        raw, "wal2json", uuid=F.md5(F.col("event_id").cast("string"))
     )
     return filter_dml(decoded).select(
         "table",
@@ -400,14 +402,14 @@ def _debezium_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def cdc_debezium_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Debezium round trip: envelope -> decode_debezium -> canonical form.
+    """Debezium round trip: envelope -> decode_dialect -> canonical form.
     op r (snapshot read) normalizes to insert; deletes read the `before`
     image; event time is the connector's ms-precision source.ts_ms."""
-    from psql_streamer_spark.sources.cdc_formats import decode_debezium
+    from psql_streamer_spark.sources.cdc_formats import decode_dialect
 
     raw = _debezium_lines(spark, sf_dir)
-    decoded = decode_debezium(
-        raw, uuid=F.md5(F.col("event_id").cast("string"))
+    decoded = decode_dialect(
+        raw, "debezium", uuid=F.md5(F.col("event_id").cast("string"))
     )
     return filter_dml(decoded).select(
         "host",
@@ -482,15 +484,16 @@ def _maxwell_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def cdc_maxwell_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Maxwell round trip: envelope -> decode_maxwell -> canonical form.
+    """Maxwell round trip: envelope -> decode_dialect -> canonical form.
     Exercises bootstrap-insert normalization, the delete image riding
     `data` (not a `before` slot), binlog file:offset -> numeric WAL
     position across a rotation, and UNIX-seconds event time."""
-    from psql_streamer_spark.sources.cdc_formats import decode_maxwell
+    from psql_streamer_spark.sources.cdc_formats import decode_dialect
 
     raw = _maxwell_lines(spark, sf_dir)
-    decoded = decode_maxwell(
-        raw, host="mysqlsrv1", uuid=F.md5(F.col("event_id").cast("string"))
+    decoded = decode_dialect(
+        raw, "maxwell", host="mysqlsrv1",
+        uuid=F.md5(F.col("event_id").cast("string")),
     )
     return filter_dml(decoded).select(
         "host",
@@ -554,15 +557,16 @@ def _canal_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def cdc_canal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Canal round trip: flat message -> decode_canal -> canonical form.
+    """Canal round trip: flat message -> decode_dialect -> canonical form.
     Exercises the uppercase type map, the data-ARRAY explode (one
     element here; multi-element fan-out is golden-tested), isDdl marker
     drop via T1, batch-id position, and ms-precision execute time."""
-    from psql_streamer_spark.sources.cdc_formats import decode_canal
+    from psql_streamer_spark.sources.cdc_formats import decode_dialect
 
     raw = _canal_lines(spark, sf_dir)
-    decoded = decode_canal(
-        raw, host="canalsrv1", uuid=F.md5(F.col("event_id").cast("string"))
+    decoded = decode_dialect(
+        raw, "canal", host="canalsrv1",
+        uuid=F.md5(F.col("event_id").cast("string")),
     )
     return filter_dml(decoded).select(
         "host",
@@ -601,12 +605,12 @@ def cdc_canal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def cdc_auto_decode_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MIXED-feed round trip: all four dialects' wire lines interleaved
-    on one feed -> classify_cdc_dialect -> per-dialect decode ->
+    on one feed -> decode_mixed (classify_cdc_dialect + dispatch) ->
     canonical envelope with dialect provenance. Every line must land in
     the same envelope row its clean-feed decoder produces (the oracle is
     the four dialect oracles unioned), proving the classifier never
     misroutes and the dispatch loses nothing."""
-    from psql_streamer_spark.sources.cdc_formats import decode_cdc_auto
+    from psql_streamer_spark.sources.cdc_formats import decode_mixed
 
     mixed = (
         _wal2json_lines(spark, sf_dir)
@@ -614,7 +618,7 @@ def cdc_auto_decode_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(_maxwell_lines(spark, sf_dir))
         .unionByName(_canal_lines(spark, sf_dir))
     )
-    decoded = decode_cdc_auto(
+    decoded = decode_mixed(
         mixed,
         host="mysqlsrv1",
         uuid=F.md5(F.col("event_id").cast("string")),
@@ -801,15 +805,12 @@ def cdc_apply_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE shuffle on (table, pk); at 100 TB the same semantics
     run incrementally inside foreachBatch as a MERGE INTO against the
     snapshot store, with the window only over each micro-batch."""
-    from pyspark.sql import Window as W
-
     ev = filter_dml(_as_cdc_events(spark, sf_dir)).withColumn(
         "k", F.get_json_object("props", "$.k").cast("int")
     )
-    w = W.partitionBy("table", "k").orderBy(F.desc("wal_position"))
     return (
-        ev.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("action") != "delete"))
+        latest_per_key(ev, "table", "k")
+        .filter(F.col("action") != "delete")
         .select(
             "table",
             "k",
@@ -985,17 +986,14 @@ def cdc_point_in_time_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe reads only history up to the horizon; at 100 TB the same query
     hits the SCD2 table with `valid_from <= w AND (valid_to IS NULL OR
     valid_to > w)` and partition-prunes on the interval columns."""
-    from pyspark.sql import Window as W
-
     ev = (
         filter_dml(_as_cdc_events(spark, sf_dir))
         .filter(F.col("wal_position") <= PIT_WAL)
         .withColumn("k", F.get_json_object("props", "$.k").cast("int"))
     )
-    w = W.partitionBy("table", "k").orderBy(F.desc("wal_position"))
     return (
-        ev.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("action") != "delete"))
+        latest_per_key(ev, "table", "k")
+        .filter(F.col("action") != "delete")
         .select(
             "table",
             "k",

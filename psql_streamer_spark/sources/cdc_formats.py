@@ -1,26 +1,44 @@
-"""CDC envelope-variant decoders: wal2json v2 and Debezium.
+"""CDC envelope dialects: wal2json v2, Debezium, Maxwell and Canal.
 
 The reference decodes pgoutput wire tuples against a cached relation
-(source/postgres/postgres.go:298-355,379-428). Our engine ingests CDC as
-JSON (SURVEY §2.1 S1 mapping); this module is the analogue of that decode
-step for the two JSON envelope dialects a PostgreSQL CDC feed actually
-ships: wal2json (format-version 2, one JSON object per change) and
-Debezium's connector envelope. Each decoder normalizes its dialect into
-the engine's canonical Event envelope (schema.EVENT_SCHEMA) entirely with
-JVM-side expressions — `from_json` + column maps, no Python in the path —
-so the decode runs at scan speed inside WholeStageCodegen.
+(source/postgres/postgres.go:298-355,379-428) and picks its decoder with
+one `type` switch (source/source.go:23-37). Our engine ingests CDC as
+JSON (SURVEY §2.1 S1 mapping); this module is the analogue of that
+decode step for the JSON envelope dialects CDC feeds actually ship.
+
+One table, `DIALECTS`, holds each dialect's classifier probe, `from_json`
+schema and envelope builder; `decode_dialect` is the one decode body for
+every name in it and for `"auto"`, whose per-line dispatch is built from
+the same table. Every dialect normalizes into the engine's canonical
+Event envelope (schema.EVENT_SCHEMA) entirely with JVM-side expressions —
+`from_json` + column maps, no Python in the path — so the decode runs at
+scan speed inside WholeStageCodegen.
 
 Heterogeneous JSON payload values (numbers/bools/strings) are transported
 as their literal text in `map<string,string>` — the same lossless
 schema-on-read contract as the reference's `Columns map[string]interface{}`
 (event/event.go:33), with RelationRegistry projection (transforms.
 project_table) recovering types downstream.
+
+Validity is one rule for every dialect: a row gets a uuid only when its
+envelope parsed and, for a DML row, when its WAL position decoded.
+Anything else stays uuid-less, so validate_split (T5) routes it to the
+DLQ — the reference's decode-failure skip — while non-DML markers keep
+their uuid for filter_dml (T1) to drop.
 """
 
 from __future__ import annotations
 
+import functools
+import operator
+from collections.abc import Callable
+from typing import NamedTuple
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from psql_streamer_spark.schema import ACTIONS
+from psql_streamer_spark.transforms import once_per_jvm
 
 # wal2json format-version 2: one object per DML, actions I/U/D plus
 # B(egin)/C(ommit)/T(runcate)/M(essage). `columns` carries new values,
@@ -43,6 +61,31 @@ DEBEZIUM_SCHEMA = (
     "op:string, ts_ms:bigint>"
 )
 
+# Maxwell's daemon envelope: one JSON object per row change. type
+# insert/update/delete plus bootstrap-* (initial load) and DDL markers
+# (table-create/...); ts is UNIX seconds; position is the binlog
+# coordinate 'file.NNNNNN:offset'. data carries the row image for ALL
+# DML (Maxwell deletes ship the deleted row in `data`, unlike Debezium's
+# `before`); old carries only the CHANGED prior values on update.
+MAXWELL_SCHEMA = (
+    "database string, `table` string, type string, "
+    "ts bigint, xid bigint, position string, "
+    "data map<string,string>, old map<string,string>"
+)
+
+# Canal (Alibaba) flat-message envelope: one JSON object per BATCH of
+# row changes — `data` is an ARRAY of row images (the one dialect here
+# where a single message fans out to N events), `old` the index-aligned
+# partial prior images on update, `es` the MySQL execute time (ms), `ts`
+# canal's own processing time, `id` the canal batch id (the flat message
+# carries no binlog coordinate — the batch id is the orderable position
+# analogue), `isDdl` + an uppercase statement `type` for DDL.
+CANAL_SCHEMA = (
+    "data array<map<string,string>>, database string, es bigint, "
+    "id bigint, isDdl boolean, old array<map<string,string>>, "
+    "pkNames array<string>, `table` string, ts bigint, type string"
+)
+
 _WAL2JSON_ACTIONS = {
     "I": "insert",
     "U": "update",
@@ -60,6 +103,44 @@ _DEBEZIUM_OPS = {
     "d": "delete",
 }
 
+_MAXWELL_TYPES = {
+    "insert": "insert",
+    "bootstrap-insert": "insert",  # initial load = insert, like Debezium r
+    "update": "update",
+    "delete": "delete",
+}
+
+_CANAL_TYPES = {"INSERT": "insert", "UPDATE": "update", "DELETE": "delete"}
+
+# the envelope struct every builder returns; `uuid_ok` is the dialect's
+# "envelope parsed" guard, the uuid itself is stamped by the top-level
+# projection (the stamp may reference passthrough frame columns, and the
+# uuid() default is nondeterministic — both only valid at Project level)
+_ENVELOPE_FIELDS = (
+    "host", "database", "table", "action", "wal_position", "ts", "uuid_ok",
+    "columns",
+)
+
+
+def _cases(cases, otherwise) -> Column:
+    """A CaseWhen over (condition, value) pairs, first match wins."""
+    (cond, value), *rest = cases
+    out = F.when(cond, value)
+    for cond, value in rest:
+        out = out.when(cond, value)
+    return out.otherwise(otherwise)
+
+
+def _action(marker: Column, names: dict[str, str]) -> Column:
+    """A dialect's action marker -> the closed enum; any other marker keeps
+    its lowered text, a non-DML record filter_dml (T1) drops exactly like
+    the reference drops Begin/Commit (postgres.go:327-330)."""
+    return _cases(((marker == m, n) for m, n in names.items()), F.lower(marker))
+
+
+def _envelope(**fields: Column) -> Column:
+    return F.struct(*(fields[f].alias(f) for f in _ENVELOPE_FIELDS))
+
 
 def _entries_to_map(entries: Column) -> Column:
     """array<struct<name,type,value>> -> map<string,string> (values keep
@@ -75,201 +156,20 @@ def _entries_to_map(entries: Column) -> Column:
 def lsn_to_wal_position(lsn: Column) -> Column:
     """PostgreSQL LSN text ('hi/lo' in hex, e.g. '0/16B3748') -> the
     numeric WAL position the reference tracks (uint64: hi<<32 | lo).
-    Bitwise composition, not multiplication: Spark's long is signed, and
-    ANSI mode would raise on hi >= 2^31 where the same 64-bit pattern is a
-    valid uint64 to the reference (the sign flip only occurs past 8 EB of
-    WAL; ordering is preserved for every physically reachable LSN)."""
+    Each half must be 1-8 hex digits, otherwise the position is NULL (a
+    DML row then goes to the DLQ): garbage must not decode to 0, and a
+    low half past 32 bits would OR into the high half and collide with
+    another LSN. Bitwise composition, not multiplication: Spark's long is
+    signed, and ANSI mode would raise on hi >= 2^31 where the same 64-bit
+    pattern is a valid uint64 to the reference (the sign flip only occurs
+    past 8 EB of WAL; ordering is preserved for every physically
+    reachable LSN)."""
     hi = F.conv(F.split_part(lsn, F.lit("/"), F.lit(1)), 16, 10).cast("bigint")
     lo = F.conv(F.split_part(lsn, F.lit("/"), F.lit(2)), 16, 10).cast("bigint")
-    return F.shiftleft(hi, 32).bitwiseOR(lo).alias("wal_position")
-
-
-# --------------------------------------------------------------------------
-# Shared envelope struct-builders (r16): each dialect's decode logic lives
-# ONCE as an expression returning the canonical envelope as a struct —
-# (host, database, table, action, wal_position, ts, uuid_ok, columns) —
-# consumed both by its standalone decode_<dialect> and by the single-pass
-# decode_cdc_auto dispatch. `uuid_ok` is the dialect's "envelope parsed"
-# guard; the uuid itself is stamped by the caller's top-level projection
-# (the uuid expression may reference passthrough frame columns, and the
-# uuid() default is nondeterministic — both only valid at Project level).
-# --------------------------------------------------------------------------
-_ENVELOPE_FIELDS = (
-    "host", "database", "table", "action", "wal_position", "ts", "columns",
-)
-
-
-def _project_envelope(df: DataFrame, stamp: Column, extra=()) -> DataFrame:
-    """Expand a `__e` envelope struct into the canonical output columns,
-    stamping `uuid` from ``stamp`` only where the struct's uuid_ok guard
-    holds. Catalyst collapses the struct build + field extraction back to
-    the underlying expressions (SimplifyExtractValueOps), so the plan is
-    the same flat projection the pre-r16 decoders produced."""
-    cols = [
-        F.col("__e.host").alias("host"),
-        F.col("__e.database").alias("database"),
-        F.col("__e.table").alias("table"),
-        F.col("__e.action").alias("action"),
-        F.col("__e.wal_position").alias("wal_position"),
-        F.col("__e.ts").alias("ts"),
-        F.when(F.col("__e.uuid_ok"), stamp).alias("uuid"),
-        F.col("__e.columns").alias("columns"),
-    ]
-    return df.select(*cols, *extra)
-
-
-def _parsed_events(value: Column, schema: str, fn) -> Column:
-    """Let-binding for a single envelope parse: a 1-element array holding
-    from_json's result, mapped through ``fn`` — inside the lambda every
-    field access is a cheap lambda-variable read, so the (CodegenFallback,
-    non-CSE-able) JSON parse runs EXACTLY ONCE per row even when the
-    result feeds 8 struct fields inside a CaseWhen branch or a nested
-    transform (where Spark's subexpression elimination never applies —
-    measured 8 parses/row without this, OPTIMIZATION_r16.md)."""
-    return F.transform(F.array(F.from_json(value, schema)), fn)
-
-
-def _wal2json_event(value: Column, host: str, database: str) -> Column:
-    """array<envelope struct> (1 element), parse bound via _parsed_events."""
-    return _parsed_events(
-        value, WAL2JSON_SCHEMA, lambda p: _wal2json_struct(p, host, database)
-    )
-
-
-def _wal2json_struct(p: Column, host: str, database: str) -> Column:
-    mapped = None
-    for letter, name in _WAL2JSON_ACTIONS.items():
-        mapped = (
-            F.when(p["action"] == letter, name)
-            if mapped is None
-            else mapped.when(p["action"] == letter, name)
-        )
-    action = mapped.otherwise(F.lower(p["action"]))
-    payload = F.when(p["action"] == "D", p["identity"]).otherwise(p["columns"])
-    # wal2json stamps the commit time in the server's log_timezone, e.g.
-    # '... 10:15:30.123456+02'. The timestamp CAST parses the offset and
-    # converts to the (UTC) session zone — stripping it instead would shift
-    # event time by the server offset for any non-UTC feed.
-    ts = p["timestamp"].cast("timestamp")
-    return F.struct(
-        F.lit(host).alias("host"),
-        F.lit(database).alias("database"),
-        p["table"].alias("table"),
-        action.alias("action"),
-        lsn_to_wal_position(p["lsn"]).alias("wal_position"),
-        ts.alias("ts"),
-        # uuid ONLY for parsed records (every wal2json record carries an
-        # action): a malformed line must stay uuid-less so validate_split
-        # routes it to the DLQ, like the reference's decode-failure skip
-        p["action"].isNotNull().alias("uuid_ok"),
-        _entries_to_map(payload).alias("columns"),
-    )
-
-
-def decode_wal2json(
-    df: DataFrame,
-    value_col: str = "value",
-    host: str = "unknown",
-    database: str = "unknown",
-    uuid: Column | None = None,
-) -> DataFrame:
-    """wal2json v2 lines -> canonical Event envelope.
-
-    Action letters map to the closed enum; non-DML records (B/C/T/M) keep
-    their marker action so filter_dml (T1) drops them exactly like the
-    reference drops Begin/Commit (postgres.go:327-330). DELETE rows carry
-    their replica identity as the payload (`identity`), matching pgoutput's
-    old-tuple decode. Malformed JSON yields NULL fields -> DLQ split (T5).
-
-    `uuid` defaults to a fresh v4 per event (postgres.go:349); pass a
-    deterministic expression for oracle-compared outputs.
-    """
-    stamp = uuid if uuid is not None else F.expr("uuid()")
-    tagged = df.withColumn(
-        "__e",
-        F.explode_outer(
-            _wal2json_event(F.col(value_col).cast("string"), host, database)
-        ),
-    )
-    return _project_envelope(tagged, stamp)
-
-
-def decode_debezium(
-    df: DataFrame,
-    value_col: str = "value",
-    host: str | None = None,
-    uuid: Column | None = None,
-) -> DataFrame:
-    """Debezium envelopes -> canonical Event envelope.
-
-    op c/r -> insert (snapshot reads are initial-load inserts), u -> update,
-    d -> delete with the `before` image as payload (the replica identity the
-    reference decodes from pgoutput's old tuple). host defaults to the
-    connector's logical `source.name`; event time is source.ts_ms (the
-    commit timestamp), millisecond precision by Debezium's contract.
-    """
-    stamp = uuid if uuid is not None else F.expr("uuid()")
-    tagged = df.withColumn(
-        "__e",
-        F.explode_outer(
-            _debezium_event(F.col(value_col).cast("string"), host)
-        ),
-    )
-    return _project_envelope(tagged, stamp)
-
-
-def _debezium_event(value: Column, host: str | None) -> Column:
-    """array<envelope struct> (1 element), parse bound via _parsed_events."""
-    return _parsed_events(
-        value, DEBEZIUM_SCHEMA, lambda w: _debezium_struct(w, host)
-    )
-
-
-def _debezium_struct(wrapper: Column, host: str | None) -> Column:
-    p = wrapper["payload"]
-    mapped = None
-    for op, name in _DEBEZIUM_OPS.items():
-        mapped = (
-            F.when(p["op"] == op, name)
-            if mapped is None
-            else mapped.when(p["op"] == op, name)
-        )
-    action = mapped.otherwise(F.lower(p["op"]))
-    payload = F.when(p["op"] == "d", p["before"]).otherwise(p["after"])
-    host_col = F.lit(host) if host is not None else F.coalesce(
-        p["source"]["name"], F.lit("unknown")
-    )
-    return F.struct(
-        host_col.alias("host"),
-        F.coalesce(p["source"]["db"], F.lit("unknown")).alias("database"),
-        p["source"]["table"].alias("table"),
-        action.alias("action"),
-        p["source"]["lsn"].alias("wal_position"),
-        F.timestamp_millis(p["source"]["ts_ms"]).alias("ts"),
-        # uuid only when the envelope parsed (op is mandatory in Debezium)
-        p["op"].isNotNull().alias("uuid_ok"),
-        payload.alias("columns"),
-    )
-
-
-# Maxwell's daemon envelope: one JSON object per row change. type
-# insert/update/delete plus bootstrap-* (initial load) and DDL markers
-# (table-create/...); ts is UNIX seconds; position is the binlog
-# coordinate 'file.NNNNNN:offset'. data carries the row image for ALL
-# DML (Maxwell deletes ship the deleted row in `data`, unlike Debezium's
-# `before`); old carries only the CHANGED prior values on update.
-MAXWELL_SCHEMA = (
-    "database string, `table` string, type string, "
-    "ts bigint, xid bigint, position string, "
-    "data map<string,string>, old map<string,string>"
-)
-
-_MAXWELL_TYPES = {
-    "insert": "insert",
-    "bootstrap-insert": "insert",  # initial load = insert, like Debezium r
-    "update": "update",
-    "delete": "delete",
-}
+    return F.when(
+        lsn.rlike(r"\A[0-9A-Fa-f]{1,8}/[0-9A-Fa-f]{1,8}\z"),
+        F.shiftleft(hi, 32).bitwiseOR(lo),
+    ).alias("wal_position")
 
 
 def binlog_to_wal_position(position: Column) -> Column:
@@ -283,8 +183,7 @@ def binlog_to_wal_position(position: Column) -> Column:
     heartbeat line, junk the auto classifier routed here because it
     carried top-level type+position) must yield NULL — under Spark 4's
     default ANSI mode a plain CAST('') would throw and one poison line
-    would fail the whole foreachBatch epoch. Same defensive posture as
-    lsn_to_wal_position's F.conv."""
+    would fail the whole foreachBatch epoch."""
     file_seq = F.regexp_extract(
         F.split_part(position, F.lit(":"), F.lit(1)), r"(\d+)$", 1
     ).try_cast("bigint")
@@ -292,238 +191,276 @@ def binlog_to_wal_position(position: Column) -> Column:
     # MySQL binlog offsets are 64-bit: one transaction larger than
     # max_binlog_size can push a file past 4 GiB, and such an offset
     # would OR into the file-sequence bits and corrupt ordering
-    # SILENTLY. Yield NULL for out-of-range offsets instead (the same
-    # posture as try_cast on malformed positions) so the row routes to
-    # the DLQ split rather than mis-sorting the stream (r15 advice #2).
-    # The file sequence gets the symmetric guard (r16 advice): a
-    # sequence >= 2^31 would shiftleft into the sign bit and produce
-    # negative/colliding positions just as silently.
+    # SILENTLY. Yield NULL for out-of-range offsets instead, so the DML
+    # row routes to the DLQ rather than mis-sorting the stream. The file
+    # sequence gets the symmetric guard: a sequence >= 2^31 would
+    # shiftleft into the sign bit and collide just as silently.
     offset = F.when(offset < F.lit(1 << 32), offset)
     file_seq = F.when(file_seq < F.lit(1 << 31), file_seq)
     return F.shiftleft(file_seq, 32).bitwiseOR(offset).alias("wal_position")
 
 
-def decode_maxwell(
-    df: DataFrame,
-    value_col: str = "value",
-    host: str = "unknown",
-    uuid: Column | None = None,
-) -> DataFrame:
-    """Maxwell envelopes -> canonical Event envelope.
-
-    type insert/bootstrap-insert -> insert, update -> update, delete ->
-    delete; DDL / bootstrap markers keep their lowered type so filter_dml
-    (T1) drops them like every other dialect's non-DML records. The
-    payload is always `data` (Maxwell's delete image lives there); the
-    partial `old` image has no slot in the canonical envelope — the
-    reference's Event carries one Columns map (event/event.go:33) — so
-    update consumers needing prior values read the dialect directly.
-    Event time is the envelope's UNIX-seconds ts; the binlog coordinate
-    becomes the numeric WAL position (see binlog_to_wal_position).
-    Malformed JSON yields NULL fields -> DLQ split (T5); `uuid` defaults
-    to a fresh v4 per event, pass a deterministic expression for
-    oracle-compared outputs."""
-    stamp = uuid if uuid is not None else F.expr("uuid()")
-    tagged = df.withColumn(
-        "__e",
-        F.explode_outer(
-            _maxwell_event(F.col(value_col).cast("string"), host)
+def _wal2json(p: Column, host: str, database: str) -> Column:
+    """Host and database from config. DELETE rows carry their replica
+    identity as the payload (`identity`), matching pgoutput's old-tuple
+    decode. wal2json stamps the commit time in the server's log_timezone,
+    e.g. '... 10:15:30.123456+02'; the timestamp CAST parses the offset
+    and converts to the (UTC) session zone."""
+    return F.array(_envelope(
+        host=F.lit(host),
+        database=F.lit(database),
+        table=p["table"],
+        action=_action(p["action"], _WAL2JSON_ACTIONS),
+        wal_position=lsn_to_wal_position(p["lsn"]),
+        ts=p["timestamp"].cast("timestamp"),
+        uuid_ok=p["action"].isNotNull(),  # every wal2json record has one
+        columns=_entries_to_map(
+            F.when(p["action"] == "D", p["identity"]).otherwise(p["columns"])
         ),
-    )
-    return _project_envelope(tagged, stamp)
+    ))
 
 
-def _maxwell_event(value: Column, host: str) -> Column:
-    """array<envelope struct> (1 element), parse bound via _parsed_events."""
-    return _parsed_events(
-        value, MAXWELL_SCHEMA, lambda p: _maxwell_struct(p, host)
-    )
+def _debezium(w: Column, host: str, database: str) -> Column:
+    """Host (the connector's logical `source.name`) and database from the
+    envelope. op c/r -> insert (snapshot reads are initial-load inserts),
+    d -> delete with the `before` image as payload (the replica identity
+    the reference decodes from pgoutput's old tuple). Event time is
+    source.ts_ms (the commit timestamp), millisecond precision by
+    Debezium's contract. A DML envelope without `source.lsn` has no WAL
+    position and is dead-lettered."""
+    p = w["payload"]
+    return F.array(_envelope(
+        host=F.coalesce(p["source"]["name"], F.lit("unknown")),
+        database=F.coalesce(p["source"]["db"], F.lit("unknown")),
+        table=p["source"]["table"],
+        action=_action(p["op"], _DEBEZIUM_OPS),
+        wal_position=p["source"]["lsn"],
+        ts=F.timestamp_millis(p["source"]["ts_ms"]),
+        uuid_ok=p["op"].isNotNull(),  # op is mandatory in Debezium
+        columns=F.when(p["op"] == "d", p["before"]).otherwise(p["after"]),
+    ))
 
 
-def _maxwell_struct(p: Column, host: str) -> Column:
-    mapped = None
-    for t, name in _MAXWELL_TYPES.items():
-        mapped = (
-            F.when(p["type"] == t, name)
-            if mapped is None
-            else mapped.when(p["type"] == t, name)
-        )
-    action = mapped.otherwise(F.lower(p["type"]))
-    return F.struct(
-        F.lit(host).alias("host"),
-        F.coalesce(p["database"], F.lit("unknown")).alias("database"),
-        p["table"].alias("table"),
-        action.alias("action"),
-        binlog_to_wal_position(p["position"]).alias("wal_position"),
-        F.timestamp_seconds(p["ts"]).alias("ts"),
-        p["type"].isNotNull().alias("uuid_ok"),
-        p["data"].alias("columns"),
-    )
+def _maxwell(p: Column, host: str, database: str) -> Column:
+    """Host from config, database from the envelope. The payload is always
+    `data` (Maxwell's delete image lives there); the partial `old` image
+    has no slot in the canonical envelope — the reference's Event carries
+    one Columns map (event/event.go:33) — so update consumers needing
+    prior values read the dialect directly. Event time is the envelope's
+    UNIX-seconds ts; the binlog coordinate becomes the numeric WAL
+    position (see binlog_to_wal_position)."""
+    return F.array(_envelope(
+        host=F.lit(host),
+        database=F.coalesce(p["database"], F.lit("unknown")),
+        table=p["table"],
+        action=_action(p["type"], _MAXWELL_TYPES),
+        wal_position=binlog_to_wal_position(p["position"]),
+        ts=F.timestamp_seconds(p["ts"]),
+        uuid_ok=p["type"].isNotNull(),
+        columns=p["data"],
+    ))
 
 
-def classify_cdc_dialect(value: Column) -> Column:
-    """Per-line dialect classification on discriminating envelope keys —
-    `action` is wal2json v2's mandatory field, `payload.op` Debezium's,
-    `isDdl` Canal's (probed BEFORE Maxwell — both carry `type`, only
-    Canal carries `isDdl`), `type`+`position` Maxwell's; anything else (including malformed
-    JSON — get_json_object yields NULL) is 'unknown'. Pure JSON-path
-    probes, scan-speed, no full parse."""
-    return (
-        F.when(F.get_json_object(value, "$.action").isNotNull(), "wal2json")
-        .when(F.get_json_object(value, "$.payload.op").isNotNull(), "debezium")
-        .when(F.get_json_object(value, "$.isDdl").isNotNull(), "canal")
-        .when(
-            F.get_json_object(value, "$.type").isNotNull()
-            & F.get_json_object(value, "$.position").isNotNull(),
-            "maxwell",
-        )
-        .otherwise("unknown")
-    )
-
-
-def decode_cdc_auto(
-    df: DataFrame,
-    value_col: str = "value",
-    host: str = "unknown",
-    database: str = "unknown",
-    uuid: Column | None = None,
-) -> DataFrame:
-    """MIXED-feed decode: classify each line, route it through its
-    dialect's decoder, return one canonical envelope frame with a
-    `dialect` provenance column. A real relay rarely gets to assume one
-    clean dialect — a topic carries a Debezium backfill next to the
-    wal2json live feed, or an operator points the wrong feed at the
-    pipeline; this is the ingest form that absorbs that without config.
-
-    Shape (r16): ONE pass over the feed — classify each line once, then a
-    CaseWhen dispatch whose branches are the UNCHANGED per-dialect
-    envelope builders (the same struct expressions the standalone
-    decoders project from, so their golden fixtures carry over
-    verbatim). CaseWhen evaluates only the matched branch per row, so
-    each line pays exactly one full envelope parse; Canal's per-message
-    fan-out rides the same explode as an array of envelope elements. The
-    pre-r16 shape — five filtered branches unioned — re-scanned the
-    whole feed once per dialect and re-evaluated the classifier in every
-    branch: 5 passes over a 100 TB feed where one suffices (measured
-    8.8 s -> see OPTIMIZATION_r16.md). 'unknown' lines become envelope
-    rows with NULL action/uuid, so validate_split (T5) routes them to
-    the DLQ instead of dropping them silently — the reference's
-    decode-failure accounting."""
-    val = F.col(value_col).cast("string")
-    unknown_ev = F.struct(
-        F.lit(host).alias("host"),
-        F.lit(database).alias("database"),
-        F.lit(None).cast("string").alias("table"),
-        F.lit(None).cast("string").alias("action"),
-        F.lit(None).cast("bigint").alias("wal_position"),
-        F.lit(None).cast("timestamp").alias("ts"),
-        F.lit(False).alias("uuid_ok"),  # uuid-less -> DLQ (T5)
-        F.lit(None).cast("map<string,string>").alias("columns"),
-    )
-    d = F.col("__dialect")
-    # every builder already yields array<envelope> (1-element for the
-    # row-per-message dialects, per-data-element for canal)
-    events = (
-        F.when(d == "wal2json", _wal2json_event(val, host, database))
-        .when(d == "debezium", _debezium_event(val, None))
-        .when(d == "maxwell", _maxwell_event(val, host))
-        .when(d == "canal", _canal_events(val, host))
-        .otherwise(F.array(unknown_ev))
-    )
-    stamp = uuid if uuid is not None else F.expr("uuid()")
-    # explode_outer for the same InferFiltersFromGenerate reason as
-    # decode_canal: every branch yields >= 1 element, and plain explode
-    # makes the optimizer clone the whole dispatch CaseWhen into a
-    # size() > 0 Filter (measured 31 s vs 9 s on the sf0.1 mixed feed)
-    tagged = df.withColumn(
-        "__dialect", classify_cdc_dialect(val)
-    ).withColumn("__e", F.explode_outer(events))
-    return _project_envelope(
-        tagged, stamp, extra=[F.col("__dialect").alias("dialect")]
-    )
-
-
-# Canal (Alibaba) flat-message envelope: one JSON object per BATCH of
-# row changes — `data` is an ARRAY of row images (the one dialect here
-# where a single message fans out to N events), `old` the index-aligned
-# partial prior images on update, `es` the MySQL execute time (ms), `ts`
-# canal's own processing time, `id` the canal batch id (the flat message
-# carries no binlog coordinate — the batch id is the orderable position
-# analogue), `isDdl` + an uppercase statement `type` for DDL.
-CANAL_SCHEMA = (
-    "data array<map<string,string>>, database string, es bigint, "
-    "id bigint, isDdl boolean, old array<map<string,string>>, "
-    "pkNames array<string>, `table` string, ts bigint, type string"
-)
-
-_CANAL_TYPES = {"INSERT": "insert", "UPDATE": "update", "DELETE": "delete"}
-
-
-def decode_canal(
-    df: DataFrame,
-    value_col: str = "value",
-    host: str = "unknown",
-    uuid: Column | None = None,
-) -> DataFrame:
-    """Canal flat messages -> canonical Event envelope, ONE ROW PER
-    ELEMENT of `data` (explode_outer, so a DDL message with data=null
-    still yields its marker row for filter_dml to drop). INSERT/UPDATE/
-    DELETE map to the closed enum — DELETE's image rides `data` like
-    Maxwell's; isDdl messages keep their lowered statement type as the
-    non-DML marker. Event time is `es` (the source execute time, ms);
-    the batch id is the orderable position (the flat message has no
-    binlog coordinate). `uuid` defaults to a fresh v4 PER EXPLODED
-    EVENT; a deterministic expression shared by a multi-row batch would
-    collide — fixtures keep one row per message when hashing."""
-    stamp = uuid if uuid is not None else F.expr("uuid()")
-    # explode_outer, NOT explode: the array is never empty (the marker
-    # branch guarantees >= 1 element) so the two are semantically
-    # identical here, but plain explode triggers InferFiltersFromGenerate,
-    # which duplicates the ENTIRE envelope-parse expression into a
-    # size(...) > 0 Filter below the Generate — measured 3x on the mixed
-    # decode (31 s vs 9 s, OPTIMIZATION_r16.md).
-    tagged = df.withColumn(
-        "__e",
-        F.explode_outer(_canal_events(F.col(value_col).cast("string"), host)),
-    )
-    return _project_envelope(tagged, stamp)
-
-
-def _canal_events(value: Column, host: str) -> Column:
-    """array<envelope struct> — the one dialect where a single message
-    fans out: one element per `data` row image; a DDL/marker message
-    (data null or empty) still yields its single marker element, exactly
-    the old explode_outer semantics. Parse bound once via _parsed_events,
-    the per-message fan-out nested inside and flattened."""
-    return F.flatten(
-        _parsed_events(value, CANAL_SCHEMA, lambda p: _canal_inner(p, host))
-    )
-
-
-def _canal_inner(p: Column, host: str) -> Column:
-    mapped = None
-    for t, name in _CANAL_TYPES.items():
-        mapped = (
-            F.when(p["type"] == t, name)
-            if mapped is None
-            else mapped.when(p["type"] == t, name)
-        )
+def _canal(p: Column, host: str, database: str) -> Column:
+    """Host from config, database from the envelope; ONE ELEMENT per `data`
+    row image, and a DDL/marker message (data null or empty) still yields
+    its single marker element for filter_dml to drop. DELETE's image rides
+    `data` like Maxwell's; isDdl messages keep their lowered statement
+    type. Event time is `es` (the source execute time, ms); the batch id
+    is the orderable position. A deterministic uuid stamp shared by a
+    multi-row batch would collide — fixtures keep one row per message
+    when hashing."""
     action = F.when(p["isDdl"], F.lower(p["type"])).otherwise(
-        mapped.otherwise(F.lower(p["type"]))
+        _action(p["type"], _CANAL_TYPES)
     )
 
     def ev(columns: Column) -> Column:
-        return F.struct(
-            F.lit(host).alias("host"),
-            F.coalesce(p["database"], F.lit("unknown")).alias("database"),
-            p["table"].alias("table"),
-            action.alias("action"),
-            p["id"].alias("wal_position"),
-            F.timestamp_millis(p["es"]).alias("ts"),
-            p["type"].isNotNull().alias("uuid_ok"),
-            columns.alias("columns"),
+        return _envelope(
+            host=F.lit(host),
+            database=F.coalesce(p["database"], F.lit("unknown")),
+            table=p["table"],
+            action=action,
+            wal_position=p["id"],
+            ts=F.timestamp_millis(p["es"]),
+            uuid_ok=p["type"].isNotNull(),
+            columns=columns,
         )
 
     return F.when(
         F.size(p["data"]) > 0, F.transform(p["data"], ev)
     ).otherwise(F.array(ev(F.lit(None).cast("map<string,string>"))))
+
+
+class Dialect(NamedTuple):
+    probe: tuple[str, ...]  # JSON paths that are all present on its lines
+    schema: str  # from_json schema of one envelope
+    build: Callable[[Column, str, str], Column]  # -> array<envelope struct>
+
+
+# probed in this order: `action` is wal2json v2's mandatory field,
+# `payload.op` Debezium's, `isDdl` Canal's (BEFORE Maxwell — both carry
+# `type`, only Canal carries `isDdl`), `type`+`position` Maxwell's
+DIALECTS: dict[str, Dialect] = {
+    "wal2json": Dialect(("$.action",), WAL2JSON_SCHEMA, _wal2json),
+    "debezium": Dialect(("$.payload.op",), DEBEZIUM_SCHEMA, _debezium),
+    "canal": Dialect(("$.isDdl",), CANAL_SCHEMA, _canal),
+    "maxwell": Dialect(("$.type", "$.position"), MAXWELL_SCHEMA, _maxwell),
+}
+
+
+def classify_cdc_dialect(value: Column) -> Column:
+    """Per-line dialect classification on each table entry's
+    discriminating envelope keys; anything else (including malformed
+    JSON — get_json_object yields NULL) is 'unknown'. Pure JSON-path
+    probes, scan-speed, no full parse."""
+
+    def present(paths: tuple[str, ...]) -> Column:
+        return functools.reduce(
+            operator.and_, [F.get_json_object(value, p).isNotNull() for p in paths]
+        )
+
+    return _cases(
+        [(present(d.probe), name) for name, d in DIALECTS.items()], "unknown"
+    )
+
+
+def _parsed_events(value: Column, d: Dialect, host: str, database: str) -> Column:
+    """Let-binding for a single envelope parse: a 1-element array holding
+    from_json's result, mapped through the dialect's builder and
+    flattened — inside the lambda every field access is a cheap
+    lambda-variable read, so the (CodegenFallback, non-CSE-able) JSON
+    parse runs EXACTLY ONCE per row even when the result feeds 8 struct
+    fields inside a CaseWhen branch or a nested transform (where Spark's
+    subexpression elimination never applies — measured 8 parses/row
+    without this, OPTIMIZATION_r16.md)."""
+    return F.flatten(F.transform(
+        F.array(F.from_json(value, d.schema)),
+        lambda p: d.build(p, host, database),
+    ))
+
+
+@once_per_jvm
+def _exploded(
+    dialect: str, value_col: str, host: str, database: str
+) -> tuple[Column | None, Column]:
+    """(classifier or None, explode_outer of the envelope array), built
+    once per JVM: a Column call costs about ten py4j round trips, and the
+    four-dialect auto dispatch is thousands of them.
+
+    explode_outer, NOT explode: every branch yields >= 1 element, so the
+    two agree here, but plain explode triggers InferFiltersFromGenerate,
+    which clones the ENTIRE envelope-parse expression into a size() > 0
+    Filter below the Generate — measured 3x on the mixed decode (31 s vs
+    9 s on the sf0.1 mixed feed, OPTIMIZATION_r16.md)."""
+    val = F.col(value_col).cast("string")
+    if dialect == "auto":
+        classifier, events = classify_cdc_dialect(val), _dispatch(val, host, database)
+    else:
+        classifier = None
+        events = _parsed_events(val, DIALECTS[dialect], host, database)
+    return classifier, F.explode_outer(events)
+
+
+def _dispatch(value: Column, host: str, database: str) -> Column:
+    """The auto decode's one pass over the feed: the line's `__dialect`
+    picks its table entry's builder in a CaseWhen, which evaluates only
+    the matched branch, so each line pays exactly one envelope parse.
+    'unknown' lines become uuid-less rows the DLQ split keeps, never a
+    silent drop."""
+    unknown = _envelope(
+        host=F.lit(host),
+        database=F.lit(database),
+        table=F.lit(None).cast("string"),
+        action=F.lit(None).cast("string"),
+        wal_position=F.lit(None).cast("bigint"),
+        ts=F.lit(None).cast("timestamp"),
+        uuid_ok=F.lit(False),
+        columns=F.lit(None).cast("map<string,string>"),
+    )
+    return _cases(
+        [(F.col("__dialect") == name, _parsed_events(value, d, host, database))
+         for name, d in DIALECTS.items()],
+        F.array(unknown),
+    )
+
+
+def _projection(stamp: Column, provenance: bool) -> tuple[Column, ...]:
+    """The `__e` envelope struct -> the canonical output columns. Catalyst
+    collapses the struct build + field extraction back to the underlying
+    expressions (SimplifyExtractValueOps), so the plan is a flat
+    projection. The uuid is stamped only where the envelope parsed and a
+    DML row carries a WAL position."""
+    e = {f: F.col(f"__e.{f}") for f in _ENVELOPE_FIELDS}
+    unplaced = e["action"].isin(*ACTIONS) & e["wal_position"].isNull()
+    uuid = F.when(e["uuid_ok"] & ~unplaced, stamp).alias("uuid")
+    cols = [uuid if f == "uuid_ok" else e[f].alias(f) for f in _ENVELOPE_FIELDS]
+    if provenance:
+        cols.append(F.col("__dialect").alias("dialect"))
+    return tuple(cols)
+
+
+@once_per_jvm
+def _default_projection(provenance: bool) -> tuple[Column, ...]:
+    """The projection with the default stamp, a fresh v4 uuid per event
+    (postgres.go:349)."""
+    return _projection(F.expr("uuid()"), provenance)
+
+
+def _decode(
+    df: DataFrame,
+    dialect: str,
+    value_col: str,
+    host: str,
+    database: str,
+    uuid: Column | None,
+    provenance: bool,
+) -> DataFrame:
+    """The one decode body behind decode_dialect and decode_mixed."""
+    classifier, exploded = _exploded(dialect, value_col, host, database)
+    if classifier is not None:
+        df = df.withColumn("__dialect", classifier)
+    cols = (
+        _default_projection(provenance) if uuid is None
+        else _projection(uuid, provenance)
+    )
+    return df.withColumn("__e", exploded).select(*cols)
+
+
+def decode_dialect(
+    df: DataFrame,
+    dialect: str,
+    *,
+    value_col: str = "value",
+    host: str = "unknown",
+    database: str = "unknown",
+    uuid: Column | None = None,
+) -> DataFrame:
+    """Decode ``value_col`` lines of one `DIALECTS` entry — or of a mixed
+    feed with ``dialect="auto"``, classified per line — into the canonical
+    Event envelope.
+
+    Each dialect stamps as its wire format allows: wal2json takes host
+    and database from the arguments, maxwell and canal take host from the
+    arguments and database from the envelope, debezium takes both from
+    the envelope. Markers that are not DML keep their lowered action so
+    filter_dml (T1) drops them. Malformed JSON, an unknown line under
+    auto, and a DML row whose WAL position did not decode stay uuid-less
+    -> DLQ split (T5). `uuid` defaults to a fresh v4 per event; pass a
+    deterministic expression for oracle-compared outputs."""
+    return _decode(df, dialect, value_col, host, database, uuid, False)
+
+
+def decode_mixed(
+    df: DataFrame,
+    *,
+    value_col: str = "value",
+    host: str = "unknown",
+    database: str = "unknown",
+    uuid: Column | None = None,
+) -> DataFrame:
+    """``decode_dialect(df, "auto")`` plus a `dialect` provenance column
+    naming the table entry (or 'unknown') each line was classified as.
+    A real relay rarely gets to assume one clean dialect — a topic
+    carries a Debezium backfill next to the wal2json live feed — and
+    this is the ingest form that shows which is which."""
+    return _decode(df, "auto", value_col, host, database, uuid, True)

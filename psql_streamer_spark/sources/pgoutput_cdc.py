@@ -7,7 +7,7 @@ capability over a *captured* stream — a DataFrame of frames, e.g. a parquet
 of (seq, wal_position, value binary) — shaped for Spark's execution model:
 
 1. ``parse_stream`` — the only Python in the path: an Arrow-batched
-   ``mapInPandas`` pass applying the pure parser (pgoutput_wire.py) to each
+   ``mapInArrow`` pass applying the pure parser (pgoutput_wire.py) to each
    frame. Binary varlen protocol parse is the textbook case the built-in
    expression language genuinely cannot express.
 2. Relation resolution — relation frames are found with a cheap JVM-side
@@ -31,8 +31,6 @@ transforms.validate_split instead of killing the job.
 from __future__ import annotations
 
 from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F

@@ -124,9 +124,9 @@ class CdcPipeline:
         self.checkpoint_dir = checkpoint_dir
         self.dlq_sink = dlq_sink
         # wire-format decoder: raw lines -> Event envelope. Defaults to the
-        # reference's own JSON wire format; sources/cdc_formats.py provides
-        # decode_wal2json / decode_debezium for the other dialects a PG CDC
-        # feed ships (the reference's `type` switch, source/source.go:23-37)
+        # reference's own JSON wire format; sources/cdc_formats.decode_dialect
+        # decodes every other JSON dialect a CDC feed ships, one table entry
+        # each (the reference's `type` switch, source/source.go:23-37)
         self.decoder = decoder if decoder is not None else decode_cdc_json
         self.max_files_per_trigger = max_files_per_trigger
         self.processing_interval = processing_interval

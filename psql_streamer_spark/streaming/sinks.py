@@ -309,8 +309,9 @@ class SnapshotSink:
         return spark.read.parquet(os.path.join(self.path, v))
 
     def write(self, batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Window as W
         from pyspark.sql import functions as F
+
+        from psql_streamer_spark.transforms import latest_per_key
 
         spark = batch_df.sparkSession
         incoming = batch_df.select(
@@ -322,22 +323,9 @@ class SnapshotSink:
         )
         cur = self._stored(spark)
         merged = incoming if cur is None else cur.unionByName(incoming)
-        # at equal wal_position a delete tombstone must WIN (anti-
-        # resurrection): plain desc(action) would rank 'update' above
-        # 'delete'; the trailing desc(action) only breaks insert-vs-update
-        # ties deterministically
-        w = W.partitionBy("table", "row_key").orderBy(
-            F.desc("wal_position"),
-            F.desc(F.col("action") == "delete"),
-            F.desc("action"),
-        )
         # keep the winning row even when it is a delete (tombstone): it
         # must continue to outrank older replayed events in future merges
-        latest = (
-            merged.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        latest = latest_per_key(merged, "table", "row_key")
         version = f"v{batch_id:012d}"
         latest.write.mode("overwrite").parquet(os.path.join(self.path, version))
         # atomic pointer swap: readers see the old or the new version,

@@ -20,7 +20,7 @@ import functools
 from collections.abc import Callable
 
 from pyspark import SparkContext
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from psql_streamer_spark.schema import ACTIONS, CDC_JSON_SCHEMA
@@ -192,6 +192,24 @@ def validate_split(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     (commit-and-skip); we keep them addressable as a DLQ branch so the
     poison rows stay queryable instead of vanishing into a log line."""
     return df.filter(is_valid_event(df)), df.filter(_invalid_event())
+
+
+# -- latest-wins per key (the consumer's merge) -----------------------------
+def latest_per_key(df: DataFrame, *keys: str) -> DataFrame:
+    """One row per key: the highest wal_position wins. At an equal
+    wal_position a delete wins (a tombstone must keep outranking an older
+    replayed event, or the row resurrects), then the greater action, so
+    the winner never depends on row order. The one rule SnapshotSink and
+    the batch state queries share."""
+    return df.withColumn("_rn", _latest_rank(keys)).filter("_rn = 1").drop("_rn")
+
+
+@once_per_jvm
+def _latest_rank(keys: tuple[str, ...]) -> Column:
+    w = Window.partitionBy(*keys).orderBy(
+        F.desc("wal_position"), F.desc(F.col("action") == "delete"), F.desc("action")
+    )
+    return F.row_number().over(w)
 
 
 # -- T6: passthrough serialization (sink/kafka/passthrough.go:22-32) --------

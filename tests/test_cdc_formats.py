@@ -10,8 +10,8 @@ import json
 from pyspark.sql import functions as F
 
 from psql_streamer_spark.sources.cdc_formats import (
-    decode_debezium,
-    decode_wal2json,
+    decode_dialect,
+    decode_mixed,
     lsn_to_wal_position,
 )
 from psql_streamer_spark.transforms import filter_dml, validate_split
@@ -87,7 +87,9 @@ def _df(spark, *lines):
 
 
 def test_wal2json_insert_decodes_types_and_lsn(spark):
-    row = decode_wal2json(_df(spark, W2J_INSERT), host="h1", database="d1").first()
+    row = decode_dialect(
+        _df(spark, W2J_INSERT), "wal2json", host="h1", database="d1"
+    ).first()
     assert row.host == "h1" and row.database == "d1"
     assert row.table == "users" and row.action == "insert"
     # lsn '1/6B3748' -> 1<<32 | 0x6B3748
@@ -99,7 +101,9 @@ def test_wal2json_insert_decodes_types_and_lsn(spark):
 
 
 def test_wal2json_delete_uses_identity_and_begin_is_filtered(spark):
-    decoded = decode_wal2json(_df(spark, W2J_INSERT, W2J_DELETE, W2J_BEGIN))
+    decoded = decode_dialect(
+        _df(spark, W2J_INSERT, W2J_DELETE, W2J_BEGIN), "wal2json"
+    )
     assert decoded.count() == 3  # decode keeps protocol records...
     dml = filter_dml(decoded).orderBy("wal_position").collect()
     assert [r.action for r in dml] == ["delete", "insert"]  # ...T1 drops B
@@ -109,7 +113,7 @@ def test_wal2json_delete_uses_identity_and_begin_is_filtered(spark):
 
 
 def test_wal2json_malformed_goes_to_dlq(spark):
-    decoded = decode_wal2json(_df(spark, W2J_INSERT, "not json at all"))
+    decoded = decode_dialect(_df(spark, W2J_INSERT, "not json at all"), "wal2json")
     valid, dlq = validate_split(decoded)
     assert valid.count() == 1 and dlq.count() == 1
     assert dlq.first().table is None  # from_json NULLed every field
@@ -117,7 +121,7 @@ def test_wal2json_malformed_goes_to_dlq(spark):
 
 def test_debezium_create_and_snapshot_read_normalize_to_insert(spark):
     read = DBZ_CREATE.replace('"op": "c"', '"op": "r"')
-    rows = decode_debezium(_df(spark, DBZ_CREATE, read)).collect()
+    rows = decode_dialect(_df(spark, DBZ_CREATE, read), "debezium").collect()
     assert [r.action for r in rows] == ["insert", "insert"]
     r = rows[0]
     assert r.host == "pg1" and r.database == "appdb" and r.table == "users"
@@ -128,25 +132,54 @@ def test_debezium_create_and_snapshot_read_normalize_to_insert(spark):
 
 
 def test_debezium_delete_reads_before_image(spark):
-    r = decode_debezium(_df(spark, DBZ_DELETE)).first()
+    r = decode_dialect(_df(spark, DBZ_DELETE), "debezium").first()
     assert r.action == "delete"
     assert r.columns == {"id": "42"}
     assert r.wal_position == 123456999
 
 
 def test_lsn_conversion_expression(spark):
-    df = spark.createDataFrame(
-        [("0/0",), ("0/1",), ("1/6B3748",), ("7FFFFFFF/FFFFFFFF",)], ["lsn"]
-    )
+    good = ["0/0", "0/1", "1/6B3748", "7FFFFFFF/FFFFFFFF", "a/ff"]
+    # garbage must not decode to 0, and a low half past 32 bits would
+    # collide with another LSN ('0/1FFFFFFFF' == '1/FFFFFFFF')
+    bad = ["zz/qq", "0/1FFFFFFFF", "123456789/0", "0/", "/1", "0", "", "0/1/2",
+           "0/1\n", None]
+    df = spark.createDataFrame([(x,) for x in good + bad], "lsn string")
     got = [r[0] for r in df.select(lsn_to_wal_position(F.col("lsn"))).collect()]
-    assert got == [0, 1, (1 << 32) + 0x6B3748, (0x7FFFFFFF << 32) + 0xFFFFFFFF]
+    assert got == [
+        0, 1, (1 << 32) + 0x6B3748, (0x7FFFFFFF << 32) + 0xFFFFFFFF, (10 << 32) + 0xFF,
+    ] + [None] * len(bad)
+
+
+def test_dml_row_without_wal_position_is_dead_lettered(spark):
+    """One validity rule for every dialect: a DML row whose WAL position
+    did not decode goes to the DLQ; a marker row without one is still
+    only dropped by filter_dml."""
+    no_lsn = json.loads(W2J_INSERT)
+    del no_lsn["lsn"]
+    bad_lsn = W2J_INSERT.replace('"1/6B3748"', '"zz/qq"')
+    begin = json.dumps({"action": "B", "timestamp": "2024-03-01 10:15:30.1+00"})
+    valid, dlq = validate_split(decode_dialect(
+        _df(spark, W2J_INSERT, json.dumps(no_lsn), bad_lsn, begin), "wal2json"
+    ))
+    assert sorted(r.action for r in valid.collect()) == ["begin", "insert"]
+    assert dlq.count() == 2
+    assert [r.action for r in filter_dml(valid).collect()] == ["insert"]
+
+    # a Debezium envelope without source.lsn is dead-lettered too
+    dbz = json.loads(DBZ_CREATE)
+    del dbz["payload"]["source"]["lsn"]
+    valid, dlq = validate_split(decode_dialect(
+        _df(spark, DBZ_CREATE, json.dumps(dbz)), "debezium"
+    ))
+    assert valid.count() == 1 and dlq.count() == 1
 
 
 def test_wal2json_non_utc_offset_converts_to_utc(spark):
     """wal2json stamps commit time in the server's log_timezone; a '+02'
     feed must convert to UTC, not have its offset stripped."""
     line = W2J_INSERT.replace("10:15:30.123456+00", "10:15:30.123456+02")
-    row = decode_wal2json(_df(spark, line)).first()
+    row = decode_dialect(_df(spark, line), "wal2json").first()
     assert row.ts.isoformat() == "2024-03-01T08:15:30.123456"
 
 
@@ -195,9 +228,7 @@ MXW_DDL = json.dumps(
 
 
 def test_maxwell_insert_decodes_coordinates_and_payload(spark):
-    from psql_streamer_spark.sources.cdc_formats import decode_maxwell
-
-    row = decode_maxwell(_df(spark, MXW_INSERT), host="m1").first()
+    row = decode_dialect(_df(spark, MXW_INSERT), "maxwell", host="m1").first()
     assert (row.host, row.database, row.table, row.action) == (
         "m1",
         "shop",
@@ -217,12 +248,10 @@ def test_maxwell_insert_decodes_coordinates_and_payload(spark):
 
 
 def test_maxwell_delete_image_rides_data_and_rotation_orders(spark):
-    from psql_streamer_spark.sources.cdc_formats import decode_maxwell
-
     rows = {
         r.action: r
-        for r in decode_maxwell(
-            _df(spark, MXW_INSERT, MXW_DELETE)
+        for r in decode_dialect(
+            _df(spark, MXW_INSERT, MXW_DELETE), "maxwell"
         ).collect()
     }
     # Maxwell deletes carry the deleted row in `data` (no `before` slot)
@@ -232,9 +261,7 @@ def test_maxwell_delete_image_rides_data_and_rotation_orders(spark):
 
 
 def test_maxwell_bootstrap_normalizes_and_ddl_is_dropped(spark):
-    from psql_streamer_spark.sources.cdc_formats import decode_maxwell
-
-    decoded = decode_maxwell(_df(spark, MXW_BOOTSTRAP, MXW_DDL))
+    decoded = decode_dialect(_df(spark, MXW_BOOTSTRAP, MXW_DDL), "maxwell")
     assert [r.action for r in decoded.collect()] == [
         "insert",
         "table-create",
@@ -243,9 +270,7 @@ def test_maxwell_bootstrap_normalizes_and_ddl_is_dropped(spark):
 
 
 def test_maxwell_malformed_line_routes_to_dlq(spark):
-    from psql_streamer_spark.sources.cdc_formats import decode_maxwell
-
-    decoded = decode_maxwell(_df(spark, MXW_INSERT, "{broken"))
+    decoded = decode_dialect(_df(spark, MXW_INSERT, "{broken"), "maxwell")
     valid, dlq = validate_split(decoded)
     assert valid.count() == 1 and dlq.count() == 1
 
@@ -272,25 +297,19 @@ def test_dialect_classifier_discriminates_all_fixtures(spark):
 
 
 def test_auto_decode_routes_each_line_like_its_clean_decoder(spark):
-    from psql_streamer_spark.sources.cdc_formats import (
-        decode_cdc_auto,
-        decode_debezium,
-        decode_maxwell,
-    )
-
     mixed = _df(spark, W2J_INSERT, DBZ_CREATE, MXW_DELETE, "zzz not json")
-    out = decode_cdc_auto(mixed, host="h0", database="d0")
+    out = decode_mixed(mixed, host="h0", database="d0")
     rows = {r.dialect: r for r in out.collect()}
     assert set(rows) == {"wal2json", "debezium", "maxwell", "unknown"}
     # spot-parity with the clean decoders on the same lines
-    dbz = decode_debezium(_df(spark, DBZ_CREATE)).first()
+    dbz = decode_dialect(_df(spark, DBZ_CREATE), "debezium").first()
     assert (
         rows["debezium"].table,
         rows["debezium"].action,
         rows["debezium"].wal_position,
         rows["debezium"].columns,
     ) == (dbz.table, dbz.action, dbz.wal_position, dbz.columns)
-    mxw = decode_maxwell(_df(spark, MXW_DELETE), host="h0").first()
+    mxw = decode_dialect(_df(spark, MXW_DELETE), "maxwell", host="h0").first()
     assert (
         rows["maxwell"].table,
         rows["maxwell"].action,
@@ -307,7 +326,6 @@ def test_maxwell_garbage_position_yields_null_not_ansi_crash(spark):
     """Regression: a heartbeat-ish line with a non-'file:offset'
     position must decode with NULL wal_position (try_cast), not throw
     CAST_INVALID_INPUT under ANSI mode and kill the epoch."""
-    from psql_streamer_spark.sources.cdc_formats import decode_maxwell
 
     line = json.dumps(
         {
@@ -319,8 +337,12 @@ def test_maxwell_garbage_position_yields_null_not_ansi_crash(spark):
             "data": {"id": "1"},
         }
     )
-    row = decode_maxwell(_df(spark, line)).first()
+    decoded = decode_dialect(_df(spark, line), "maxwell")
+    row = decoded.first()
     assert row.action == "insert" and row.wal_position is None
+    # an insert with no position is dead-lettered, not delivered
+    valid, dlq = validate_split(decoded)
+    assert valid.count() == 0 and dlq.count() == 1
 
 
 CNL_BATCH = json.dumps(
@@ -367,9 +389,7 @@ CNL_DDL = json.dumps(
 
 
 def test_canal_batch_fans_out_one_event_per_data_element(spark):
-    from psql_streamer_spark.sources.cdc_formats import decode_canal
-
-    rows = decode_canal(_df(spark, CNL_BATCH), host="c1").collect()
+    rows = decode_dialect(_df(spark, CNL_BATCH), "canal", host="c1").collect()
     assert len(rows) == 2  # the dialect's distinguishing feature
     assert {r.columns["id"] for r in rows} == {"1", "2"}
     for r in rows:
@@ -388,9 +408,7 @@ def test_canal_batch_fans_out_one_event_per_data_element(spark):
 
 
 def test_canal_delete_image_and_ddl_marker(spark):
-    from psql_streamer_spark.sources.cdc_formats import decode_canal
-
-    decoded = decode_canal(_df(spark, CNL_DELETE, CNL_DDL))
+    decoded = decode_dialect(_df(spark, CNL_DELETE, CNL_DDL), "canal")
     rows = {r.action: r for r in decoded.collect()}
     assert rows["delete"].columns == {"id": "9"}  # image rides data
     assert rows["create"].columns is None  # DDL marker, data=null kept
@@ -398,11 +416,7 @@ def test_canal_delete_image_and_ddl_marker(spark):
 
 
 def test_classifier_and_auto_dispatch_handle_canal(spark):
-    from psql_streamer_spark.sources.cdc_formats import (
-        classify_cdc_dialect,
-        decode_canal,
-        decode_cdc_auto,
-    )
+    from psql_streamer_spark.sources.cdc_formats import classify_cdc_dialect
 
     got = (
         _df(spark, CNL_BATCH, CNL_DDL, MXW_INSERT)
@@ -413,12 +427,12 @@ def test_classifier_and_auto_dispatch_handle_canal(spark):
     # untouched by the new probe
     assert [r.d for r in got] == ["canal", "canal", "maxwell"]
 
-    out = decode_cdc_auto(_df(spark, CNL_BATCH, MXW_INSERT), host="h0")
+    out = decode_mixed(_df(spark, CNL_BATCH, MXW_INSERT), host="h0")
     by_dialect = {}
     for r in out.collect():
         by_dialect.setdefault(r.dialect, []).append(r)
     assert len(by_dialect["canal"]) == 2 and len(by_dialect["maxwell"]) == 1
-    clean = decode_canal(_df(spark, CNL_BATCH), host="h0").collect()
+    clean = decode_dialect(_df(spark, CNL_BATCH), "canal", host="h0").collect()
     assert sorted(
         (r.table, r.action, r.wal_position, r.columns["id"])
         for r in by_dialect["canal"]
@@ -449,3 +463,36 @@ def test_binlog_offset_past_4gib_yields_null_not_corrupt_order(spark):
     ).collect()
     assert got[0].wp == (7 << 32) | 1024
     assert got[1].wp is None and got[2].wp is None
+    # and the decoded row really lands in the DLQ split
+    past = MXW_INSERT.replace("master.000006:800911", f"master.000006:{1 << 32}")
+    valid, dlq = validate_split(
+        decode_dialect(_df(spark, MXW_INSERT, past), "maxwell")
+    )
+    assert valid.count() == 1 and dlq.count() == 1
+    assert dlq.first().wal_position is None
+
+
+def test_one_dialect_table():
+    """One dialect table: every JSON dialect decodes through one body (one
+    envelope parse, one explode_outer), the only decoders are the table's
+    entry points, and the config picks a dialect by name from the table."""
+    import ast
+    import inspect
+
+    import psql_streamer_spark.config as config
+    from psql_streamer_spark.sources import cdc_formats
+
+    calls = [
+        n.func.attr for n in ast.walk(ast.parse(inspect.getsource(cdc_formats)))
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+    ]
+    assert calls.count("explode_outer") == 1 and calls.count("from_json") == 1
+    assert {n for n in dir(cdc_formats) if n.startswith("decode_")} == {
+        "decode_dialect", "decode_mixed",
+    }
+    imported = {
+        a.name for n in ast.walk(ast.parse(inspect.getsource(config)))
+        if isinstance(n, ast.ImportFrom) and n.module.endswith(".cdc_formats")
+        for a in n.names
+    }
+    assert imported == {"DIALECTS", "decode_dialect"}

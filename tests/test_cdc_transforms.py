@@ -20,6 +20,7 @@ from psql_streamer_spark.transforms import (
     decode_cdc_json,
     drop_empty_values,
     filter_dml,
+    latest_per_key,
     serialize_passthrough,
     validate_split,
     with_default_key,
@@ -145,6 +146,25 @@ def test_once_per_jvm_memoizes_per_arguments_and_jvm(spark, monkeypatch):
     assert build(maxsize + 9) is build(maxsize + 9)
     assert len(built) == maxsize + 10
     assert build.cache_info().currsize == maxsize
+
+
+def test_latest_per_key_breaks_wal_ties_delete_first(spark):
+    """The one latest-wins rule: per key the highest WAL wins; on a WAL tie
+    a delete wins, then the greater action, whatever the row order."""
+    rows = [
+        ("t", "1", "insert", 5), ("t", "1", "update", 7),
+        ("t", "1", "delete", 7), ("t", "1", "insert", 7),
+        ("t", "2", "insert", 3), ("t", "2", "update", 3),
+        ("u", "1", "insert", 1),
+    ]
+    for order in (rows, rows[::-1]):
+        df = spark.createDataFrame(
+            order, "table string, k string, action string, wal_position long"
+        )
+        got = sorted(map(tuple, latest_per_key(df, "table", "k").collect()))
+        assert got == [
+            ("t", "1", "delete", 7), ("t", "2", "update", 3), ("u", "1", "insert", 1),
+        ]
 
 
 def test_serialize_roundtrip(spark, raw_df):

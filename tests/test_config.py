@@ -14,6 +14,7 @@ from psql_streamer_spark.config import (
     compile_config,
     parse_duration_ms,
 )
+from psql_streamer_spark.sources.cdc_formats import DIALECTS
 from psql_streamer_spark.streaming.sinks import KafkaSink, MemorySink, NoopSink
 
 
@@ -165,12 +166,24 @@ _KAFKA = {"type": "kafka", "hosts": ["b1:9092"], "topicFallback": "fb"}
          "Unable to init sink 'k': tableTopicMapping should be a table of string"),
         (lambda c: c["sink"].update(k={**_KAFKA, "topicFallback": 5}),
          "Unable to init sink 'k': topicFallback should be a string"),
+        # a list is unhashable and no dialect name
+        (lambda c: c["source"]["pg1"].update(dialect=["maxwell"]),
+         "Unable to init source 'pg1': unknown dialect"),
+        # host/database become string envelope columns
+        (lambda c: c["source"]["pg1"].update(dialect="wal2json", host=5),
+         "Unable to init source 'pg1': host should be a string"),
+        (lambda c: c["source"]["pg1"].update(dialect="auto", database=["d"]),
+         "Unable to init source 'pg1': database should be a string"),
+        (lambda c: c["source"]["pg1"].update(type="file_pgoutput", host=1.5),
+         "Unable to init source 'pg1': host should be a string"),
     ],
     ids=["acks_all", "acks_none", "attempts_3x", "parquet_no_path",
          "parquet_epoch_no_path", "snapshot_no_path", "ticker_abc",
          "ticker_nan", "ticker_inf", "hosts_str", "partition_by_str",
          "sources_str", "http_no_port", "http_named_port", "http_port_range",
-         "mapping_str", "mapping_str_stub", "mapping_int_topic", "fallback_int"],
+         "mapping_str", "mapping_str_stub", "mapping_int_topic", "fallback_int",
+         "dialect_list", "dialect_host_int", "auto_database_list",
+         "pgoutput_host_float"],
 )
 def test_bad_values_raise_config_error(spark, tmp_path, edit, match):
     """A bad value is a ConfigError naming what it was for, never a raw
@@ -415,16 +428,49 @@ def test_negative_mux_batch_knobs_are_fatal(spark, tmp_path):
             compile_config(spark, cfg(batchFlushInterval=bad))
 
 
-def test_file_cdc_dialect_knob_selects_decoder(spark, tmp_path):
+_MAXWELL_LINE = json.dumps(
+    {
+        "database": "shop",
+        "table": "orders",
+        "type": "insert",
+        "ts": 1709287530,
+        "position": "master.000002:77",
+        "data": {"id": "5"},
+    }
+)
+# one insert per dialect, and the envelope it must decode to under a
+# source with host "mhost" and database "mdb": wal2json stamps both from
+# config, maxwell and canal the host only, debezium neither
+_DIALECT_LINES = {
+    "wal2json": (
+        json.dumps({"action": "I", "table": "orders", "lsn": "2/4D",
+                    "columns": [{"name": "id", "value": "5"}]}),
+        ("mhost", "mdb", "orders", "insert", (2 << 32) | 77),
+    ),
+    "debezium": (
+        json.dumps({"payload": {"op": "c", "after": {"id": "5"}, "source": {
+            "name": "pg1", "db": "appdb", "table": "orders", "lsn": 77}}}),
+        ("pg1", "appdb", "orders", "insert", 77),
+    ),
+    "maxwell": (
+        _MAXWELL_LINE, ("mhost", "shop", "orders", "insert", (2 << 32) | 77)
+    ),
+    "canal": (
+        json.dumps({"data": [{"id": "5"}], "database": "shop", "id": 77,
+                    "isDdl": False, "table": "orders", "type": "INSERT"}),
+        ("mhost", "shop", "orders", "insert", 77),
+    ),
+    "auto": (
+        _MAXWELL_LINE, ("mhost", "shop", "orders", "insert", (2 << 32) | 77)
+    ),
+}
+
+
+@pytest.mark.parametrize("dialect", [*DIALECTS, "auto"])
+def test_file_cdc_dialect_knob_selects_decoder(spark, tmp_path, dialect):
     """`dialect` on a file_cdc source swaps the pipeline's decoder for
     the matching cdc_formats decoder at COMPILE time; an unknown dialect
     is fatal at load (configLoad parity), not at stream start."""
-    import json as _json
-
-    import pytest as _pytest
-
-    from psql_streamer_spark.config import ConfigError, compile_config
-
     src = tmp_path / "src_dialect"
     src.mkdir()
     conf = {
@@ -433,49 +479,29 @@ def test_file_cdc_dialect_knob_selects_decoder(spark, tmp_path):
             "mx1": {
                 "type": "file_cdc",
                 "path": str(src),
-                "dialect": "maxwell",
+                "dialect": dialect,
                 "host": "mhost",
+                "database": "mdb",
             }
         },
         "sink": {"log": {"type": "stub_log", "sources": ["mx1"]}},
     }
-    eng = compile_config(spark, conf)
-    decoder = eng.pipelines["mx1"].decoder
-    line = _json.dumps(
-        {
-            "database": "shop",
-            "table": "orders",
-            "type": "insert",
-            "ts": 1709287530,
-            "position": "master.000002:77",
-            "data": {"id": "5"},
-        }
-    )
-    row = decoder(
-        spark.createDataFrame([(line,)], ["value"])
-    ).first()
-    assert (row.host, row.database, row.table, row.action) == (
-        "mhost",
-        "shop",
-        "orders",
-        "insert",
-    )
-    assert row.wal_position == (2 << 32) | 77
-
-    # auto dispatch drops the provenance column -> canonical envelope
-    conf["source"]["mx1"]["dialect"] = "auto"
-    auto = compile_config(spark, conf).pipelines["mx1"].decoder
-    assert "dialect" not in auto(
-        spark.createDataFrame([(line,)], ["value"])
-    ).columns
+    decoder = compile_config(spark, conf).pipelines["mx1"].decoder
+    line, want = _DIALECT_LINES[dialect]
+    decoded = decoder(spark.createDataFrame([(line,)], ["value"]))
+    row = decoded.first()
+    assert (row.host, row.database, row.table, row.action, row.wal_position) == want
+    assert row.uuid
+    # the auto dispatch's provenance column never reaches a pipeline
+    assert "dialect" not in decoded.columns
 
     conf["source"]["mx1"]["dialect"] = "kanal"
-    with _pytest.raises(ConfigError, match="unknown dialect 'kanal'"):
+    with pytest.raises(ConfigError, match="unknown dialect 'kanal'"):
         compile_config(spark, conf)
 
 
 def test_dialect_decoders_bind_per_source_host_despite_http(spark, tmp_path):
-    """Regression: the dialect decoder lambdas must capture each source's
+    """Regression: the dialect decoders must bind each source's
     host/database by VALUE — `host` is reassigned later in
     compile_config (the http listener split) and rebinds per source, so
     late-bound closures would stamp every event with the wrong

@@ -175,7 +175,7 @@ def test_wal2json_roundtrip_property(spark, rows):
     generated payloads — unicode, negatives, bools, nulls."""
     import json as _json
 
-    from psql_streamer_spark.sources.cdc_formats import decode_wal2json
+    from psql_streamer_spark.sources.cdc_formats import decode_dialect
 
     lines = []
     expected = {}
@@ -202,7 +202,7 @@ def test_wal2json_roundtrip_property(spark, rows):
     df = spark.createDataFrame(lines, ["value"])
     got = {
         r.wal_position: (r.table, r.action, dict(r.columns or {}))
-        for r in decode_wal2json(df).collect()
+        for r in decode_dialect(df, "wal2json").collect()
     }
     assert got == expected
 

@@ -5,6 +5,7 @@ Structured Streaming runs with no external broker."""
 
 from __future__ import annotations
 
+import functools
 import json
 
 import pytest
@@ -251,7 +252,7 @@ def test_pipeline_with_wal2json_decoder(spark, dirs):
     the same validate/route/fan-out path as the native wire format."""
     import json as _json
 
-    from psql_streamer_spark.sources.cdc_formats import decode_wal2json
+    from psql_streamer_spark.sources.cdc_formats import decode_dialect
 
     src, ckpt, _ = dirs
     lines = [
@@ -274,7 +275,8 @@ def test_pipeline_with_wal2json_decoder(spark, dirs):
     sink, dlq = MemorySink("m"), MemorySink("dlq")
     pipe = CdcPipeline(
         spark, str(src), ckpt, routes=[SinkRoute(sink, {"test": "t"})],
-        dlq_sink=dlq, decoder=decode_wal2json,
+        dlq_sink=dlq,
+        decoder=functools.partial(decode_dialect, dialect="wal2json"),
     )
     pipe.run_to_completion()
     assert sink.events == 3 and dlq.events == 1
@@ -2268,10 +2270,13 @@ def test_metrics_carry_epoch_phases(spark, dirs):
         assert count and int(count[0].split()[-1]) >= 1, ph
 
 
-def _epoch_round_trips(spark, mapping: dict, lines: list[str]) -> int:
+def _epoch_round_trips(
+    spark, mapping: dict, lines: list[str], decoder=None
+) -> int:
     """py4j round trips from Python in one warm `_process_batch`: two
     NoopSink routes (``mapping``, and a fallback-only one) plus a NoopSink
-    DLQ, on a static frame. Two epochs warm the pipeline up first."""
+    DLQ, on a static frame decoded by ``decoder`` (the pipeline default
+    when None). Two epochs warm the pipeline up first."""
     import threading
 
     from py4j.clientserver import ClientServerConnection
@@ -2280,7 +2285,7 @@ def _epoch_round_trips(spark, mapping: dict, lines: list[str]) -> int:
         spark, "unused", "unused",
         routes=[SinkRoute(NoopSink("mapped"), mapping),
                 SinkRoute(NoopSink("fallback"), {}, "fb")],
-        dlq_sink=NoopSink("dlq"),
+        dlq_sink=NoopSink("dlq"), decoder=decoder,
     )
     batch = spark.createDataFrame([(ln,) for ln in lines], "value string")
     for epoch in range(2):
@@ -2320,3 +2325,26 @@ def test_epoch_builds_no_columns(spark):
     # leaves about 3x headroom
     assert calls < 150, calls
     assert _epoch_round_trips(spark, {"t0": "a", "t1": "b"}, lines) == calls
+
+    # the four-dialect auto decode is built once per JVM too
+    from psql_streamer_spark.sources.cdc_formats import decode_dialect
+
+    auto = functools.partial(decode_dialect, dialect="auto")
+    mixed = [_dialect_line(i, f"t{i % 7}") for i in range(95)] + ["not json"] * 5
+    calls = _epoch_round_trips(spark, wide, mixed, auto)
+    # measured 47 on a 4-CPU box (3,034 before the dialect memo)
+    assert calls < 150, calls
+
+
+def _dialect_line(i: int, table: str) -> str:
+    """An insert in one of the four JSON dialects, by ``i % 4``."""
+    return json.dumps([
+        {"action": "I", "table": table, "lsn": f"0/{i:X}",
+         "columns": [{"name": "a", "value": str(i)}]},
+        {"payload": {"op": "c", "after": {"a": str(i)},
+                     "source": {"table": table, "lsn": i}}},
+        {"data": [{"a": str(i)}], "id": i, "isDdl": False, "table": table,
+         "type": "INSERT"},
+        {"table": table, "type": "insert", "position": f"master.000001:{i}",
+         "data": {"a": str(i)}},
+    ][i % 4])
