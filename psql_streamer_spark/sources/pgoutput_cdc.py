@@ -24,7 +24,8 @@ of (seq, wal_position, value binary) — shaped for Spark's execution model:
 Scale shape: one narrow Python parse pass over the frames (no shuffle), a
 metadata-only collect for relations, and a codegen'd projection. Unknown
 relations (DML before its Relation frame — the reference's generateEvent
-error, postgres.go:380-384) yield NULL table/uuid and flow to the DLQ via
+error, postgres.go:380-384) and tuples whose column count differs from
+their relation's yield a NULL uuid and flow to the DLQ via
 transforms.validate_split instead of killing the job.
 """
 
@@ -41,8 +42,6 @@ from psql_streamer_spark.sources.pgoutput_wire import (
     ProtocolError,
     parse_message,
 )
-
-_UNIX_TO_PG_EPOCH_US = 946_684_800_000_000  # 2000-01-01 minus 1970-01-01, µs
 
 _PARSED_FIELDS = [
     T.StructField("kind", T.StringType()),
@@ -320,7 +319,9 @@ def _decode_with_versions(
         F.transform(kept, lambda x: F.struct(x["key"], x["value"]))
     )
 
-    known = table_expr.isNotNull()
+    # zip_with pads the shorter array with NULLs, so a tuple whose arity
+    # differs from its relation's would decode as a short or truncated map
+    known = table_expr.isNotNull() & (F.size(tup) == F.size(cols_expr))
     uuid_expr = uuid if uuid is not None else F.expr("uuid()")
     ts_expr = ts if ts is not None else F.current_timestamp()
     return dml.select(
@@ -330,8 +331,9 @@ def _decode_with_versions(
         F.col("kind").alias("action"),
         F.col(wal_col).cast("long").alias("wal_position"),
         ts_expr.alias("ts"),
-        # unknown relation -> uuid-less row -> DLQ (validate_split), the
-        # commit-and-skip analogue of generateEvent's lookup error
+        # unknown relation or arity mismatch -> uuid-less row -> DLQ
+        # (validate_split), the commit-and-skip analogue of generateEvent's
+        # lookup error
         F.when(known, uuid_expr).alias("uuid"),
         F.when(known, columns).alias("columns"),
     )

@@ -15,10 +15,12 @@ prefix, PG 14+ ``streaming=on``) — the reference pins v1
 publisher's large in-progress transactions would hit first.
 
 Design split:
-- this module: stateless ``parse_message`` / ``encode_*`` plus a
-  ``RelationCache`` (the reference's RelationSet) — importable anywhere,
+- this module: the stateless frame codec ``parse_message`` /
+  ``encode_*`` and ``reassemble_frames``, the ingest-edge rewrite of a
+  protocol-v2 capture into v1 frames — importable anywhere,
   golden-fixture testable without a SparkSession;
-- sources/pgoutput_cdc.py: the distributed decode (Arrow-batched parse,
+- sources/pgoutput_cdc.py: the Spark decode, the one implementation of
+  the reference's RelationSet and tuple whitelist (Arrow-batched parse,
   relation resolution, JVM-side tuple->map projection).
 
 Encoders exist so tests and fixture builders can produce byte-exact
@@ -220,8 +222,8 @@ def parse_message(data: bytes, in_stream: bool = False) -> dict:
     ``in_stream``: protocol v2 prefixes every data message BETWEEN a
     Stream Start and its Stream Stop with the Int32 xid of the streamed
     transaction; the frame does not self-describe, so the caller tracks
-    stream state (see StreamAssembler) and passes it here. Streamed data
-    messages gain an ``xid`` key.
+    stream state and passes it here (``reassemble_frames`` tracks it and
+    strips the prefix itself). Streamed data messages gain an ``xid`` key.
 
     Raises ProtocolError on malformed input (callers on the distributed
     path convert that to an error record, the commit-and-skip behavior of
@@ -374,145 +376,8 @@ def parse_message(data: bytes, in_stream: bool = False) -> dict:
 
 
 # --------------------------------------------------------------------------
-# Relation cache + typed tuple decode (the reference's RelationSet.Values +
-# generateEvent whitelist, postgres.go:379-428).
-# --------------------------------------------------------------------------
-class RelationCache:
-    """relation_id -> Relation, replaced on re-announce (schema change).
-
-    "Potential unbounded map growth, but in practice shouldn't happen as
-    the table count is limited" (postgres.go:302)."""
-
-    def __init__(self) -> None:
-        self._rels: dict[int, Relation] = {}
-
-    def add(self, rel: Relation) -> None:
-        self._rels[rel.relation_id] = rel
-
-    def get(self, relation_id: int) -> Relation:
-        rel = self._rels.get(relation_id)
-        if rel is None:
-            raise KeyError(
-                f"Relation with ID '{relation_id}' not found in relation cache"
-            )
-        return rel
-
-    def __contains__(self, relation_id: int) -> bool:
-        return relation_id in self._rels
-
-    def typed_values(
-        self, relation_id: int, tup: list[tuple[str, bytes | None]]
-    ) -> tuple[dict[str, object], list[str]]:
-        """Decode one TupleData against the cached relation.
-
-        Returns (columns, skipped): typed Python values for whitelisted
-        OIDs, and the names of columns dropped for an unsupported type —
-        the reference logs and skips those (postgres.go:421-424). Columns
-        flagged 'u' (unchanged TOAST) are skipped too: the value was not
-        sent. Text-format values are parsed from PostgreSQL's text
-        representation; binary-format values pass through as bytes->str
-        (the reference's []byte -> string coercion, :414-416).
-        """
-        rel = self.get(relation_id)
-        if len(tup) != len(rel.columns):
-            raise ProtocolError(
-                f"tuple arity {len(tup)} != relation arity {len(rel.columns)} "
-                f"for {rel.name!r}"
-            )
-        out: dict[str, object] = {}
-        skipped: list[str] = []
-        for col, (flag, raw) in zip(rel.columns, tup):
-            if col.type_oid not in SUPPORTED_OIDS:
-                skipped.append(col.name)
-                continue
-            if flag == TUPLE_UNCHANGED:
-                continue
-            if flag == TUPLE_NULL or raw is None:
-                out[col.name] = None
-                continue
-            out[col.name] = _parse_text_value(col.type_oid, raw)
-        return out, skipped
-
-
-def _parse_text_value(type_oid: int, raw: bytes) -> object:
-    """PostgreSQL text-format value -> typed Python value (whitelist)."""
-    text = raw.decode("utf-8")
-    if type_oid in (OID_INT2, OID_INT4, OID_INT8):
-        return int(text)
-    if type_oid in (OID_FLOAT4, OID_FLOAT8):
-        return float(text)
-    if type_oid == OID_BOOL:
-        return text == "t"
-    # date/timestamp/timestamptz stay text here; the Spark path casts them
-    # with the session-zone rules, the reference hands time.Time through.
-    return text
-
-
-# --------------------------------------------------------------------------
 # Protocol-v2 stream reassembly.
 # --------------------------------------------------------------------------
-class StreamAssembler:
-    """Reassembles protocol-v2 streamed transactions into commit-ordered
-    message lists.
-
-    PG 14+ publishers with ``streaming=on`` ship a large in-progress
-    transaction as interleaved Stream Start/Stop segments, then a Stream
-    Commit or Stream Abort. Data messages inside a segment carry the xid of
-    the (sub)transaction that produced them — that per-message xid is what
-    lets a subscriber discard exactly an aborted *sub*transaction's changes
-    while keeping the rest (Stream Abort carries (xid, subxid); subxid ==
-    xid means the whole transaction rolled back).
-
-    ``feed(frame)`` parses one frame and returns the messages that became
-    *final* because of it: non-streamed messages immediately, a streamed
-    transaction's buffered messages (+ its commit) only at Stream Commit —
-    so downstream sees only committed data, the same only-committed
-    contract the reference gets for free from its v1 subscription
-    (source/postgres/postgres.go:205-219). Buffers are driver-side and
-    bounded by logical_decoding_work_mem-triggered segment sizes upstream.
-    """
-
-    def __init__(self) -> None:
-        self._in_stream_xid: int | None = None
-        #: toplevel xid -> ordered [(msg_xid, parsed message)]
-        self._buffers: dict[int, list[tuple[int, dict]]] = {}
-
-    @property
-    def in_stream(self) -> bool:
-        return self._in_stream_xid is not None
-
-    def pending_xids(self) -> list[int]:
-        return sorted(self._buffers)
-
-    def feed(self, data: bytes) -> list[dict]:
-        m = parse_message(data, in_stream=self.in_stream)
-        kind = m["kind"]
-        if kind == "stream_start":
-            self._in_stream_xid = m["xid"]
-            self._buffers.setdefault(m["xid"], [])
-            return []
-        if kind == "stream_stop":
-            self._in_stream_xid = None
-            return []
-        if kind == "stream_commit":
-            buffered = self._buffers.pop(m["xid"], [])
-            return [msg for _, msg in buffered] + [m]
-        if kind == "stream_abort":
-            xid, subxid = m["xid"], m["subxid"]
-            if subxid == xid:
-                self._buffers.pop(xid, None)
-            elif xid in self._buffers:
-                self._buffers[xid] = [
-                    (mx, msg) for mx, msg in self._buffers[xid] if mx != subxid
-                ]
-            return []
-        if self._in_stream_xid is not None:
-            msg_xid = m.get("xid", self._in_stream_xid)
-            self._buffers[self._in_stream_xid].append((msg_xid, m))
-            return []
-        return [m]
-
-
 def reassemble_frames(frames) -> list[bytes]:
     """Rewrite a captured protocol-v2 frame sequence into the equivalent
     protocol-v1 sequence — the ingest-edge adapter that lets the

@@ -28,11 +28,6 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Dimension tables small enough to broadcast at ANY scale factor (TPC-H
-# fixes region=5 / nation=25 rows); customer/supplier/part grow with SF and
-# must be judged per-join.
-BROADCAST_SAFE = frozenset({"region", "nation"})
-
 
 def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
     """Load one testdata table.

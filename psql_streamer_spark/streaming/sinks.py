@@ -2,9 +2,11 @@
 
 A sink receives each micro-batch DataFrame inside the pipeline's
 foreachBatch — the exact analogue of `ProcessEventsBatch([]event.Event)`
-(sink/sink.go:15,19). A sink that raises fails the epoch; Structured
-Streaming retries the whole batch and no source offset commits — the
-reference's retry-until-ACK loop (mux/mux.go:173-189) for free.
+(sink/sink.go:15,19). A sink that raises fails the epoch: the
+foreachBatch exception stops the query with no source offset committed,
+and a restart from the checkpoint replays the whole epoch. The engine
+has no in-epoch retry like the reference's retry-until-ACK loop
+(mux/mux.go:173-189).
 """
 
 from __future__ import annotations

@@ -22,7 +22,6 @@ from psql_streamer_spark.sources.pgoutput_wire import (
     Column,
     ProtocolError,
     Relation,
-    RelationCache,
     encode_begin,
     encode_commit,
     encode_delete,
@@ -31,6 +30,7 @@ from psql_streamer_spark.sources.pgoutput_wire import (
     encode_update,
     null_col,
     parse_message,
+    reassemble_frames,
     text_col,
 )
 
@@ -79,6 +79,64 @@ BEGIN_FRAME = (
 )
 
 
+def _frames_df(spark):
+    """The golden frames plus the whitelist and error cases, as one
+    captured stream."""
+    rel = Relation(
+        REL_ID, "public", "test", 0x64,
+        [Column("a", OID_INT4, True), Column("b", OID_TEXT)],
+    )
+    # point (OID 600) is outside the type whitelist
+    rel_geom = Relation(
+        7, "public", "shapes", 0x64,
+        [Column("k", OID_INT4, True), Column("geom", 600)],
+    )
+    rel_toast = Relation(
+        8, "public", "docs", 0x64,
+        [Column("k", OID_INT4, True), Column("v", OID_TEXT)],
+    )
+    rows = [
+        (1, 0, encode_relation(rel)),
+        (2, 0, BEGIN_FRAME),                              # dropped
+        (3, 101, INSERT_FRAME),
+        (4, 102, UPDATE_FRAME),
+        (5, 103, DELETE_FRAME),
+        (6, 104, encode_insert(999, [text_col(1)])),       # unknown rel
+        (7, 105, b"\x49\x00"),                             # malformed
+        (8, 0, encode_relation(rel_geom)),
+        (9, 0, encode_relation(rel_toast)),
+        (10, 106, encode_insert(7, [text_col(5), text_col("(1,2)")])),
+        (11, 107, encode_insert(8, [text_col(5), ("u", None)])),  # TOAST
+        (12, 108, encode_insert(7, [text_col(5)])),        # 1 cell, 2 cols
+        (13, 109, encode_insert(                           # 3 cells, 2 cols
+            REL_ID, [text_col(3), text_col("y"), text_col("z")]
+        )),
+    ]
+    return spark.createDataFrame(
+        rows, "seq long, wal_position long, value binary"
+    )
+
+
+@pytest.fixture(scope="module")
+def decoded(spark):
+    """`_frames_df` through the Spark decode and validate_split:
+    ({wal_position: row} delivered, sorted dead-lettered wal_positions)."""
+    from pyspark.sql import functions as F
+
+    from psql_streamer_spark.sources.pgoutput_cdc import decode_pgoutput
+    from psql_streamer_spark.transforms import validate_split
+
+    out = decode_pgoutput(
+        _frames_df(spark), host="h", database="d",
+        uuid=F.col("wal_position").cast("string"),
+    )
+    valid, dlq = validate_split(out)
+    return (
+        {r["wal_position"]: r for r in valid.collect()},
+        sorted(r["wal_position"] for r in dlq.collect()),
+    )
+
+
 class TestGoldenVectors:
     def test_relation(self):
         m = parse_message(RELATION_FRAME)
@@ -118,21 +176,18 @@ class TestGoldenVectors:
         assert m["xid"] == 102693
         assert m["commit_ts"] == datetime(2000, 1, 1, tzinfo=timezone.utc)
 
-    def test_typed_values_reference_assertions(self):
-        """postgres_test.go:97-105: a -> int 400166, b -> 'a'."""
-        cache = RelationCache()
-        cache.add(parse_message(RELATION_FRAME)["relation"])
-        cols, skipped = cache.typed_values(
-            REL_ID, parse_message(INSERT_FRAME)["new_tuple"]
-        )
-        assert cols == {"a": 400166, "b": "a"}
-        assert isinstance(cols["a"], int) and skipped == []
+    def test_typed_values_reference_assertions(self, decoded):
+        """postgres_test.go:97-105: a -> 400166, b -> 'a' (the canonical
+        map<string,string> payload carries the int4 as its text form)."""
+        valid, _ = decoded
+        assert valid[101]["table"] == "test"
+        assert valid[101]["columns"] == {"a": "400166", "b": "a"}
 
-    def test_unknown_relation_errors(self):
-        """generateEvent on relid 666 errors (postgres_test.go:94-95)."""
-        cache = RelationCache()
-        with pytest.raises(KeyError):
-            cache.typed_values(666, [("t", b"1")])
+    def test_unknown_relation_errors(self, decoded):
+        """generateEvent on an unknown relid errors (postgres_test.go:94-95);
+        the decode dead-letters the frame instead of failing the job."""
+        valid, dlq = decoded
+        assert 104 in dlq and 104 not in valid
 
 
 class TestCodecRoundtrip:
@@ -173,34 +228,22 @@ class TestCodecRoundtrip:
 
 
 class TestWhitelistAndErrors:
-    def _cache_with_unsupported(self) -> RelationCache:
-        cache = RelationCache()
-        cache.add(
-            Relation(
-                7, "public", "t", 0x64,
-                [Column("k", OID_INT4, True), Column("geom", 600)],
-            )
-        )
-        return cache
+    def test_unsupported_oid_skipped(self, decoded):
+        """postgres.go:421-424: a column of an unsupported type (point,
+        OID 600) is dropped; the rest of the row is delivered."""
+        valid, _ = decoded
+        assert valid[106]["columns"] == {"k": "5"}
 
-    def test_unsupported_oid_skipped(self):
-        """postgres.go:421-424: unsupported types dropped, named."""
-        cols, skipped = self._cache_with_unsupported().typed_values(
-            7, [("t", b"5"), ("t", b"(1,2)")]
-        )
-        assert cols == {"k": 5} and skipped == ["geom"]
+    def test_unchanged_toast_omitted(self, decoded):
+        valid, _ = decoded
+        assert valid[107]["columns"] == {"k": "5"}
 
-    def test_unchanged_toast_omitted(self):
-        cache = RelationCache()
-        cache.add(Relation(8, "public", "t", 0x64,
-                           [Column("k", OID_INT4, True), Column("v", OID_TEXT)]))
-        cols, _ = cache.typed_values(8, [("t", b"5"), ("u", None)])
-        assert cols == {"k": 5}
-
-    def test_arity_mismatch_errors(self):
-        cache = self._cache_with_unsupported()
-        with pytest.raises(ProtocolError):
-            cache.typed_values(7, [("t", b"5")])
+    def test_arity_mismatch_errors(self, decoded):
+        """A tuple with fewer or more cells than its relation has columns
+        is dead-lettered, not delivered as a short or truncated map."""
+        valid, dlq = decoded
+        assert {108, 109} <= set(dlq)
+        assert not {108, 109} & set(valid)
 
     @pytest.mark.parametrize(
         "frame",
@@ -277,7 +320,7 @@ class TestProtocolV2Stream:
         # the frame does NOT self-describe: outside a stream the xid bytes
         # get read as the relation_id and the parse derails at the tuple
         # marker — which is why the caller must track stream state
-        # (StreamAssembler does)
+        # (reassemble_frames does)
         with pytest.raises(ProtocolError):
             parse_message(STREAMED_INSERT_FRAME, in_stream=False)
 
@@ -304,80 +347,71 @@ class TestProtocolV2Stream:
         )
 
     def test_assembler_emits_only_on_stream_commit(self):
-        from psql_streamer_spark.sources.pgoutput_wire import StreamAssembler
-
-        asm = StreamAssembler()
-        assert asm.feed(STREAM_START_FRAME) == []
-        assert asm.feed(STREAMED_INSERT_FRAME) == []
-        assert asm.feed(STREAM_STOP_FRAME) == []
-        assert asm.pending_xids() == [777]
-        out = asm.feed(STREAM_COMMIT_FRAME)
-        assert [m["kind"] for m in out] == ["insert", "stream_commit"]
-        assert out[0]["new_tuple"] == [("t", b"400166"), ("t", b"a")]
-        assert asm.pending_xids() == []
+        open_txn = [STREAM_START_FRAME, STREAMED_INSERT_FRAME, STREAM_STOP_FRAME]
+        assert reassemble_frames(open_txn) == []
+        out = reassemble_frames(open_txn + [STREAM_COMMIT_FRAME])
+        assert [parse_message(f)["kind"] for f in out] == [
+            "begin", "insert", "commit",
+        ]
+        assert parse_message(out[1])["new_tuple"] == [("t", b"400166"), ("t", b"a")]
 
     def test_assembler_abort_drops_whole_transaction(self):
-        from psql_streamer_spark.sources.pgoutput_wire import StreamAssembler
-
-        asm = StreamAssembler()
-        asm.feed(STREAM_START_FRAME)
-        asm.feed(STREAMED_INSERT_FRAME)
-        asm.feed(STREAM_STOP_FRAME)
-        assert asm.feed(STREAM_ABORT_FRAME) == []
-        assert asm.pending_xids() == []
-        # a later commit for the aborted xid yields only the commit itself
-        assert [m["kind"] for m in asm.feed(STREAM_COMMIT_FRAME)] == [
-            "stream_commit"
+        frames = [
+            STREAM_START_FRAME,
+            STREAMED_INSERT_FRAME,
+            STREAM_STOP_FRAME,
+            STREAM_ABORT_FRAME,
         ]
+        assert reassemble_frames(frames) == []
+        # a later commit for the aborted xid yields an empty transaction
+        out = reassemble_frames(frames + [STREAM_COMMIT_FRAME])
+        assert [parse_message(f)["kind"] for f in out] == ["begin", "commit"]
 
     def test_assembler_subxact_abort_drops_only_subxact_changes(self):
-        from psql_streamer_spark.sources.pgoutput_wire import StreamAssembler
-
-        asm = StreamAssembler()
-        asm.feed(STREAM_START_FRAME)
-        asm.feed(STREAMED_INSERT_FRAME)      # xid 777 (toplevel)
-        asm.feed(SUBXACT_INSERT_FRAME)       # xid 778 (subxact)
-        asm.feed(STREAM_STOP_FRAME)
-        asm.feed(STREAM_ABORT_SUBXACT_FRAME)  # aborts subxact 778 only
-        out = asm.feed(STREAM_COMMIT_FRAME)
-        assert [m["kind"] for m in out] == ["insert", "stream_commit"]
-        assert out[0]["xid"] == 777
+        out = reassemble_frames([
+            STREAM_START_FRAME,
+            STREAMED_INSERT_FRAME,       # xid 777 (toplevel)
+            SUBXACT_INSERT_FRAME,        # xid 778 (subxact)
+            STREAM_STOP_FRAME,
+            STREAM_ABORT_SUBXACT_FRAME,  # aborts subxact 778 only
+            STREAM_COMMIT_FRAME,
+        ])
+        assert [parse_message(f)["kind"] for f in out] == [
+            "begin", "insert", "commit",
+        ]
+        assert out[1] == INSERT_FRAME
 
     def test_assembler_interleaved_segments(self):
         from psql_streamer_spark.sources.pgoutput_wire import (
-            StreamAssembler,
             encode_stream_commit,
             encode_stream_start,
         )
 
-        asm = StreamAssembler()
-        # segment of xid 777, then a segment of xid 900, then commits
-        asm.feed(STREAM_START_FRAME)
-        asm.feed(STREAMED_INSERT_FRAME)
-        asm.feed(STREAM_STOP_FRAME)
-        asm.feed(encode_stream_start(900))
-        asm.feed(encode_insert(REL_ID, [text_col("other")], xid=900))
-        asm.feed(STREAM_STOP_FRAME)
-        assert asm.pending_xids() == [777, 900]
         ts = datetime(2000, 1, 1, tzinfo=timezone.utc)
-        out900 = asm.feed(encode_stream_commit(900, 0x200, 0x210, ts))
-        assert [m["xid"] for m in out900[:-1]] == [900]
-        out777 = asm.feed(STREAM_COMMIT_FRAME)
-        assert out777[0]["new_tuple"] == [("t", b"400166"), ("t", b"a")]
+        # segment of xid 777, then a segment of xid 900, then commits
+        out = reassemble_frames([
+            STREAM_START_FRAME,
+            STREAMED_INSERT_FRAME,
+            STREAM_STOP_FRAME,
+            encode_stream_start(900),
+            encode_insert(REL_ID, [text_col("other")], xid=900),
+            STREAM_STOP_FRAME,
+            encode_stream_commit(900, 0x200, 0x210, ts),
+            STREAM_COMMIT_FRAME,
+        ])
+        msgs = [parse_message(f) for f in out]
+        assert [m["kind"] for m in msgs] == [
+            "begin", "insert", "commit", "begin", "insert", "commit",
+        ]
+        assert (msgs[0]["xid"], msgs[3]["xid"]) == (900, 777)
+        assert msgs[1]["new_tuple"] == [("t", b"other")]
+        assert out[4] == INSERT_FRAME
 
     def test_assembler_passes_through_non_streamed(self):
-        from psql_streamer_spark.sources.pgoutput_wire import StreamAssembler
-
-        asm = StreamAssembler()
-        out = asm.feed(INSERT_FRAME)
-        assert [m["kind"] for m in out] == ["insert"]
-        assert out[0]["relation_id"] == REL_ID
+        frames = [BEGIN_FRAME, INSERT_FRAME]
+        assert reassemble_frames(frames) == frames
 
     def test_reassemble_frames_strips_xid_byte_exact(self):
-        from psql_streamer_spark.sources.pgoutput_wire import (
-            reassemble_frames,
-        )
-
         frames = [
             STREAM_START_FRAME,
             STREAMED_INSERT_FRAME,
@@ -398,7 +432,6 @@ class TestProtocolV2Stream:
         from psql_streamer_spark.sources.pgoutput_wire import (
             encode_stream_commit,
             encode_stream_start,
-            reassemble_frames,
         )
 
         ts = datetime(2000, 1, 1, tzinfo=timezone.utc)
@@ -426,10 +459,6 @@ class TestProtocolV2Stream:
         from pyspark.sql import functions as F
 
         from psql_streamer_spark.sources.pgoutput_cdc import decode_pgoutput
-        from psql_streamer_spark.sources.pgoutput_wire import (
-            reassemble_frames,
-        )
-
         rel = Relation(
             REL_ID, "public", "test", 0x64,
             [Column("a", OID_INT4, True), Column("b", OID_TEXT)],
@@ -469,37 +498,9 @@ class TestProtocolV2Stream:
 class TestSparkDecode:
     """Distributed decode over an in-memory frame stream."""
 
-    def _frames_df(self, spark):
-        rel = Relation(
-            REL_ID, "public", "test", 0x64,
-            [Column("a", OID_INT4, True), Column("b", OID_TEXT)],
-        )
-        rows = [
-            (1, 0, encode_relation(rel)),
-            (2, 0, BEGIN_FRAME),                              # dropped
-            (3, 101, INSERT_FRAME),
-            (4, 102, UPDATE_FRAME),
-            (5, 103, DELETE_FRAME),
-            (6, 104, encode_insert(999, [text_col(1)])),       # unknown rel
-            (7, 105, b"\x49\x00"),                             # malformed
-        ]
-        return spark.createDataFrame(
-            rows, "seq long, wal_position long, value binary"
-        )
-
-    def test_decode_end_to_end(self, spark):
-        from pyspark.sql import functions as F
-
-        from psql_streamer_spark.sources.pgoutput_cdc import decode_pgoutput
-        from psql_streamer_spark.transforms import validate_split
-
-        out = decode_pgoutput(
-            self._frames_df(spark), host="h", database="d",
-            uuid=F.col("wal_position").cast("string"),
-        )
-        valid, dlq = validate_split(out)
-        rows = {r["wal_position"]: r for r in valid.collect()}
-        assert set(rows) == {101, 102, 103}
+    def test_decode_end_to_end(self, decoded):
+        rows, dlq = decoded
+        assert set(rows) == {101, 102, 103, 106, 107}
         assert rows[101]["action"] == "insert"
         assert rows[101]["table"] == "test"
         assert rows[101]["columns"] == {"a": "400166", "b": "a"}
@@ -507,16 +508,17 @@ class TestSparkDecode:
         # delete ships the replica identity; non-key column is NULL
         assert rows[103]["action"] == "delete"
         assert rows[103]["columns"] == {"a": "144110", "b": None}
-        # unknown relation -> DLQ (generateEvent lookup error analogue);
-        # the malformed frame never reaches the DML set
-        assert [r["wal_position"] for r in dlq.collect()] == [104]
+        # unknown relation and arity mismatches -> DLQ (generateEvent
+        # lookup error analogue); the malformed frame never reaches the
+        # DML set
+        assert dlq == [104, 108, 109]
 
     def test_parse_stream_flags_malformed(self, spark):
         from pyspark.sql import functions as F
 
         from psql_streamer_spark.sources.pgoutput_cdc import parse_stream
 
-        parsed = parse_stream(self._frames_df(spark))
+        parsed = parse_stream(_frames_df(spark))
         errs = parsed.filter(F.col("kind") == "error").collect()
         assert len(errs) == 1
         assert errs[0]["seq"] == 7 and "truncated" in errs[0]["parse_error"]
@@ -572,16 +574,19 @@ class TestStreamingPipeline:
             (1, 0, encode_relation(rel)),
             (2, 101, encode_insert(REL_ID, [text_col(1), text_col("x")])),
         ])
-        # epoch 2: DML ONLY — decodable iff the cache persisted
+        # epoch 2: DML ONLY — decodable iff the cache persisted; the
+        # 1-cell insert does not match the 2-column relation
         self._write_frames(spark, src, [
             (3, 102, encode_insert(REL_ID, [text_col(2), text_col("y")])),
             (4, 103, encode_delete(REL_ID, [text_col(1), null_col()])),
+            (5, 104, encode_insert(REL_ID, [text_col(3)])),
         ])
 
-        sink = MemorySink("m")
+        sink, dlq = MemorySink("m"), MemorySink("dlq")
         pipe = CdcPipeline(
             spark, src, str(tmp_path / "ckpt"),
-            routes=[SinkRoute(sink, {"users": "t"})], max_files_per_trigger=1,
+            routes=[SinkRoute(sink, {"users": "t"})], dlq_sink=dlq,
+            max_files_per_trigger=1,
             decoder=PgoutputStreamDecoder(
                 host="h", database="d", uuid=F.col("wal_position").cast("string")
             ),
@@ -595,6 +600,7 @@ class TestStreamingPipeline:
         assert got[102]["Columns"] == {"a": "2", "b": "y"}
         assert got[103]["Action"] == "delete"
         assert got[103]["Columns"] == {"a": "1", "b": None}
+        assert [r["wal_position"] for r in dlq.rows] == [104]
 
     def test_compile_config_file_pgoutput_source(self, spark, tmp_path):
         from psql_streamer_spark.config import compile_config

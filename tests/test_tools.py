@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import ast
 import importlib
+import re
 from pathlib import Path
 
 TOOLS_DIR = Path(__file__).resolve().parent.parent / "tools"
@@ -43,3 +44,20 @@ def test_every_tool_imports_and_its_imports_resolve():
         if missing:
             broken[path.name] = missing
     assert not broken, f"tools with broken imports: {broken}"
+
+
+def test_every_tool_is_named_outside_tools():
+    """A script nothing names is a script nothing runs: every tool stem
+    must appear (as a whole word) in some .py file outside tools/ — the
+    product package, tests/, perfbench/ or a root-level script."""
+    root = TOOLS_DIR.parent
+    users = [
+        p
+        for d in ("psql_streamer_spark", "tests", "perfbench")
+        for p in (root / d).rglob("*.py")
+        if p != Path(__file__).resolve()
+    ] + sorted(root.glob("*.py"))
+    text = "\n".join(p.read_text() for p in users)
+    stems = [p.stem for p in sorted(TOOLS_DIR.glob("*.py")) if p.stem != "__init__"]
+    orphans = [s for s in stems if not re.search(rf"\b{re.escape(s)}\b", text)]
+    assert not orphans, f"tools/ scripts nothing outside tools/ names: {orphans}"
