@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from psql_streamer_spark.transforms import once_per_jvm
+from psql_streamer_spark.transforms import is_dml_event, is_valid_event, once_per_jvm
 
 
 def topic_expr(
@@ -58,6 +58,52 @@ def route(
 @once_per_jvm
 def _has_topic() -> Column:
     return F.col("topic").isNotNull()
+
+
+def fan_out(
+    df: DataFrame,
+    columns: tuple[str, ...],
+    routes: tuple[tuple, ...],
+    dead_letters: bool,
+) -> DataFrame:
+    """One row per (row of ``df``, output it belongs to): ``columns``, then
+    the output's number ``_out``, its ``topic`` and ``_p``, the value of its
+    partition column as a string (NULL for an unpartitioned output). The
+    CDC epoch writes these rows once for all its file sinks
+    (jvm/EpochFiles.java).
+
+    ``routes`` has one ``(mapping items, fallback, passthrough, partition
+    column or None)`` per route output, numbered from 0. A route takes the
+    valid DML events ``route`` keeps: those its ``topic_expr`` maps, or
+    all of them with a NULL topic when it is a passthrough. With
+    ``dead_letters``, output ``len(routes)`` takes the rows
+    ``validate_split`` dead-letters. Built once per JVM and output set."""
+    return df.select(*_fan_out(columns, routes, dead_letters))
+
+
+@once_per_jvm
+def _fan_out(
+    columns: tuple[str, ...], routes: tuple[tuple, ...], dead_letters: bool
+) -> tuple[Column, ...]:
+    none = F.lit(None).cast("string")
+    valid = is_valid_event()
+    event = valid & is_dml_event()
+    tags = []
+    for out, (mapping, fallback, passthrough, partition) in enumerate(routes):
+        topic = none if passthrough else topic_expr(dict(mapping), fallback)
+        takes = event if passthrough else event & topic.isNotNull()
+        part = F.col(partition).cast("string") if partition else none
+        tags.append(F.when(takes, _tag(out, topic, part)))
+    if dead_letters:
+        tags.append(F.when(~valid, _tag(len(routes), none, none)))
+    return (
+        *(F.col(c) for c in columns),
+        F.inline(F.array_compact(F.array(*tags))),
+    )
+
+
+def _tag(out: int, topic: Column, part: Column) -> Column:
+    return F.struct(F.lit(out).alias("_out"), topic.alias("topic"), part.alias("_p"))
 
 
 def routing_stats(

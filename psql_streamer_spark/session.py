@@ -16,10 +16,14 @@ commits and sources logs, and 8 each for the other two sinks. Each spawn
 cost about 2.1 ms of wall time and 2.2 ms of CPU inside the JVM, about a
 third of the epoch. The shim applies the same modes and answers the same link probes
 through ``java.nio.file``; the ``.crc`` checksums, their check on read and
-the checkpoint's create-then-rename are unchanged. It is compiled once per
-checkout with ``javac`` against pyspark's ``hadoop-client-api`` jar and put
-on the driver class path, which in local mode is every task's class path
-too. Without ``javac`` the session is the stock one.
+the checkpoint's create-then-rename are unchanged.
+
+The shim ships in the project jar with every other ``jvm/*.java``
+(``EpochFiles``, the CDC epoch's one file write). The jar is compiled once
+per checkout with ``javac`` against pyspark's ``jars/`` and put on the
+driver class path, which in local mode is every task's class path too.
+Without ``javac`` the session is the stock one, and every CDC sink writes
+on its own.
 
 The same shim replaces a file on overwrite instead of truncating it in
 place. Each append into an existing parquet directory rewrites its
@@ -171,17 +175,18 @@ def get_spark(
 
 
 _JVM_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm")
-_LOCAL_FS_SRC = os.path.join(_JVM_DIR, "NoForkLocalFs.java")
 LOCAL_FS = "psqlstreamer.NoForkLocalFs$Local"
 LOCAL_ABSTRACT_FS = "psqlstreamer.NoForkLocalFs$Fs"
+EPOCH_FILES = "psqlstreamer.EpochFiles"
 
 
 def _with_local_fs(conf: dict[str, str]) -> dict[str, str]:
-    """``conf`` plus the fork-free local file system: the jar appended to
-    the driver class path, and the two ``file`` scheme keys unless the
-    caller set them. Unchanged when the jar cannot be built, or when the
-    JVM is already up without it (its class path is fixed at launch)."""
-    jar = _local_fs_jar()
+    """``conf`` plus the project jar (``jvm/*.java``) on the driver class
+    path, and the fork-free local file system as the two ``file`` scheme
+    keys unless the caller set them. Unchanged when the jar cannot be
+    built, or when the JVM is already up without it (its class path is
+    fixed at launch)."""
+    jar = _project_jar()
     if jar is None or not _jvm_can_load(LOCAL_FS):
         return conf
     out = dict(conf)
@@ -204,20 +209,31 @@ def _jvm_can_load(cls: str) -> bool:
         return False
 
 
+def _jar_key(sources: list[str], jars: list[str]) -> str:
+    """The project jar's cache key: every source's name and bytes, and the
+    name of every jar it compiles against."""
+    h = hashlib.sha256()
+    for src in sorted(sources):
+        with open(src, "rb") as f:
+            h.update(os.path.basename(src).encode() + b"\0" + f.read() + b"\0")
+    for jar in sorted(jars):
+        h.update(os.path.basename(jar).encode() + b"\0")
+    return h.hexdigest()
+
+
 @functools.cache
-def _local_fs_jar() -> str | None:
-    """The compiled shim, built on first use. The jar is keyed on the
-    source's hash and the Hadoop jar's name and cached in ``jvm/.build``
-    (or the temp dir when the package is read-only). None, after one
-    warning, when ``javac`` is missing or the compile fails."""
-    api = sorted(glob.glob(os.path.join(
-        os.path.dirname(pyspark.__file__), "jars", "hadoop-client-api-*.jar")))
-    if not api:
-        log.warning("no hadoop-client-api jar in pyspark; stock local file system")
+def _project_jar() -> str | None:
+    """Every ``jvm/*.java`` compiled into one jar on first use, against
+    pyspark's ``jars/``. The jar is keyed on ``_jar_key`` and cached in
+    ``jvm/.build`` (or the temp dir when the package is read-only). None,
+    after one warning, when ``javac`` is missing or the compile fails."""
+    jars = sorted(glob.glob(os.path.join(
+        os.path.dirname(pyspark.__file__), "jars", "*.jar")))
+    if not jars:
+        log.warning("no jars in pyspark; stock local file system")
         return None
-    with open(_LOCAL_FS_SRC, "rb") as f:
-        key = hashlib.sha256(f.read() + os.path.basename(api[-1]).encode()).hexdigest()
-    name = f"noforklocalfs-{key[:16]}.jar"
+    sources = sorted(glob.glob(os.path.join(_JVM_DIR, "*.java")))
+    name = f"psqlstreamer-{_jar_key(sources, jars)[:16]}.jar"
     dirs = [os.path.join(_JVM_DIR, ".build"),
             os.path.join(tempfile.gettempdir(), "psql_streamer_spark-jvm")]
     for d in dirs:
@@ -225,18 +241,18 @@ def _local_fs_jar() -> str | None:
             return os.path.join(d, name)
     build = next((d for d in dirs if _writable(d)), None)
     if build is None:
-        log.warning("no writable dir for the fork-free local file system jar; "
-                    "stock local file system")
+        log.warning("no writable dir for the project jar; stock local file system")
         return None
     java_home = os.environ.get("JAVA_HOME")
     javac = os.path.join(java_home, "bin", "javac") if java_home else "javac"
     try:
         with tempfile.TemporaryDirectory(dir=build) as tmp:
             # --release 17: the class files must load on the JVM Spark runs,
-            # however new the javac that compiles them
+            # however new the javac that compiles them; -proc:none: no
+            # annotation processor scan over the class path
             subprocess.run(
-                [javac, "--release", "17", "-nowarn", "-d", tmp, "-cp", api[-1],
-                 _LOCAL_FS_SRC],
+                [javac, "--release", "17", "-nowarn", "-proc:none", "-d", tmp,
+                 "-cp", os.path.join(os.path.dirname(jars[0]), "*"), *sources],
                 check=True, capture_output=True, text=True,
             )
             part = os.path.join(tmp, name)
@@ -245,8 +261,8 @@ def _local_fs_jar() -> str | None:
                     z.write(cls, os.path.relpath(cls, tmp))
             os.replace(part, os.path.join(build, name))
     except (OSError, subprocess.CalledProcessError) as e:
-        log.warning("cannot build the fork-free local file system (%s); "
-                    "stock local file system", getattr(e, "stderr", None) or e)
+        log.warning("cannot build the project jar (%s); stock local file system",
+                    getattr(e, "stderr", None) or e)
         return None
     return os.path.join(build, name)
 

@@ -12,32 +12,50 @@ This is the Spark-native re-expression of the reference's whole runtime
   checkpointLocation           ← BoltDB WAL-position store (F1/F2)
   trigger(...)                 ← mux batchSize/batchFlushInterval (B1)
 
+Fan-out: the epoch's parquet file sinks (EpochParquetSink, ParquetSink and
+a parquet DLQ) land from ONE Spark write. `routing.fan_out` tags each
+decoded row with the outputs it belongs to, using the predicates the
+oracle-checked transforms use; `jvm/EpochFiles.java` writes the tagged
+rows into a `_stage-<epoch>-<uuid>` directory through Spark's commit
+protocol, and the driver then moves each output's files into its sink's
+layout. A failure before the moves leaves only the stage, which readers
+skip and the next run sweeps. Every other sink (Kafka, Noop/Memory,
+Snapshot, any wrapper) gets its own `Sink.write` of the branch the oracle
+checks, as does every sink of a session without the project jar.
+
 Delivery semantics: the micro-batch's source offsets commit to the
 checkpoint only after foreachBatch returns, i.e. after EVERY sink accepted
 the batch — the reference's all-sinks-or-nothing ACK (mux/mux.go:173-189).
-A sink failure fails the epoch; the whole batch is retried; sinks that
-already wrote see it twice → at-least-once, same caveat the reference
-documents (README.md:58), with the per-event UUID enabling downstream
-dedup (F5).
+A sink failure fails the epoch: the foreachBatch exception stops the
+query with no offset committed, and the epoch replays only when the query
+restarts from its checkpoint (there is no in-epoch retry). Sinks that
+wrote before the failure see the replay too → at-least-once, same caveat
+the reference documents (README.md:58), with the per-event UUID enabling
+downstream dedup (F5); an EpochParquetSink replaces its epoch instead.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 import threading
+import uuid
 from dataclasses import dataclass, field
+from urllib.parse import urlparse
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from psql_streamer_spark.caching import persisted
-from psql_streamer_spark.routing import route, topic_expr
-from psql_streamer_spark.streaming.sinks import Sink
+from psql_streamer_spark.routing import fan_out, route, topic_expr
+from psql_streamer_spark.session import EPOCH_FILES, _jvm_can_load
+from psql_streamer_spark.streaming.sinks import EpochParquetSink, ParquetSink, Sink
 from psql_streamer_spark.transforms import (
     decode_cdc_json,
     filter_dml,
     is_dml_event,
     is_valid_event,
+    once_per_jvm,
     serialize_passthrough,
     validate_split,
     with_default_key,
@@ -93,6 +111,40 @@ class PipelineStats:
         )
 
 
+@dataclass(frozen=True)
+class _EpochPlan:
+    """How an epoch reaches its sinks (`CdcPipeline._epoch_plan`)."""
+
+    counters: tuple[Column, ...]
+    #: routes whose sinks land from the one file write, as outputs 0..n-1
+    file_routes: tuple[SinkRoute, ...]
+    #: the DLQ sink lands from it too, as output n
+    dlq_file: bool
+    #: the arguments of routing.fan_out after the frame
+    fan_out: tuple
+    #: each output's columns and those it never holds NULL in, each
+    #: comma-separated
+    out_columns: tuple[tuple[str, str], ...]
+    #: where the write stages its files: the first file sink's directory
+    stage_dir: str
+    #: routes whose sinks write on their own
+    apart: tuple[SinkRoute, ...]
+    dlq_apart: bool
+
+
+@once_per_jvm
+def _epoch_files():
+    """`EpochFiles.write` and `EpochFiles.publish` of the JVM, or None when
+    the JVM was started without the project jar (session.get_spark has
+    then warned once)."""
+    from pyspark import SparkContext
+
+    if not _jvm_can_load(EPOCH_FILES):
+        return None
+    cls = SparkContext._jvm.psqlstreamer.EpochFiles
+    return cls.write, cls.publish
+
+
 class CdcPipeline:
     """File-source CDC pipeline (JSON lines). Kafka differs only in the
     reader options — the transform chain and fan-out are identical.
@@ -132,12 +184,13 @@ class CdcPipeline:
         self.processing_interval = processing_interval
         self.stats = PipelineStats()
         self.query = None
-        self._counters: tuple[Column, ...] | None = None
+        self._plan: _EpochPlan | None = None
+        # the first one-write epoch of each run sweeps stale stage dirs
+        self._swept = False
 
     def _epoch_counters(self, decoded: DataFrame) -> tuple[Column, ...]:
-        """The epoch's `observe` counters, built on the first epoch and
-        reused by every later one (each Column call is py4j round trips;
-        see transforms.once_per_jvm)."""
+        """The epoch's `observe` counters (each Column call is py4j round
+        trips; see transforms.once_per_jvm)."""
         # `routed`/`discarded` use union semantics: an event counts as
         # routed if ANY route takes it, discarded if none does
         any_route = F.lit(False)
@@ -155,31 +208,126 @@ class CdcPipeline:
             F.count(F.when(event & any_route, 1)).alias("n_routed"),
         )
 
+    def _epoch_plan(self, decoded: DataFrame) -> _EpochPlan:
+        """Which sinks the epoch's one file write lands and which write on
+        their own, built on the first epoch and reused by every later one.
+
+        A sink joins the one write when it is a plain EpochParquetSink or
+        ParquetSink (at most one partition column, a decoded one; an
+        unpartitioned one for the DLQ) on the file system of the first
+        such sink, and the session has the project jar. Any other sink,
+        a wrapper included, keeps `Sink.write`."""
+        columns = tuple(decoded.columns)
+        routed = tuple(dict.fromkeys((*columns, "topic", "key", "value")))
+        stage_dir = ""
+
+        def joins(sink, max_partitions: int = 1) -> bool:
+            nonlocal stage_dir
+            parts = getattr(sink, "partition_cols", [])
+            if (
+                _epoch_files() is None
+                or type(sink) not in (EpochParquetSink, ParquetSink)
+                or len(parts) > max_partitions
+                or not set(parts) <= set(columns)
+            ):
+                return False
+            stage_dir = stage_dir or sink.path
+            # the files move by rename, so stage and sink share a file system
+            return urlparse(sink.path)[:2] == urlparse(stage_dir)[:2]
+
+        files, apart, specs, out_columns = [], [], [], []
+        for r in self.routes:
+            if not joins(r.sink):
+                apart.append(r)
+                continue
+            part = (getattr(r.sink, "partition_cols", None) or [None])[0]
+            files.append(r)
+            specs.append(
+                (tuple(r.topic_mapping.items()), r.topic_fallback, r.passthrough, part)
+            )
+            # a route with a fallback always has a topic, and its own
+            # write marks the column required
+            required = "" if r.passthrough or r.topic_fallback is None else "topic"
+            out_columns.append(
+                (",".join(c for c in routed if c != part), required)
+            )
+        dlq_file = self.dlq_sink is not None and joins(self.dlq_sink, 0)
+        if dlq_file:
+            out_columns.append((",".join(columns), ""))
+        return _EpochPlan(
+            counters=self._epoch_counters(decoded),
+            file_routes=tuple(files),
+            dlq_file=dlq_file,
+            fan_out=((*columns, "key", "value"), tuple(specs), dlq_file),
+            out_columns=tuple(out_columns),
+            stage_dir=stage_dir,
+            apart=tuple(apart),
+            dlq_apart=self.dlq_sink is not None and not dlq_file,
+        )
+
+    def _write_files(self, observed: DataFrame, batch_id: int) -> list[SinkRoute]:
+        """The one Spark write of the epoch's file sinks, committed by
+        rename (jvm/EpochFiles.java). Returns the routes that got no rows:
+        their sinks write the empty frame themselves, which leaves what
+        their own writer leaves for one."""
+        plan = self._plan
+        sinks = [r.sink for r in plan.file_routes]
+        if plan.dlq_file:
+            sinks.append(self.dlq_sink)
+        outputs = "\n".join(
+            "\t".join((*s.epoch_output(batch_id), *cols))
+            for s, cols in zip(sinks, plan.out_columns)
+        )
+        tagged = fan_out(
+            serialize_passthrough(with_default_key(observed)), *plan.fan_out
+        )
+        stage = f"{plan.stage_dir.rstrip('/')}/_stage-{batch_id}-{uuid.uuid4().hex}"
+        write, publish = _epoch_files()
+        try:
+            write(tagged._jdf, stage, outputs, not self._swept)
+            self._swept = True
+            empty = publish(observed.sparkSession._jsparkSession, stage, outputs)
+        except Exception:
+            with self.stats._lock:
+                self.stats.sink_errors += 1
+            raise
+        return [
+            plan.file_routes[int(out)] for out in empty.split(",")
+            if out and int(out) < len(plan.file_routes)
+        ]
+
     # -- the per-epoch body (the mux flush) --------------------------------
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        # ONE cached decoded frame serves every branch and every counter
-        # (mux buffer reuse, B2); each branch is the batch transform the
-        # oracle checks, applied to that frame. The counters ride an
-        # `observe` node (CollectMetrics) computed as a SIDE EFFECT of the
-        # first sink write that materializes the frame — no dedicated
-        # stats job per micro-batch. The cache is released when the epoch
-        # exits, failed or not (a leaked persist per micro-batch is a
-        # storage-memory leak on an always-on stream).
+        # ONE decoded frame serves every branch and every counter (mux
+        # buffer reuse, B2). The file sinks land from ONE Spark write of
+        # that frame (`_write_files`); every other sink gets the branch
+        # the oracle checks (validate_split, filter_dml, route), and then
+        # the frame is cached for the epoch and released when it exits,
+        # failed or not (a leaked persist per micro-batch is a
+        # storage-memory leak on an always-on stream). The counters ride
+        # an `observe` node (CollectMetrics) computed as a SIDE EFFECT of
+        # the first write that materializes the frame — no dedicated stats
+        # job per micro-batch.
         from pyspark.sql import Observation
 
         decoded = self.decoder(batch_df)
-        if self._counters is None:
-            self._counters = self._epoch_counters(decoded)
+        if self._plan is None:
+            self._plan = self._epoch_plan(decoded)
+        plan = self._plan
         obs = Observation()
-        observed = decoded.observe(obs, *self._counters)
-        with persisted(observed):
-            valid, dlq = validate_split(observed)
-            events = filter_dml(valid)
-            # fan-out: every sink gets the batch routed by its own mapping;
-            # any failure aborts the epoch BEFORE offsets commit
-            # (all-or-nothing ACK). The first write materializes the cache
-            # and fires the observed counters.
-            for r in self.routes:
+        observed = decoded.observe(obs, *plan.counters)
+        shared = bool(plan.apart) or plan.dlq_apart
+        with persisted(observed) if shared else contextlib.nullcontext(observed):
+            apart = list(plan.apart)
+            if plan.file_routes or plan.dlq_file:
+                apart += self._write_files(observed, batch_id)
+            if apart or plan.dlq_apart:
+                valid, dlq = validate_split(observed)
+                events = filter_dml(valid)
+            # fan-out: every other sink gets the batch routed by its own
+            # mapping; any failure aborts the epoch BEFORE offsets commit
+            # (all-or-nothing ACK)
+            for r in apart:
                 if r.passthrough:
                     routed = events.withColumn("topic", topic_expr({}))
                 else:
@@ -197,7 +345,7 @@ class CdcPipeline:
 
             # DLQ after the primary fan-out (an epoch retry re-dead-letters
             # either way — at-least-once); skipped entirely on clean batches
-            if self.dlq_sink is not None and counts["n_dlq"]:
+            if plan.dlq_apart and counts["n_dlq"]:
                 self.dlq_sink.write(dlq, batch_id)
 
             with self.stats._lock:
@@ -210,6 +358,7 @@ class CdcPipeline:
 
     # -- lifecycle ---------------------------------------------------------
     def start(self, available_now: bool = False):
+        self._swept = False
         # the reader shape belongs to the wire format: JSON-lines dialects
         # read text; a decoder of binary frame files (sources/pgoutput_cdc.
         # PgoutputStreamDecoder) declares its own format and schema

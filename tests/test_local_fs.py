@@ -3,7 +3,8 @@ local session (`psql_streamer_spark/jvm/NoForkLocalFs.java`), checked
 against stock Hadoop: the classes the `file` scheme resolves to, the
 modes files and directories get, link probes, Hive's rename rule, the
 checksum check on read, and overwrites that replace a file instead of
-truncating it."""
+truncating it. Also the one project jar it ships in, with every
+`jvm/*.java`."""
 
 from __future__ import annotations
 
@@ -12,7 +13,14 @@ import stat
 
 import pytest
 
-from psql_streamer_spark.session import LOCAL_ABSTRACT_FS, LOCAL_FS, _with_local_fs
+from psql_streamer_spark.session import (
+    _JVM_DIR,
+    EPOCH_FILES,
+    LOCAL_ABSTRACT_FS,
+    LOCAL_FS,
+    _jar_key,
+    _with_local_fs,
+)
 from psql_streamer_spark.streaming import ParquetSink
 
 
@@ -46,6 +54,35 @@ def test_conf_merge_appends_the_jar_and_keeps_a_callers_scheme(spark):
     assert first == "/opt/x.jar" and jar.endswith(".jar") and os.path.isfile(jar)
     assert out["spark.hadoop.fs.file.impl"] == "org.apache.hadoop.fs.LocalFileSystem"
     assert out["spark.hadoop.fs.AbstractFileSystem.file.impl"] == LOCAL_ABSTRACT_FS
+
+
+def test_one_jar_holds_every_jvm_source(spark):
+    for cls in (LOCAL_FS, EPOCH_FILES):
+        assert spark._jvm.java.lang.Class.forName(cls).getName() == cls
+
+
+def test_jar_key_covers_every_source_and_the_class_path(tmp_path):
+    """Editing any one `jvm/*.java`, or another set of pyspark jars,
+    builds a new jar instead of loading a stale one."""
+    import shutil
+
+    sources = []
+    for src in sorted(os.listdir(_JVM_DIR)):
+        if src.endswith(".java"):
+            sources.append(str(tmp_path / src))
+            shutil.copy(os.path.join(_JVM_DIR, src), sources[-1])
+    assert len(sources) >= 2
+    jars = ["/jars/hadoop-client-api-3.4.2.jar", "/jars/spark-sql_2.13-4.1.2.jar"]
+    key = _jar_key(sources, jars)
+    assert _jar_key(list(reversed(sources)), jars) == key
+    assert _jar_key(sources, jars[:1]) != key
+    assert _jar_key(sources, [jars[0], "/jars/spark-sql_2.13-4.1.3.jar"]) != key
+    for src in sources:
+        with open(src, "a") as f:
+            f.write("\n")
+        edited = _jar_key(sources, jars)
+        assert edited != key, src
+        key = edited
 
 
 def test_written_files_and_dirs_keep_their_modes(spark, tmp_path):

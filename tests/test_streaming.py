@@ -18,7 +18,28 @@ from psql_streamer_spark.streaming import (
     ParquetSink,
     SinkRoute,
 )
-from psql_streamer_spark.streaming.sinks import FailNTimesSink, KafkaSink
+from psql_streamer_spark.streaming.sinks import KafkaSink
+
+
+class FailNTimesSink(NoopSink):
+    """Test double for the retry path (common/retry.go:41-76): fail the
+    first N epochs, then succeed — proves no events are lost or
+    double-committed across sink failures."""
+
+    def __init__(self, fail_times: int, name: str = "flaky"):
+        super().__init__(name)
+        self.fail_times = fail_times
+        self.failures = 0
+
+    def write(self, batch_df, batch_id: int) -> None:
+        with self._lock:
+            if self.failures < self.fail_times:
+                self.failures += 1
+                raise RuntimeError(
+                    f"{self.name}: injected temporary failure "
+                    f"{self.failures}/{self.fail_times}"
+                )
+        super().write(batch_df, batch_id)
 
 
 def _event(i: int, table: str = "test", action: str = "insert") -> str:
@@ -2271,21 +2292,23 @@ def test_metrics_carry_epoch_phases(spark, dirs):
 
 
 def _epoch_round_trips(
-    spark, mapping: dict, lines: list[str], decoder=None
+    spark, mapping: dict, lines: list[str], decoder=None, sinks=None
 ) -> int:
     """py4j round trips from Python in one warm `_process_batch`: two
-    NoopSink routes (``mapping``, and a fallback-only one) plus a NoopSink
-    DLQ, on a static frame decoded by ``decoder`` (the pipeline default
-    when None). Two epochs warm the pipeline up first."""
+    routes (``mapping``, and a fallback-only one) plus a DLQ, on a static
+    frame decoded by ``decoder`` (the pipeline default when None). The
+    three sinks are NoopSinks unless ``sinks`` gives them. Two epochs warm
+    the pipeline up first."""
     import threading
 
     from py4j.clientserver import ClientServerConnection
 
+    mapped, fallback, dlq = sinks or (
+        NoopSink("mapped"), NoopSink("fallback"), NoopSink("dlq"))
     pipe = CdcPipeline(
         spark, "unused", "unused",
-        routes=[SinkRoute(NoopSink("mapped"), mapping),
-                SinkRoute(NoopSink("fallback"), {}, "fb")],
-        dlq_sink=NoopSink("dlq"), decoder=decoder,
+        routes=[SinkRoute(mapped, mapping), SinkRoute(fallback, {}, "fb")],
+        dlq_sink=dlq, decoder=decoder,
     )
     batch = spark.createDataFrame([(ln,) for ln in lines], "value string")
     for epoch in range(2):
@@ -2334,6 +2357,28 @@ def test_epoch_builds_no_columns(spark):
     calls = _epoch_round_trips(spark, wide, mixed, auto)
     # measured 47 on a 4-CPU box (3,034 before the dialect memo)
     assert calls < 150, calls
+
+
+def test_file_sink_epoch_builds_no_columns(spark, tmp_path):
+    """The twin of test_epoch_builds_no_columns for an epoch whose sinks
+    all land from its one file write: the fan-out projection is built
+    once per JVM too, so a warm epoch's round trips do not grow with the
+    route map."""
+    from psql_streamer_spark.streaming.sinks import EpochParquetSink
+
+    def sinks(tag: str):
+        return (
+            EpochParquetSink(str(tmp_path / tag / "mapped"), "mapped"),
+            ParquetSink(str(tmp_path / tag / "fallback"), "fallback", ["table"]),
+            EpochParquetSink(str(tmp_path / tag / "dlq"), "dlq"),
+        )
+
+    lines = [_event(i, table=f"t{i % 7}") for i in range(95)] + ["not json"] * 5
+    wide = {f"t{i}": f"topic_{i}" for i in range(200)}
+    calls = _epoch_round_trips(spark, wide, lines, sinks=sinks("wide"))
+    assert calls < 150, calls
+    assert _epoch_round_trips(
+        spark, {"t0": "a", "t1": "b"}, lines, sinks=sinks("narrow")) == calls
 
 
 def _dialect_line(i: int, table: str) -> str:
