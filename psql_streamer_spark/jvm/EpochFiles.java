@@ -1,8 +1,6 @@
 package psqlstreamer;
 
 import java.io.IOException;
-import java.util.Arrays;
-import java.util.List;
 
 import org.apache.hadoop.conf.Configuration;
 import org.apache.hadoop.fs.FileStatus;
@@ -21,7 +19,6 @@ import org.apache.spark.sql.execution.datasources.OutputWriterFactory;
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat;
 import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport;
 import org.apache.spark.sql.types.DataType;
-import org.apache.spark.sql.types.StructField;
 import org.apache.spark.sql.types.StructType;
 
 /**
@@ -37,7 +34,7 @@ import org.apache.spark.sql.types.StructType;
  * columns, in its own order: the files, their footers and their read
  * schema are those the sink's own {@code write.parquet} would leave.
  *
- * <p>Each output is one line of the {@code outputs} argument of both, with five
+ * <p>Each output is one line of the {@code outputs} argument of both, with four
  * tab-separated fields; its number is its line number, from 0. First how the
  * output lands:
  *
@@ -50,10 +47,9 @@ import org.apache.spark.sql.types.StructType;
  *       is written again, as an append job does.
  * </ul>
  *
- * then the target directory, the partition column or an empty field, the
- * output's columns, comma-separated, and those of them that the output never
- * holds NULL in (the sink's own write would mark them required in the file
- * schema), comma-separated.
+ * then the target directory, the partition column or an empty field, and the
+ * JSON of the schema the sink's own write would give its files: the columns
+ * in their order, each with its nullability.
  */
 public class EpochFiles extends ParquetFileFormat {
   static final String OUTPUTS = "psqlstreamer.epochfiles.outputs";
@@ -66,17 +62,17 @@ public class EpochFiles extends ParquetFileFormat {
 
   /**
    * Writes {@code tagged} into the directory {@code stage} in one Spark job.
-   * With {@code sweep}, first deletes the {@code _stage-*} siblings of
-   * {@code stage} that a run which failed before its {@link #publish} left
-   * behind.
+   * Unless {@code stale} is null, first deletes the directories that glob
+   * names: the stages that a run of the same writer left behind when it
+   * failed before its {@link #publish}.
    */
-  public static void write(Dataset<Row> tagged, String stage, String outputs, boolean sweep)
+  public static void write(Dataset<Row> tagged, String stage, String outputs, String stale)
       throws IOException {
-    if (sweep) {
-      Path stageDir = new Path(stage);
-      FileSystem fs = stageDir.getFileSystem(tagged.sparkSession().sessionState().newHadoopConf());
-      FileStatus[] stale = fs.globStatus(new Path(stageDir.getParent(), "_stage-*"));
-      for (FileStatus s : stale == null ? new FileStatus[0] : stale) {
+    if (stale != null) {
+      Path glob = new Path(stale);
+      FileSystem fs = glob.getFileSystem(tagged.sparkSession().sessionState().newHadoopConf());
+      FileStatus[] found = fs.globStatus(glob);
+      for (FileStatus s : found == null ? new FileStatus[0] : found) {
         fs.delete(s.getPath(), true);
       }
     }
@@ -87,23 +83,28 @@ public class EpochFiles extends ParquetFileFormat {
   /**
    * Moves every output's files from the written {@code stage} into place and
    * deletes the stage. Returns the numbers of the outputs that got no rows,
-   * comma-separated: their targets are left as they were.
+   * comma-separated: their targets are left as they were. Raises when the
+   * stage holds no committed write, which would read as every output empty.
    */
   public static String publish(SparkSession spark, String stage, String outputs)
       throws IOException {
     Path stageDir = new Path(stage);
-    FileSystem fs = stageDir.getFileSystem(spark.sessionState().newHadoopConf());
+    Configuration conf = spark.sessionState().newHadoopConf();
+    FileSystem fs = stageDir.getFileSystem(conf);
+    boolean marked = conf.getBoolean("mapreduce.fileoutputcommitter.marksuccessfuljobs", true);
+    if (!fs.exists(marked ? new Path(stageDir, "_SUCCESS") : stageDir)) {
+      throw new IOException("no committed write in " + stage);
+    }
     StringBuilder empty = new StringBuilder();
-    String[] lines = outputs.split("\n");
-    for (int out = 0; out < lines.length; out++) {
-      String[] f = lines[out].split("\t", -1);
+    Output[] parsed = Output.parse(outputs);
+    for (int out = 0; out < parsed.length; out++) {
       Path rows = new Path(stageDir, "_out=" + out);
       if (!fs.exists(rows)) {
         empty.append(empty.length() == 0 ? "" : ",").append(out);
-      } else if (f[0].equals("replace")) {
-        replace(fs, new Path(rows, "_p=" + DEFAULT_PARTITION), new Path(f[1]));
+      } else if (parsed[out].replace) {
+        replace(fs, new Path(rows, "_p=" + DEFAULT_PARTITION), parsed[out].target);
       } else {
-        append(fs, rows, new Path(f[1]), f[2]);
+        append(fs, rows, parsed[out].target, parsed[out].column);
       }
     }
     fs.delete(stageDir, true);
@@ -144,26 +145,42 @@ public class EpochFiles extends ParquetFileFormat {
       scala.collection.immutable.Map<String, String> options,
       StructType dataSchema) {
     OutputWriterFactory parquet = super.prepareWrite(spark, job, options, dataSchema);
-    String[] lines = options.apply(OUTPUTS).split("\n");
-    int[][] ordinals = new int[lines.length][];
-    StructType[] schemas = new StructType[lines.length];
-    for (int out = 0; out < lines.length; out++) {
-      String[] f = lines[out].split("\t", -1);
-      String[] names = f[3].split(",");
-      List<String> required = Arrays.asList(f[4].split(","));
+    Output[] parsed = Output.parse(options.apply(OUTPUTS));
+    int[][] ordinals = new int[parsed.length][];
+    StructType[] schemas = new StructType[parsed.length];
+    for (int out = 0; out < parsed.length; out++) {
+      schemas[out] = parsed[out].schema;
+      String[] names = schemas[out].fieldNames();
       ordinals[out] = new int[names.length];
-      StructField[] fields = new StructField[names.length];
       for (int i = 0; i < names.length; i++) {
         ordinals[out][i] = dataSchema.fieldIndex(names[i]);
-        fields[i] = dataSchema.fields()[ordinals[out][i]];
-        if (required.contains(names[i])) {
-          fields[i] = new StructField(
-              fields[i].name(), fields[i].dataType(), false, fields[i].metadata());
-        }
       }
-      schemas[out] = new StructType(fields);
     }
     return new Factory(parquet, ordinals, schemas);
+  }
+
+  /** One line of the {@code outputs} argument. */
+  static final class Output {
+    final boolean replace;
+    final Path target;
+    final String column;
+    final StructType schema;
+
+    private Output(String[] f) {
+      replace = f[0].equals("replace");
+      target = new Path(f[1]);
+      column = f[2];
+      schema = (StructType) DataType.fromJson(f[3]);
+    }
+
+    static Output[] parse(String outputs) {
+      String[] lines = outputs.split("\n");
+      Output[] parsed = new Output[lines.length];
+      for (int out = 0; out < lines.length; out++) {
+        parsed[out] = new Output(lines[out].split("\t", -1));
+      }
+      return parsed;
+    }
   }
 
   /** Parquet's writer factory, handing each {@code _out} its own columns. */

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from psql_streamer_spark.transforms import is_dml_event, is_valid_event, once_per_jvm
+from psql_streamer_spark.transforms import _dml_event, _valid_event, once_per_jvm
 
 
 def topic_expr(
@@ -86,8 +86,8 @@ def _fan_out(
     columns: tuple[str, ...], routes: tuple[tuple, ...], dead_letters: bool
 ) -> tuple[Column, ...]:
     none = F.lit(None).cast("string")
-    valid = is_valid_event()
-    event = valid & is_dml_event()
+    valid = _valid_event()
+    event = valid & _dml_event()
     tags = []
     for out, (mapping, fallback, passthrough, partition) in enumerate(routes):
         topic = none if passthrough else topic_expr(dict(mapping), fallback)

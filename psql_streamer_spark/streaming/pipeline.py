@@ -16,10 +16,12 @@ Fan-out: the epoch's parquet file sinks (EpochParquetSink, ParquetSink and
 a parquet DLQ) land from ONE Spark write. `routing.fan_out` tags each
 decoded row with the outputs it belongs to, using the predicates the
 oracle-checked transforms use; `jvm/EpochFiles.java` writes the tagged
-rows into a `_stage-<epoch>-<uuid>` directory through Spark's commit
-protocol, and the driver then moves each output's files into its sink's
-layout. A failure before the moves leaves only the stage, which readers
-skip and the next run sweeps. Every other sink (Kafka, Noop/Memory,
+rows into a `_stage-<pipeline>-<epoch>-<uuid>` directory through Spark's
+commit protocol, and the driver then moves each output's files into its
+sink's layout. A failure before the moves leaves only the stage, which
+readers skip and the pipeline's next run sweeps; `<pipeline>` (a hash of
+the checkpoint directory) keeps that sweep off the stages of other
+pipelines that share the sink. Every other sink (Kafka, Noop/Memory,
 Snapshot, any wrapper) gets its own `Sink.write` of the branch the oracle
 checks, as does every sink of a session without the project jar.
 
@@ -36,7 +38,7 @@ downstream dedup (F5); an EpochParquetSink replaces its epoch instead.
 
 from __future__ import annotations
 
-import contextlib
+import hashlib
 import os
 import threading
 import uuid
@@ -45,6 +47,7 @@ from urllib.parse import urlparse
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from psql_streamer_spark.caching import persisted
 from psql_streamer_spark.routing import fan_out, route, topic_expr
@@ -122,9 +125,8 @@ class _EpochPlan:
     dlq_file: bool
     #: the arguments of routing.fan_out after the frame
     fan_out: tuple
-    #: each output's columns and those it never holds NULL in, each
-    #: comma-separated
-    out_columns: tuple[tuple[str, str], ...]
+    #: each output's file schema as JSON: that of its sink's own write
+    out_schemas: tuple[str, ...]
     #: where the write stages its files: the first file sink's directory
     stage_dir: str
     #: routes whose sinks write on their own
@@ -185,7 +187,8 @@ class CdcPipeline:
         self.stats = PipelineStats()
         self.query = None
         self._plan: _EpochPlan | None = None
-        # the first one-write epoch of each run sweeps stale stage dirs
+        # the first one-write epoch of each run sweeps this pipeline's
+        # stale stage dirs
         self._swept = False
 
     def _epoch_counters(self, decoded: DataFrame) -> tuple[Column, ...]:
@@ -208,7 +211,7 @@ class CdcPipeline:
             F.count(F.when(event & any_route, 1)).alias("n_routed"),
         )
 
-    def _epoch_plan(self, decoded: DataFrame) -> _EpochPlan:
+    def _epoch_plan(self, decoded: DataFrame, sink_frame) -> _EpochPlan:
         """Which sinks the epoch's one file write lands and which write on
         their own, built on the first epoch and reused by every later one.
 
@@ -216,9 +219,12 @@ class CdcPipeline:
         ParquetSink (at most one partition column, a decoded one; an
         unpartitioned one for the DLQ) on the file system of the first
         such sink, and the session has the project jar. Any other sink,
-        a wrapper included, keeps `Sink.write`."""
+        a wrapper included, keeps `Sink.write`. Each file output's schema
+        is read off the frame ``sink_frame`` builds for its sink on the
+        per-sink path (no job runs)."""
         columns = tuple(decoded.columns)
-        routed = tuple(dict.fromkeys((*columns, "topic", "key", "value")))
+        valid, dlq = validate_split(decoded)
+        events = filter_dml(valid)
         stage_dir = ""
 
         def joins(sink, max_partitions: int = 1) -> bool:
@@ -235,7 +241,7 @@ class CdcPipeline:
             # the files move by rename, so stage and sink share a file system
             return urlparse(sink.path)[:2] == urlparse(stage_dir)[:2]
 
-        files, apart, specs, out_columns = [], [], [], []
+        files, apart, specs, out_schemas = [], [], [], []
         for r in self.routes:
             if not joins(r.sink):
                 apart.append(r)
@@ -245,21 +251,18 @@ class CdcPipeline:
             specs.append(
                 (tuple(r.topic_mapping.items()), r.topic_fallback, r.passthrough, part)
             )
-            # a route with a fallback always has a topic, and its own
-            # write marks the column required
-            required = "" if r.passthrough or r.topic_fallback is None else "topic"
-            out_columns.append(
-                (",".join(c for c in routed if c != part), required)
-            )
+            # a partition column lives in the directory names, not the files
+            schema = sink_frame(events, r).schema
+            out_schemas.append(StructType([f for f in schema if f.name != part]).json())
         dlq_file = self.dlq_sink is not None and joins(self.dlq_sink, 0)
         if dlq_file:
-            out_columns.append((",".join(columns), ""))
+            out_schemas.append(dlq.schema.json())
         return _EpochPlan(
             counters=self._epoch_counters(decoded),
             file_routes=tuple(files),
             dlq_file=dlq_file,
             fan_out=((*columns, "key", "value"), tuple(specs), dlq_file),
-            out_columns=tuple(out_columns),
+            out_schemas=tuple(out_schemas),
             stage_dir=stage_dir,
             apart=tuple(apart),
             dlq_apart=self.dlq_sink is not None and not dlq_file,
@@ -275,16 +278,20 @@ class CdcPipeline:
         if plan.dlq_file:
             sinks.append(self.dlq_sink)
         outputs = "\n".join(
-            "\t".join((*s.epoch_output(batch_id), *cols))
-            for s, cols in zip(sinks, plan.out_columns)
+            "\t".join((*s.epoch_output(batch_id), schema))
+            for s, schema in zip(sinks, plan.out_schemas)
         )
         tagged = fan_out(
             serialize_passthrough(with_default_key(observed)), *plan.fan_out
         )
-        stage = f"{plan.stage_dir.rstrip('/')}/_stage-{batch_id}-{uuid.uuid4().hex}"
+        # the stage names its pipeline, so a sweep never takes the stage
+        # of another pipeline that shares the sink
+        me = hashlib.sha256(self.checkpoint_dir.encode()).hexdigest()[:16]
+        prefix = f"{plan.stage_dir.rstrip('/')}/_stage-{me}-"
+        stage = f"{prefix}{batch_id}-{uuid.uuid4().hex}"
         write, publish = _epoch_files()
         try:
-            write(tagged._jdf, stage, outputs, not self._swept)
+            write(tagged._jdf, stage, outputs, None if self._swept else prefix + "*")
             self._swept = True
             empty = publish(observed.sparkSession._jsparkSession, stage, outputs)
         except Exception:
@@ -301,23 +308,32 @@ class CdcPipeline:
         # ONE decoded frame serves every branch and every counter (mux
         # buffer reuse, B2). The file sinks land from ONE Spark write of
         # that frame (`_write_files`); every other sink gets the branch
-        # the oracle checks (validate_split, filter_dml, route), and then
-        # the frame is cached for the epoch and released when it exits,
-        # failed or not (a leaked persist per micro-batch is a
-        # storage-memory leak on an always-on stream). The counters ride
-        # an `observe` node (CollectMetrics) computed as a SIDE EFFECT of
-        # the first write that materializes the frame — no dedicated stats
-        # job per micro-batch.
+        # the oracle checks (validate_split, filter_dml, route). The frame
+        # is cached for the epoch and released when it exits, failed or
+        # not (a leaked persist per micro-batch is a storage-memory leak
+        # on an always-on stream); it serves the write of a route that got
+        # no rows, and every other sink. The counters ride an `observe`
+        # node (CollectMetrics) computed as a SIDE EFFECT of the first
+        # write that materializes the frame — no dedicated stats job per
+        # micro-batch.
         from pyspark.sql import Observation
+
+        def sink_frame(events: DataFrame, r: SinkRoute) -> DataFrame:
+            """What ``r``'s sink is handed on the per-sink path: the DML
+            ``events`` routed by its own rules, keyed and serialized."""
+            if r.passthrough:
+                routed = events.withColumn("topic", topic_expr({}))
+            else:
+                routed = route(events, r.topic_mapping, r.topic_fallback)
+            return serialize_passthrough(with_default_key(routed))
 
         decoded = self.decoder(batch_df)
         if self._plan is None:
-            self._plan = self._epoch_plan(decoded)
+            self._plan = self._epoch_plan(decoded, sink_frame)
         plan = self._plan
         obs = Observation()
         observed = decoded.observe(obs, *plan.counters)
-        shared = bool(plan.apart) or plan.dlq_apart
-        with persisted(observed) if shared else contextlib.nullcontext(observed):
+        with persisted(observed):
             apart = list(plan.apart)
             if plan.file_routes or plan.dlq_file:
                 apart += self._write_files(observed, batch_id)
@@ -328,14 +344,8 @@ class CdcPipeline:
             # mapping; any failure aborts the epoch BEFORE offsets commit
             # (all-or-nothing ACK)
             for r in apart:
-                if r.passthrough:
-                    routed = events.withColumn("topic", topic_expr({}))
-                else:
-                    routed = route(events, r.topic_mapping, r.topic_fallback)
                 try:
-                    r.sink.write(
-                        serialize_passthrough(with_default_key(routed)), batch_id
-                    )
+                    r.sink.write(sink_frame(events, r), batch_id)
                 except Exception:
                     with self.stats._lock:
                         self.stats.sink_errors += 1

@@ -64,9 +64,8 @@ def once_per_jvm(build):
 
 
 # -- T1: message-type dispatch (postgres.go:320-331) -----------------------
-def is_dml_event(df: DataFrame | None = None) -> Column:
-    """Insert/update/delete — not a Begin/Commit/Origin-style record. The
-    predicate names its columns, so it serves any frame, ``df`` or not."""
+def is_dml_event(df: DataFrame) -> Column:
+    """Insert/update/delete — not a Begin/Commit/Origin-style record."""
     return _dml_event()
 
 
@@ -170,12 +169,11 @@ def with_envelope(
 
 
 # -- T5: validation + dead-letter split (kafka.go:180-192) ------------------
-def is_valid_event(df: DataFrame | None = None) -> Column:
+def is_valid_event(df: DataFrame) -> Column:
     """An event is valid iff it parsed and carries a non-empty UUID — the
     reference rejects unparseable/UUID-less events (kafka.go:180-192).
     Non-DML actions (begin/commit) are NOT invalid; they're filtered
-    separately by filter_dml (T1), never dead-lettered. Like
-    ``is_dml_event``, it serves any frame."""
+    separately by filter_dml (T1), never dead-lettered."""
     return _valid_event()
 
 

@@ -1,7 +1,7 @@
 """The CDC epoch's one file write (`CdcPipeline._write_files`,
 `psql_streamer_spark/jvm/EpochFiles.java`): an epoch's EpochParquetSink,
 ParquetSink and parquet DLQ outputs land from one Spark job, staged under
-`_stage-<epoch>-<uuid>` and moved into each sink's layout. Each check runs
+`_stage-<pipeline>-<epoch>-<uuid>` and moved into each sink's layout. Each check runs
 against the per-sink path, which the same sinks take behind a wrapper that
 only forwards `write`."""
 
@@ -200,7 +200,7 @@ def test_crash_before_the_moves_leaves_no_partial_epoch(spark, dirs, monkeypatch
     assert crashed.stats.sink_errors == 1
 
     (stage,) = _stages(tmp)
-    assert os.path.basename(stage).startswith("_stage-1-")
+    assert re.fullmatch(r"_stage-[0-9a-f]{16}-1-[0-9a-f]{32}", os.path.basename(stage))
     assert any(f.endswith(".parquet") for _, _, fs in os.walk(stage) for f in fs)
     primary = EpochParquetSink(os.path.join(root, "primary"))
     counts = lambda: (  # noqa: E731
@@ -273,3 +273,62 @@ def test_epoch_sink_read_matches_the_epoch_glob(spark, tmp_path):
     assert [f.name for f in read.schema] == ["id", "v", "extra", "epoch"]
     assert sorted(read.collect()) == sorted(globbed.collect())
     assert sorted(r.id for r in read.collect()) == [1, 2]
+
+
+def test_pipelines_sharing_a_sink_keep_each_others_stages(spark, tmp_path, monkeypatch):
+    """Two pipelines stage in the ParquetSink they share. The first epoch
+    of one runs, sweep included, while the other's epoch sits between its
+    staged write and its moves: the sweep takes only its own pipeline's
+    stages, so both epochs' rows land."""
+    shared = ParquetSink(str(tmp_path / "shared"), "shared", ["table"])
+    pipes = [
+        CdcPipeline(spark, "unused", str(tmp_path / f"ckpt-{tag}"),
+                    routes=[SinkRoute(shared, {}, tag)],
+                    dlq_sink=EpochParquetSink(str(tmp_path / f"dlq-{tag}"), "dlq"))
+        for tag in ("a", "b")
+    ]
+    batches = [
+        spark.createDataFrame([(_event(n + i, table=f"t{i % 2}"),) for i in range(5)]
+                              + [("not json",)], "value string")
+        for n in (0, 100)
+    ]
+    write, publish = pipeline._epoch_files()
+    waiting = []
+
+    def publish_after_a(*args):
+        if not waiting:
+            waiting.append(_stages(tmp_path))
+            pipes[0]._process_batch(batches[0], 0)
+        return publish(*args)
+
+    monkeypatch.setattr(pipeline, "_epoch_files", lambda: (write, publish_after_a))
+    pipes[1]._process_batch(batches[1], 0)
+
+    assert len(waiting[0]) == 1 and waiting[0][0].startswith(shared.path)
+    assert [p._plan.file_routes for p in pipes] == [(p.routes[0],) for p in pipes]
+    rows = spark.read.parquet(shared.path)
+    assert sorted(r.topic for r in rows.collect()) == ["a"] * 5 + ["b"] * 5
+    assert [EpochParquetSink(str(tmp_path / f"dlq-{t}")).read(spark).count()
+            for t in "ab"] == [1, 1]
+    assert not _stages(tmp_path)
+
+
+def test_a_stage_gone_before_the_moves_fails_the_epoch(spark, tmp_path, monkeypatch):
+    """A stage that vanished between the write and the moves fails the
+    epoch instead of publishing every output as empty."""
+    import shutil
+
+    write, publish = pipeline._epoch_files()
+
+    def lose_stage(spark_, stage, outputs):
+        shutil.rmtree(stage)
+        return publish(spark_, stage, outputs)
+
+    monkeypatch.setattr(pipeline, "_epoch_files", lambda: (write, lose_stage))
+    root = str(tmp_path / "out")
+    pipe = _pipeline(spark, "unused", root, _cdc_sinks(root)[:1])
+    batch = spark.createDataFrame([(_event(i),) for i in range(3)], "value string")
+    with pytest.raises(Exception, match="no committed write in"):
+        pipe._process_batch(batch, 0)
+    assert pipe.stats.sink_errors == 1 and pipe.stats.batches == 0
+    assert os.listdir(os.path.join(root, "primary")) == []
