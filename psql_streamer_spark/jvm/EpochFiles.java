@@ -8,7 +8,6 @@ import org.apache.hadoop.fs.FileSystem;
 import org.apache.hadoop.fs.Path;
 import org.apache.hadoop.mapreduce.Job;
 import org.apache.hadoop.mapreduce.TaskAttemptContext;
-import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl;
 import org.apache.spark.sql.Dataset;
 import org.apache.spark.sql.Row;
 import org.apache.spark.sql.SparkSession;
@@ -202,16 +201,17 @@ public class EpochFiles extends ParquetFileFormat {
 
     /**
      * The parquet writer reads the schema it writes from the task's
-     * configuration, so each file gets a copy that holds its output's.
+     * configuration when it is made, so the task's own configuration takes
+     * each file's output schema just before its writer is made. A task makes
+     * its writers one at a time, on its own thread, so no file needs a copy
+     * of the configuration (over a thousand entries).
      */
     @Override
     public OutputWriter newInstance(String path, StructType dataSchema, TaskAttemptContext context) {
       int at = path.lastIndexOf("/_out=") + "/_out=".length();
       int out = Integer.parseInt(path.substring(at, path.indexOf('/', at)));
-      Configuration conf = new Configuration(context.getConfiguration());
-      ParquetWriteSupport.setSchema(schemas[out], conf);
-      OutputWriter file = parquet.newInstance(
-          path, schemas[out], new TaskAttemptContextImpl(conf, context.getTaskAttemptID()));
+      ParquetWriteSupport.setSchema(schemas[out], context.getConfiguration());
+      OutputWriter file = parquet.newInstance(path, schemas[out], context);
       return new Projected(file, ordinals[out], schemas[out]);
     }
   }

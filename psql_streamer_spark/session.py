@@ -38,6 +38,7 @@ per epoch. A symlink is still written through, as stock.
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import glob
 import hashlib
@@ -225,8 +226,10 @@ def _jar_key(sources: list[str], jars: list[str]) -> str:
 def _project_jar() -> str | None:
     """Every ``jvm/*.java`` compiled into one jar on first use, against
     pyspark's ``jars/``. The jar is keyed on ``_jar_key`` and cached in
-    ``jvm/.build`` (or the temp dir when the package is read-only). None,
-    after one warning, when ``javac`` is missing or the compile fails."""
+    ``jvm/.build`` (or the temp dir when the package is read-only). A build
+    into ``jvm/.build`` deletes the jars of older sources there; the temp
+    dir is shared with other checkouts, so its jars stay. None, after one
+    warning, when ``javac`` is missing or the compile fails."""
     jars = sorted(glob.glob(os.path.join(
         os.path.dirname(pyspark.__file__), "jars", "*.jar")))
     if not jars:
@@ -264,7 +267,19 @@ def _project_jar() -> str | None:
         log.warning("cannot build the project jar (%s); stock local file system",
                     getattr(e, "stderr", None) or e)
         return None
+    if build == dirs[0]:
+        _drop_stale_jars(build, name)
     return os.path.join(build, name)
+
+
+def _drop_stale_jars(build: str, keep: str) -> None:
+    """Delete every project jar in ``build`` but ``keep``, the legacy
+    ``noforklocalfs-*.jar`` included."""
+    for pattern in ("psqlstreamer-*.jar", "noforklocalfs-*.jar"):
+        for jar in glob.glob(os.path.join(build, pattern)):
+            if os.path.basename(jar) != keep:
+                with contextlib.suppress(OSError):
+                    os.remove(jar)
 
 
 def _writable(d: str) -> bool:

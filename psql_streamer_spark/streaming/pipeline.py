@@ -19,9 +19,10 @@ oracle-checked transforms use; `jvm/EpochFiles.java` writes the tagged
 rows into a `_stage-<pipeline>-<epoch>-<uuid>` directory through Spark's
 commit protocol, and the driver then moves each output's files into its
 sink's layout. A failure before the moves leaves only the stage, which
-readers skip and the pipeline's next run sweeps; `<pipeline>` (a hash of
-the checkpoint directory) keeps that sweep off the stages of other
-pipelines that share the sink. Every other sink (Kafka, Noop/Memory,
+readers skip and the pipeline's next run sweeps (after a rewind, under
+the old checkpoint's name too); `<pipeline>` (a hash of the checkpoint
+directory) keeps that sweep off the stages of other pipelines that share
+the sink. Every other sink (Kafka, Noop/Memory,
 Snapshot, any wrapper) gets its own `Sink.write` of the branch the oracle
 checks, as does every sink of a session without the project jar.
 
@@ -134,6 +135,11 @@ class _EpochPlan:
     dlq_apart: bool
 
 
+def _pipeline_hash(checkpoint_dir: str) -> str:
+    """The pipeline's name in its stage dirs."""
+    return hashlib.sha256(checkpoint_dir.encode()).hexdigest()[:16]
+
+
 @once_per_jvm
 def _epoch_files():
     """`EpochFiles.write` and `EpochFiles.publish` of the JVM, or None when
@@ -188,8 +194,9 @@ class CdcPipeline:
         self.query = None
         self._plan: _EpochPlan | None = None
         # the first one-write epoch of each run sweeps this pipeline's
-        # stale stage dirs
+        # stale stage dirs, and those of the checkpoints it rewound from
         self._swept = False
+        self._rewound_from: set[str] = set()
 
     def _epoch_counters(self, decoded: DataFrame) -> tuple[Column, ...]:
         """The epoch's `observe` counters (each Column call is py4j round
@@ -286,13 +293,18 @@ class CdcPipeline:
         )
         # the stage names its pipeline, so a sweep never takes the stage
         # of another pipeline that shares the sink
-        me = hashlib.sha256(self.checkpoint_dir.encode()).hexdigest()[:16]
-        prefix = f"{plan.stage_dir.rstrip('/')}/_stage-{me}-"
-        stage = f"{prefix}{batch_id}-{uuid.uuid4().hex}"
+        me = _pipeline_hash(self.checkpoint_dir)
+        prefix = f"{plan.stage_dir.rstrip('/')}/_stage-"
+        stage = f"{prefix}{me}-{batch_id}-{uuid.uuid4().hex}"
+        stale = None
+        if not self._swept:
+            pipes = {me, *map(_pipeline_hash, self._rewound_from)}
+            stale = f"{prefix}{{{','.join(sorted(pipes))}}}-*"
         write, publish = _epoch_files()
         try:
-            write(tagged._jdf, stage, outputs, None if self._swept else prefix + "*")
+            write(tagged._jdf, stage, outputs, stale)
             self._swept = True
+            self._rewound_from.clear()
             empty = publish(observed.sparkSession._jsparkSession, stage, outputs)
         except Exception:
             with self.stats._lock:
@@ -477,5 +489,7 @@ class CdcPipeline:
         if self.query is not None:
             self.query.stop()
             self.query = None
+        # a stage the old checkpoint's run left is swept with this run's
+        self._rewound_from.add(self.checkpoint_dir)
         self.checkpoint_dir = new_checkpoint_dir
         return self.start(available_now=available_now)

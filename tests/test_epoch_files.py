@@ -275,6 +275,24 @@ def test_epoch_sink_read_matches_the_epoch_glob(spark, tmp_path):
     assert sorted(r.id for r in read.collect()) == [1, 2]
 
 
+def test_rewound_pipeline_sweeps_the_old_checkpoints_stage(spark, dirs):
+    """A stage the run under the old checkpoint left is swept by the
+    first epoch after the rewind, which names the pipeline differently."""
+    src, ckpt, tmp = dirs
+    root = str(tmp / "out")
+    _write_batch(src, "b1.json", [_event(i, table="t0") for i in range(3)])
+    pipe = _pipeline(spark, src, root, _cdc_sinks(root)[:1])
+    pipe.run_to_completion()
+    old = os.path.join(root, "primary", f"_stage-{pipeline._pipeline_hash(pipe.checkpoint_dir)}-1-x")
+    other = os.path.join(root, "primary", f"_stage-{pipeline._pipeline_hash('elsewhere')}-1-x")
+    for stage in (old, other):
+        os.makedirs(os.path.join(stage, "_out=0"))
+    pipe.rewind(str(tmp / "ckpt2"), available_now=True).awaitTermination()
+    pipe.query = None
+    assert _stages(tmp) == [other]
+    assert EpochParquetSink(os.path.join(root, "primary")).read(spark).count() == 3
+
+
 def test_pipelines_sharing_a_sink_keep_each_others_stages(spark, tmp_path, monkeypatch):
     """Two pipelines stage in the ParquetSink they share. The first epoch
     of one runs, sweep included, while the other's epoch sits between its

@@ -85,6 +85,41 @@ def test_jar_key_covers_every_source_and_the_class_path(tmp_path):
         key = edited
 
 
+def test_a_build_drops_the_stale_jars_of_its_own_dir(tmp_path, monkeypatch):
+    """A new jar in the package's `jvm/.build` deletes the older ones
+    there; the temp dir, shared with other checkouts, keeps its jars."""
+    import shutil
+    import tempfile
+    import zipfile
+
+    from psql_streamer_spark import session
+
+    jvm, shared = tmp_path / "jvm", tmp_path / "tmp"
+    (jvm / ".build").mkdir(parents=True)
+    (shared / "psql_streamer_spark-jvm").mkdir(parents=True)
+    for src in os.listdir(_JVM_DIR):
+        if src.endswith(".java"):
+            shutil.copy(os.path.join(_JVM_DIR, src), jvm / src)
+    stale = [jvm / ".build" / "psqlstreamer-0123456789abcdef.jar",
+             jvm / ".build" / "noforklocalfs-0123456789abcdef.jar",
+             shared / "psql_streamer_spark-jvm" / "psqlstreamer-0123456789abcdef.jar"]
+    for jar in stale:
+        jar.write_bytes(b"")
+    monkeypatch.setattr(session, "_JVM_DIR", str(jvm))
+    monkeypatch.setattr(tempfile, "tempdir", str(shared))
+    session._project_jar.cache_clear()
+    try:
+        jar = session._project_jar()
+        session._project_jar.cache_clear()
+        assert session._project_jar() == jar
+    finally:
+        session._project_jar.cache_clear()
+    assert os.listdir(jvm / ".build") == [os.path.basename(jar)]
+    assert stale[2].exists()
+    names = set(zipfile.ZipFile(jar).namelist())
+    assert {f"{c.replace('.', '/')}.class" for c in (LOCAL_FS.split("$")[0], EPOCH_FILES)} <= names
+
+
 def test_written_files_and_dirs_keep_their_modes(spark, tmp_path):
     out = tmp_path / "out"
     spark.range(20).selectExpr("id", "id % 3 AS k").write.partitionBy("k").parquet(str(out))
