@@ -788,155 +788,15 @@ def embed_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# K-means centroid training (Lloyd's): the "train" step the IVF index
-# above consumes. Iterative and therefore not SQL-expressible — registered
-# without an oracle (rows-only driver check); determinism and convergence
-# invariants are pinned in tests/test_quality_metrics.py.
-#
-# Design: centroids are MODEL STATE (k x dim doubles) held on the driver —
-# never a joined frame. Each Lloyd's round is ONE narrow mapInPandas pass:
-# every Arrow batch computes its argmin via a BLAS matmul against the
-# closure-shipped centroid matrix and emits k partial (count, sum) rows,
-# so the per-round cluster traffic is O(partitions * k * dim), not O(N).
-# No crossJoin, no per-vector shuffle, no lineage growth (the model is a
-# numpy array between rounds, so there is nothing to checkpoint). This is
-# the same shape Spark MLlib's KMeans uses, and the reason k can scale
-# with the corpus (see dedup_semantic_clusters_kmeans): training cost is
-# N*k FLOPs through BLAS instead of N*k ROWS through a window sort.
-# Determinism: init = first k dense vec_ids; argmin ties break to the
-# lowest cluster id (np.argmin); partial sums reduce in stable
-# (partition, cluster) order, so a re-run reproduces assignments exactly.
-# --------------------------------------------------------------------------
-KM_K = 8
-KM_ITERS = 4
-
-
-def _kmeans_partials_fn(C):
-    """mapInPandas closure: per-batch argmin vs the model matrix C, then
-    per-cluster (count, component-sum) partials. d2 via the expanded form
-    |x|^2 - 2xC^T + |c|^2 (one matmul per batch)."""
-    import numpy as np
-    import pandas as pd
-
-    cn2 = (C * C).sum(axis=1)
-
-    def fn(batches):
-        for pdf in batches:
-            pdf = pdf[pdf["e"].notna()]  # NULL vectors take no part in training
-            if len(pdf) == 0:
-                continue
-            X = np.stack(pdf["e"].to_numpy()).astype(np.float64)
-            d2 = (X * X).sum(axis=1)[:, None] - 2.0 * (X @ C.T) + cn2[None, :]
-            a = d2.argmin(axis=1)
-            cs, ns, ss = [], [], []
-            for c in np.unique(a):
-                m = a == c
-                cs.append(int(c))
-                ns.append(int(m.sum()))
-                ss.append(X[m].sum(axis=0).tolist())
-            yield pd.DataFrame(
-                {"c": pd.Series(cs, dtype="int32"), "n": ns, "s": ss}
-            )
-
-    return fn
-
-
-def _train_kmeans_model(v: DataFrame, k: int, iters: int):
-    """Lloyd's rounds; returns (cluster_ids, C) — the driver-held model.
-    cluster_ids[i] is the stable id of row C[i] (seed vec_id); clusters
-    that lose all members are dropped from the model, matching the
-    aggregate-over-assignments semantics of the previous implementation."""
-    import numpy as np
-
-    seeds = (
-        v.filter((F.col("vec_id") < k) & F.col("e").isNotNull())
-        .select("vec_id", "e")
-        .orderBy("vec_id")
-        .collect()
-    )
-    ids = np.array([int(r.vec_id) for r in seeds])
-    C = np.array([r.e for r in seeds], dtype=np.float64)
-    if len(C) == 0:  # empty corpus: no seeds, nothing to train
-        return ids, C.reshape(0, 0)
-    for _ in range(iters):
-        parts = v.mapInPandas(
-            _kmeans_partials_fn(C), schema="c int, n long, s array<double>"
-        ).collect()
-        n = np.zeros(len(C))
-        s = np.zeros_like(C)
-        # stable accumulation order: collect() preserves partition order,
-        # rows within a partial frame are cluster-sorted
-        for r in parts:
-            n[r.c] += r.n
-            s[r.c] += np.asarray(r.s)
-        alive = n > 0
-        ids, C = ids[alive], s[alive] / n[alive, None]
-    return ids, C
-
-
-def kmeans_assignments(
-    v: DataFrame, k: int = KM_K, iters: int = KM_ITERS
-) -> DataFrame:
-    """Lloyd's iterations over (vec_id, e) rows; returns one row per vector
-    with its final cluster and squared L2 distance.
-
-    Scale design: centroids are MODEL STATE (k x dim doubles), never data —
-    they stay a broadcast k-row frame; assignment is a narrow map over the
-    corpus (crossJoin with k broadcast rows + argmin); the update is one
-    posexplode + per-(cluster, dim) average — a map-side-combined aggregate
-    over N*dim rows. Each iteration's centroid frame is localCheckpointed:
-    k rows, so the checkpoint is O(model), and the lineage never deepens
-    (the same discipline as connected_components — an un-truncated 10-iter
-    plan re-runs every previous assignment per action).
-
-    Init: the first k vec_ids (deterministic at every SF; vec_ids are
-    dense from 0). Distance = squared L2; ties broken by cluster id."""
-    import numpy as np
-    import pandas as pd
-
-    ids, C = _train_kmeans_model(v, k, iters)
-    if len(C) == 0:
-        # empty trained model (e.g. every seed vec_id < k has a NULL
-        # embedding): the previous crossJoin form returned an empty frame;
-        # shipping a (0, 0)-shaped C into the closure would make
-        # d2.argmin(axis=1) raise in the executor (r5 advice, low)
-        return v.sparkSession.createDataFrame(
-            [], schema="vec_id long, cluster_id int, d2 double"
-        )
-    cn2 = (C * C).sum(axis=1)
-
-    def fn(batches):
-        for pdf in batches:
-            pdf = pdf[pdf["e"].notna()]  # NULL vectors get no assignment row
-            if len(pdf) == 0:
-                continue
-            X = np.stack(pdf["e"].to_numpy()).astype(np.float64)
-            d2 = (X * X).sum(axis=1)[:, None] - 2.0 * (X @ C.T) + cn2[None, :]
-            a = d2.argmin(axis=1)
-            best = np.maximum(d2[np.arange(len(X)), a], 0.0)  # clamp -ulp
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "cluster_id": ids[a].astype("int32"),
-                    "d2": best,
-                }
-            )
-
-    # final assignment against the trained model: one narrow BLAS pass
-    return v.select("vec_id", "e").mapInPandas(
-        fn, schema="vec_id long, cluster_id int, d2 double"
-    )
-
-
-# sim_ivf_kmeans_topk moved below the deterministic trainer (its oracle
-# needs sql_kmeans_cte).
-
-
-# -- deterministic Lloyd's: the hash-checkable k-means tier ---------------
-# The numpy trainer above is the production path (BLAS partials, partition
-# -order accumulation) but its float summation order is an executor-layout
-# artifact no second engine can replay — which is why the k-means family
-# sat rows-only. This tier removes every order dependency:
+# K-means centroid training (Lloyd's): the "train" step of the trained IVF
+# tier (sim_ivf_kmeans_topk), the cluster profile (embed_kmeans_clusters)
+# and SemDeDup (dedup_semantic_clusters_kmeans). All three train on the one
+# trainer below, _kmeans_train_deterministic, and all three are
+# hash-checked: their oracles replay the training loop as a recursive CTE
+# (sql_kmeans_cte). The trainer removes every order dependency, so the
+# second engine reproduces each double bit for bit:
+#   - init: the vectors with vec_id < k (vec_ids are dense from 0); a
+#     NULL seed embedding gives no centroid, so the model may be smaller;
 #   - distances are sequential left folds (same op order as DuckDB's
 #     list_reduce, bit-identical doubles — the _dot discipline);
 #   - argmin is (d2, cluster_id) total order;
@@ -944,11 +804,17 @@ def kmeans_assignments(
 #     vec_id order with init 0.0 (array_sort(collect_list) on one side,
 #     list(val ORDER BY vec_id) prepended with 0.0 on the other), then
 #     one exact division by the member count.
-# Cost vs the numpy tier: the update materializes per-(cluster, dim)
-# member lists instead of map-side partial sums — O(N*dim) rows either
-# way, but without partial aggregation. That is the price of replayable
-# float summation; the production trainer keeps the partials, and the
-# recall-critical consumers (sim_ivf_kmeans_topk) stay on it.
+# Centroids are model state (k rows): broadcast into each round's
+# assignment and localCheckpointed after its update, so the lineage never
+# deepens. The update materializes per-(cluster, dim) member lists rather
+# than map-side partial sums — the price of a float summation order the
+# oracle can replay. Convergence invariants (inertia non-increasing over
+# rounds, each non-NULL vector assigned once) are pinned in
+# tests/test_quality_metrics.py.
+# --------------------------------------------------------------------------
+KM_K = 8
+KM_ITERS = 4
+
 _SQL_KM_D2 = (
     "list_reduce(list_prepend(0.0, list_transform(range(1, {dim} + 1),"
     " i -> ({v}[i] - {c}[i]) * ({v}[i] - {c}[i]))), (x, y) -> x + y)"
@@ -1110,17 +976,12 @@ def _kmeans_train_deterministic(
     return v, cents
 
 
-@register("embed_kmeans_clusters", oracle=_SQL_KMEANS_CLUSTERS)
-def embed_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cluster profile after KM_ITERS Lloyd's rounds: size and inertia
-    (sum of squared distances) per cluster — on the DETERMINISTIC trainer,
-    so the DuckDB oracle replays the full training loop as a recursive
-    CTE and the profile hash-matches (previously rows-only)."""
-    v, cents = _kmeans_train_deterministic(spark, sf_dir)
-    # same min-struct argmin as the trainer loop (guide §2.3): the
-    # exchange carries one (vec_id, d2, cluster_id) row per vector, not
-    # k candidate rows through a sort
-    fin = (
+def _km_assign(v: DataFrame, cents: DataFrame) -> DataFrame:
+    """(vec_id, d2, cluster_id): each vector's nearest trained centroid,
+    by the same min-struct argmin as the trainer loop (guide §2.3) — the
+    exchange carries one row per vector, not k candidate rows through a
+    sort."""
+    return (
         v.crossJoin(F.broadcast(cents))
         .withColumn("d2", _km_d2(F.col("e"), F.col("ce")))
         .groupBy("vec_id")
@@ -1131,8 +992,18 @@ def embed_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("b.cluster_id").alias("cluster_id"),
         )
     )
+
+
+@register("embed_kmeans_clusters", oracle=_SQL_KMEANS_CLUSTERS)
+def embed_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cluster profile after KM_ITERS Lloyd's rounds: size and inertia
+    (sum of squared distances) per cluster — on the DETERMINISTIC trainer,
+    so the DuckDB oracle replays the full training loop as a recursive
+    CTE and the profile hash-matches."""
+    v, cents = _kmeans_train_deterministic(spark, sf_dir)
     return (
-        fin.groupBy("cluster_id")
+        _km_assign(v, cents)
+        .groupBy("cluster_id")
         .agg(
             F.count("*").alias("n_vectors"),
             F.array_sort(F.collect_list(F.struct("vec_id", "d2"))).alias("sv"),
@@ -1344,9 +1215,9 @@ def sim_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall). Measured at sf0.1: lsh 0.49, lsh_wide 0.68, ivf 0.36
     (floors in tests/test_quality_metrics.py); at sf10: 0.57 / 0.87 /
     0.49 (RECALL_r11.json). The trained
-    k-means IVF tier is iterative (rows-only driver check) and its recall
-    is asserted separately in tests/test_quality_metrics.py, so it stays
-    out of this hash-checked report.
+    k-means IVF tier (sim_ivf_kmeans_topk, hash-checked on its own) has
+    its recall asserted separately in tests/test_quality_metrics.py, so
+    it stays out of this report.
 
     Scale design: the ground-truth side is O(Q x N) BY DEFINITION — a
     recall measurement cannot avoid the exact scan. At corpus scale this

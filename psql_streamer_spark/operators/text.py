@@ -2185,8 +2185,8 @@ def sim_hashed_text_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 # O(iters * |corpus features|) with nothing ever materialized per-doc on
 # the driver.
 #
-# Determinism contract (why this is hash-checkable, not rows-only like
-# k-means): no transcendentals and no float accumulation anywhere —
+# Determinism contract (why this is hash-checkable): no transcendentals
+# and no float accumulation anywhere —
 #   - features are exact integers: x = (tf << 8) // n_tokens plus a
 #     capped length dim and a constant bias dim;
 #   - the margin z is an exact int64 dot (sum of w*x), floated only by an

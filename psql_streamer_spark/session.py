@@ -143,9 +143,14 @@ def get_spark(
         # heap is the whole cluster's memory: 8g across 32 task slots was
         # 250 MiB per slot — a fraction of any real executor's per-core
         # share, and the 30x sweep OOM'd on it. 32g ~ 1 GiB/slot, in line
-        # with a production 4-8 cores/4-8 GiB executor shape, while still
-        # leaving ~90 GiB of the test container for Python workers + OS.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        # with a production 4-8 cores/4-8 GiB executor shape. On a smaller
+        # machine the default is half of its memory (_default_driver_memory):
+        # a 32g heap on a 15.7 GiB box grew to 15.2 GB RSS and was killed
+        # by the kernel's OOM killer mid-suite.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
     )
     # Scale-dependent overrides stay parameterised (optimization-guide
     # discipline: local defaults keep the bench comparable, production
@@ -173,6 +178,37 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _default_driver_memory() -> str:
+    """``spark.driver.memory`` when ``SPARK_GRAFT_DRIVER_MEM`` is unset."""
+    try:
+        physical = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (OSError, ValueError):
+        physical = None
+    return _driver_memory(physical, _cgroup_memory_max())
+
+
+def _driver_memory(physical: int | None, cgroup_max: int | None) -> str:
+    """32g, or half the memory this process can use (the physical memory,
+    capped by the cgroup's ``memory.max``) when that is less; Python
+    workers, the OS and the JVM's off-heap memory need the other half.
+    Unknown sizes leave 32g."""
+    usable = min(m for m in (physical, cgroup_max, 64 << 30) if m)
+    return "32g" if usable >= 64 << 30 else f"{usable >> 21}m"
+
+
+def _cgroup_memory_max() -> int | None:
+    """This process's cgroup v2 ``memory.max`` in bytes; None when there
+    is no limit or it cannot be read."""
+    try:
+        with open("/proc/self/cgroup") as f:
+            rel = next(ln[3:].strip() for ln in f if ln.startswith("0::"))
+        with open(os.path.join("/sys/fs/cgroup", rel.lstrip("/"), "memory.max")) as f:
+            raw = f.read().strip()
+        return None if raw == "max" else int(raw)
+    except (OSError, ValueError, StopIteration):
+        return None
 
 
 _JVM_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm")

@@ -1,95 +1,20 @@
-"""Generic readers/writers — the engine's source/sink format surface.
+"""The streaming Kafka reader and the parquet lake's maintenance.
 
-Reference parity: the reference reads exactly two sources (PG replication,
-Kafka; source/source.go:23-37) and writes one sink family (Kafka + stubs,
-sink/sink.go:24-40). A Spark-native engine gets the full DataSource V2
-matrix for free; this module pins the engine's defaults and documents the
-scale behavior of each format:
+Scans and writes of parquet/CSV/JSON/JDBC are plain ``spark.read.*`` and
+``df.write.*`` (SURVEY §2.8); lake tables are read through
+``sources.tables.load_table``. This module keeps what adds to them:
 
-- parquet: columnar, predicate pushdown + column pruning reach the scan
-  (PushedFilters/ReadSchema in .explain), splittable, the default.
-- csv/json: row formats, schema mandatory in production (inference scans
-  the data twice), splittable only when uncompressed or bzip2; fine for
-  ingest edges, never for intermediate storage at scale.
-- jdbc: batch snapshot reads (the reference's initial-sync analogue);
-  partitionColumn/numPartitions parallelize the pull.
-- kafka: the streaming edge (see streaming/pipeline.py for the wrapper).
-
-Every reader returns a plain DataFrame; all engine operators are
-source-agnostic downstream of it.
+- ``read_kafka_stream``: the streaming Kafka source with the reference's
+  config checks (S4 parity, source/kafka/kafka.go:68-133);
+- ``compact_parquet``: small-files compaction of append-mode sink output,
+  per partition leaf, crash-recovering;
+- ``expire_partitions``: partition-level retention of a ``col=value/``
+  lake dir.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
-
-
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | str | None = None,
-    header: bool = True,
-    **options: str,
-) -> DataFrame:
-    """CSV scan. Always pass a schema in production — `inferSchema` reads
-    the whole input once before the real scan (2x IO at 100 TB)."""
-    reader = spark.read.option("header", str(header).lower())
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", "true")
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.csv(path)
-
-
-def read_json(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | str | None = None,
-    **options: str,
-) -> DataFrame:
-    """JSON-lines scan; same schema-or-double-scan caveat as CSV."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.json(path)
-
-
-def read_jdbc(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    partition_column: str | None = None,
-    num_partitions: int = 8,
-    lower_bound: int | None = None,
-    upper_bound: int | None = None,
-    **options: str,
-) -> DataFrame:
-    """JDBC snapshot read — the batch analogue of the reference's initial
-    table state before replication streaming. Without partition_column the
-    pull is single-threaded; with it, Spark issues num_partitions range
-    queries in parallel."""
-    reader = spark.read.format("jdbc").option("url", url).option("dbtable", table)
-    if partition_column is not None:
-        if lower_bound is None or upper_bound is None:
-            raise ValueError("partitioned JDBC read needs lower/upper bounds")
-        reader = (
-            reader.option("partitionColumn", partition_column)
-            .option("numPartitions", str(num_partitions))
-            .option("lowerBound", str(lower_bound))
-            .option("upperBound", str(upper_bound))
-        )
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.load()
+from pyspark.sql import SparkSession
 
 
 def read_kafka_stream(
@@ -132,29 +57,6 @@ def read_kafka_stream(
     for k, v in options.items():
         reader = reader.option(k, v)
     return reader
-
-
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    mode: str = "error",
-    partition_by: tuple[str, ...] = (),
-) -> None:
-    """Parquet write; partition_by columns become directory-level partition
-    pruning for every future reader — choose low-cardinality keys (date,
-    tenant), never high-cardinality ones (one dir per value)."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
-def write_csv(df: DataFrame, path: str, mode: str = "error", header: bool = True) -> None:
-    df.write.mode(mode).option("header", str(header).lower()).csv(path)
-
-
-def write_json(df: DataFrame, path: str, mode: str = "error") -> None:
-    df.write.mode(mode).json(path)
 
 
 def compact_parquet(

@@ -15,17 +15,19 @@ prefix, PG 14+ ``streaming=on``) — the reference pins v1
 publisher's large in-progress transactions would hit first.
 
 Design split:
-- this module: the stateless frame codec ``parse_message`` /
-  ``encode_*`` and ``reassemble_frames``, the ingest-edge rewrite of a
-  protocol-v2 capture into v1 frames — importable anywhere,
-  golden-fixture testable without a SparkSession;
+- this module: the stateless frame parser ``parse_message`` and
+  ``reassemble_frames``, the ingest-edge rewrite of a protocol-v2 capture
+  into v1 frames (the one place that strips the in-stream xid prefix) —
+  importable anywhere, golden-fixture testable without a SparkSession;
 - sources/pgoutput_cdc.py: the Spark decode, the one implementation of
   the reference's RelationSet and tuple whitelist (Arrow-batched parse,
   relation resolution, JVM-side tuple->map projection).
 
-Encoders exist so tests and fixture builders can produce byte-exact
-frames; they are the inverse of the parser and are *not* needed on the
-decode path.
+The three encoders kept here are the ones product code calls:
+``encode_begin``/``encode_commit`` (``reassemble_frames`` synthesizes the
+transaction brackets) and ``encode_relation`` (the ``cdc_pgoutput_decode``
+fixture). The data-message and stream-control encoders the tests build
+frames with live in ``tests/pgoutput_encoders.py``.
 """
 
 from __future__ import annotations
@@ -198,18 +200,7 @@ def datetime_to_pg_micros(dt: datetime) -> int:
 # --------------------------------------------------------------------------
 # Message parser.
 # --------------------------------------------------------------------------
-#: Kinds that carry an in-stream Int32 xid prefix when they arrive inside
-#: a Stream Start/Stop block (protocol v2, PG 14+ ``streaming=on`` slots).
-_STREAMABLE_KINDS = frozenset("RYIUDT")
-
-
-def _with_xid(out: dict, xid: int | None) -> dict:
-    if xid is not None:
-        out["xid"] = xid
-    return out
-
-
-def parse_message(data: bytes, in_stream: bool = False) -> dict:
+def parse_message(data: bytes) -> dict:
     """Parse one pgoutput frame into a plain dict tagged with ``kind``.
 
     Kinds: begin, commit, origin, relation, type, insert, update, delete,
@@ -219,11 +210,11 @@ def parse_message(data: bytes, in_stream: bool = False) -> dict:
     these, source/postgres/postgres.go:205-219 — we decode them so a
     modern publisher's large in-progress transactions work).
 
-    ``in_stream``: protocol v2 prefixes every data message BETWEEN a
-    Stream Start and its Stream Stop with the Int32 xid of the streamed
-    transaction; the frame does not self-describe, so the caller tracks
-    stream state and passes it here (``reassemble_frames`` tracks it and
-    strips the prefix itself). Streamed data messages gain an ``xid`` key.
+    Data frames are parsed in their protocol-v1 form. Protocol v2
+    prefixes every data message BETWEEN a Stream Start and its Stream
+    Stop with the Int32 xid of the streamed transaction, and the frame
+    does not self-describe; ``reassemble_frames`` tracks the stream state
+    and strips that prefix before anything parses the frame.
 
     Raises ProtocolError on malformed input (callers on the distributed
     path convert that to an error record, the commit-and-skip behavior of
@@ -233,10 +224,6 @@ def parse_message(data: bytes, in_stream: bool = False) -> dict:
         raise ProtocolError("empty frame")
     r = _Reader(data)
     kind = r.byte1()
-
-    stream_xid: int | None = None
-    if in_stream and kind in _STREAMABLE_KINDS:
-        stream_xid = r.uint32()
 
     if kind == "S":
         return {
@@ -296,36 +283,27 @@ def parse_message(data: bytes, in_stream: bool = False) -> dict:
             type_oid = r.uint32()
             type_mod = r.int32()
             cols.append(Column(cname, type_oid, bool(flags & 1), type_mod))
-        return _with_xid(
-            {
-                "kind": "relation",
-                "relation": Relation(relation_id, namespace, name, replica, cols),
-            },
-            stream_xid,
-        )
+        return {
+            "kind": "relation",
+            "relation": Relation(relation_id, namespace, name, replica, cols),
+        }
     if kind == "Y":
-        return _with_xid(
-            {
-                "kind": "type",
-                "type_oid": r.uint32(),
-                "namespace": r.cstring(),
-                "name": r.cstring(),
-            },
-            stream_xid,
-        )
+        return {
+            "kind": "type",
+            "type_oid": r.uint32(),
+            "namespace": r.cstring(),
+            "name": r.cstring(),
+        }
     if kind == "I":
         relation_id = r.uint32()
         marker = r.byte1()
         if marker != "N":
             raise ProtocolError(f"insert: expected 'N' tuple marker, got {marker!r}")
-        return _with_xid(
-            {
-                "kind": "insert",
-                "relation_id": relation_id,
-                "new_tuple": _read_tuple(r),
-            },
-            stream_xid,
-        )
+        return {
+            "kind": "insert",
+            "relation_id": relation_id,
+            "new_tuple": _read_tuple(r),
+        }
     if kind == "U":
         relation_id = r.uint32()
         old_tuple = None
@@ -337,47 +315,43 @@ def parse_message(data: bytes, in_stream: bool = False) -> dict:
             marker = r.byte1()
         if marker != "N":
             raise ProtocolError(f"update: expected 'N' tuple marker, got {marker!r}")
-        return _with_xid(
-            {
-                "kind": "update",
-                "relation_id": relation_id,
-                "old_kind": old_kind,
-                "old_tuple": old_tuple,
-                "new_tuple": _read_tuple(r),
-            },
-            stream_xid,
-        )
+        return {
+            "kind": "update",
+            "relation_id": relation_id,
+            "old_kind": old_kind,
+            "old_tuple": old_tuple,
+            "new_tuple": _read_tuple(r),
+        }
     if kind == "D":
         relation_id = r.uint32()
         marker = r.byte1()
         if marker not in ("K", "O"):
             raise ProtocolError(f"delete: expected 'K'/'O' tuple marker, got {marker!r}")
-        return _with_xid(
-            {
-                "kind": "delete",
-                "relation_id": relation_id,
-                "old_kind": marker,
-                "old_tuple": _read_tuple(r),
-            },
-            stream_xid,
-        )
+        return {
+            "kind": "delete",
+            "relation_id": relation_id,
+            "old_kind": marker,
+            "old_tuple": _read_tuple(r),
+        }
     if kind == "T":
         nrels = r.uint32()
         options = r.int8()
-        return _with_xid(
-            {
-                "kind": "truncate",
-                "options": options,
-                "relation_ids": [r.uint32() for _ in range(nrels)],
-            },
-            stream_xid,
-        )
+        return {
+            "kind": "truncate",
+            "options": options,
+            "relation_ids": [r.uint32() for _ in range(nrels)],
+        }
     raise ProtocolError(f"unknown message kind {kind!r}")
 
 
 # --------------------------------------------------------------------------
 # Protocol-v2 stream reassembly.
 # --------------------------------------------------------------------------
+#: Kinds that carry an in-stream Int32 xid prefix when they arrive inside
+#: a Stream Start/Stop block (protocol v2, PG 14+ ``streaming=on`` slots).
+_STREAMABLE_KINDS = frozenset("RYIUDT")
+
+
 def reassemble_frames(frames) -> list[bytes]:
     """Rewrite a captured protocol-v2 frame sequence into the equivalent
     protocol-v1 sequence — the ingest-edge adapter that lets the
@@ -397,17 +371,17 @@ def reassemble_frames(frames) -> list[bytes]:
     order-free per frame. Non-streamed frames pass through verbatim.
     """
     out: list[bytes] = []
-    in_stream_xid: int | None = None
+    open_xid: int | None = None
     buffers: dict[int, list[tuple[int, bytes]]] = {}
     for frame in frames:
         kind = chr(frame[0]) if frame else "?"
         if kind == "S":
             m = parse_message(frame)
-            in_stream_xid = m["xid"]
+            open_xid = m["xid"]
             buffers.setdefault(m["xid"], [])
             continue
         if kind == "E":
-            in_stream_xid = None
+            open_xid = None
             continue
         if kind == "c":
             m = parse_message(frame)
@@ -432,44 +406,21 @@ def reassemble_frames(frames) -> list[bytes]:
                     (mx, raw) for mx, raw in buffers[xid] if mx != subxid
                 ]
             continue
-        if in_stream_xid is not None and kind in _STREAMABLE_KINDS:
+        if open_xid is not None and kind in _STREAMABLE_KINDS:
             if len(frame) < 5:
                 raise ProtocolError("truncated in-stream frame")
             msg_xid = struct.unpack(">I", frame[1:5])[0]
-            buffers[in_stream_xid].append((msg_xid, frame[:1] + frame[5:]))
+            buffers[open_xid].append((msg_xid, frame[:1] + frame[5:]))
             continue
         out.append(frame)
     return out
 
 
 # --------------------------------------------------------------------------
-# Encoders (fixture builders / protocol inverse).
+# Encoders (protocol inverse).
 # --------------------------------------------------------------------------
 def _cstr(s: str) -> bytes:
     return s.encode("utf-8") + b"\x00"
-
-
-def _encode_tuple(cols: list[tuple[str, bytes | None]]) -> bytes:
-    out = [struct.pack(">H", len(cols))]
-    for flag, raw in cols:
-        if flag in (TUPLE_NULL, TUPLE_UNCHANGED):
-            out.append(flag.encode())
-        elif flag in (TUPLE_TEXT, TUPLE_BINARY):
-            if raw is None:
-                raise ValueError(f"flag {flag!r} requires a value")
-            out.append(flag.encode() + struct.pack(">i", len(raw)) + raw)
-        else:
-            raise ValueError(f"unknown tuple flag {flag!r}")
-    return b"".join(out)
-
-
-def text_col(value: object) -> tuple[str, bytes]:
-    """Convenience: a 't' column carrying the PG text representation."""
-    return (TUPLE_TEXT, str(value).encode("utf-8"))
-
-
-def null_col() -> tuple[str, None]:
-    return (TUPLE_NULL, None)
 
 
 def encode_begin(final_lsn: int, commit_ts: datetime, xid: int) -> bytes:
@@ -486,35 +437,9 @@ def encode_commit(
     )
 
 
-def _xid_prefix(xid: int | None) -> bytes:
-    """Protocol-v2 in-stream xid prefix (empty outside a stream)."""
-    return b"" if xid is None else struct.pack(">I", xid)
-
-
-def encode_stream_start(xid: int, first_segment: bool = True) -> bytes:
-    return b"S" + struct.pack(">Ib", xid, 1 if first_segment else 0)
-
-
-def encode_stream_stop() -> bytes:
-    return b"E"
-
-
-def encode_stream_commit(
-    xid: int, commit_lsn: int, end_lsn: int, commit_ts: datetime, flags: int = 0
-) -> bytes:
-    return b"c" + struct.pack(
-        ">IbQQq", xid, flags, commit_lsn, end_lsn, datetime_to_pg_micros(commit_ts)
-    )
-
-
-def encode_stream_abort(xid: int, subxid: int | None = None) -> bytes:
-    return b"A" + struct.pack(">II", xid, subxid if subxid is not None else xid)
-
-
-def encode_relation(rel: Relation, xid: int | None = None) -> bytes:
+def encode_relation(rel: Relation) -> bytes:
     out = [
         b"R",
-        _xid_prefix(xid),
         struct.pack(">I", rel.relation_id),
         _cstr(rel.namespace),
         _cstr(rel.name),
@@ -527,46 +452,3 @@ def encode_relation(rel: Relation, xid: int | None = None) -> bytes:
             + struct.pack(">Ii", c.type_oid, c.type_mod)
         )
     return b"".join(out)
-
-
-def encode_insert(
-    relation_id: int,
-    new_tuple: list[tuple[str, bytes | None]],
-    xid: int | None = None,
-) -> bytes:
-    return (
-        b"I"
-        + _xid_prefix(xid)
-        + struct.pack(">I", relation_id)
-        + b"N"
-        + _encode_tuple(new_tuple)
-    )
-
-
-def encode_update(
-    relation_id: int,
-    new_tuple: list[tuple[str, bytes | None]],
-    old_tuple: list[tuple[str, bytes | None]] | None = None,
-    old_kind: str = "K",
-    xid: int | None = None,
-) -> bytes:
-    out = [b"U", _xid_prefix(xid), struct.pack(">I", relation_id)]
-    if old_tuple is not None:
-        out.append(old_kind.encode() + _encode_tuple(old_tuple))
-    out.append(b"N" + _encode_tuple(new_tuple))
-    return b"".join(out)
-
-
-def encode_delete(
-    relation_id: int,
-    old_tuple: list[tuple[str, bytes | None]],
-    old_kind: str = "K",
-    xid: int | None = None,
-) -> bytes:
-    return (
-        b"D"
-        + _xid_prefix(xid)
-        + struct.pack(">I", relation_id)
-        + old_kind.encode()
-        + _encode_tuple(old_tuple)
-    )

@@ -55,6 +55,13 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     timestamps as UTC LTZ, not NTZ. This is the engine's determinism
     contract with the UTC-naive DuckDB oracle; a caller needing other
     semantics must set the confs back explicitly.
+
+    Loading ``events`` also sets ``spark.sql.legacy.parquet.nanosAsLong=
+    true`` and leaves it set: the scan reads the conf when the query
+    executes, not when the frame is built, so restoring it after the read
+    would break the returned frame. From then on, any parquet read in
+    the session returns a TIMESTAMP(NANOS) column as a long instead of
+    raising.
     """
     if name not in TABLES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")

@@ -1,5 +1,6 @@
-"""IO format surface (CSV/JSON/parquet roundtrips, partitioned writes,
-JDBC option wiring) and the periodic stats ticker (O4)."""
+"""The Kafka stream reader's config checks, the parquet lake's
+maintenance (compaction and partition expiry) and the periodic stats
+ticker (O4)."""
 
 from __future__ import annotations
 
@@ -8,65 +9,6 @@ from pyspark.sql import functions as F
 
 from psql_streamer_spark.observe import StatsTicker
 from psql_streamer_spark.sources import io
-from psql_streamer_spark.sources.tables import load_table
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def nation(spark):
-    return load_table(spark, "nation", SF_DIR)
-
-
-def test_csv_roundtrip_with_schema(spark, nation, tmp_path):
-    path = str(tmp_path / "nation_csv")
-    io.write_csv(nation, path)
-    back = io.read_csv(spark, path, schema=nation.schema)
-    assert back.schema == nation.schema
-    assert sorted(back.collect()) == sorted(nation.collect())
-
-
-def test_csv_infer_schema_fallback(spark, nation, tmp_path):
-    path = str(tmp_path / "nation_csv2")
-    io.write_csv(nation, path)
-    back = io.read_csv(spark, path)  # inference: types may widen, data same
-    assert back.count() == nation.count()
-    assert set(back.columns) == set(nation.columns)
-
-
-def test_json_roundtrip(spark, nation, tmp_path):
-    path = str(tmp_path / "nation_json")
-    io.write_json(nation, path)
-    back = io.read_json(spark, path, schema=nation.schema)
-    assert sorted(back.collect()) == sorted(nation.collect())
-
-
-def test_partitioned_parquet_write_prunes(spark, tmp_path):
-    orders = load_table(spark, "orders", SF_DIR).withColumn(
-        "o_year", F.year("o_orderdate")
-    )
-    path = str(tmp_path / "orders_by_year")
-    io.write_parquet(orders, path, partition_by=("o_year",))
-
-    back = io.read_parquet(spark, path)
-    years = [r.o_year for r in back.select("o_year").distinct().collect()]
-    assert len(years) > 1
-    one_year = back.filter(F.col("o_year") == years[0])
-    # partition pruning: the year filter must reach the scan as a
-    # partition filter, not a data filter
-    plan = one_year._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(o_year" in plan
-    assert one_year.count() == orders.filter(F.col("o_year") == years[0]).count()
-
-
-def test_jdbc_reader_validates_partition_bounds(spark):
-    with pytest.raises(ValueError, match="bounds"):
-        io.read_jdbc(
-            spark,
-            "jdbc:postgresql://localhost/db",
-            "tbl",
-            partition_column="id",
-        )
 
 
 def test_stats_ticker_ticks_and_stops():

@@ -24,13 +24,19 @@ from psql_streamer_spark.sources.pgoutput_wire import (
     Relation,
     encode_begin,
     encode_commit,
-    encode_delete,
-    encode_insert,
     encode_relation,
-    encode_update,
-    null_col,
     parse_message,
     reassemble_frames,
+)
+from tests.pgoutput_encoders import (
+    encode_delete,
+    encode_insert,
+    encode_stream_abort,
+    encode_stream_commit,
+    encode_stream_start,
+    encode_stream_stop,
+    encode_update,
+    null_col,
     text_col,
 )
 
@@ -310,9 +316,18 @@ class TestProtocolV2Stream:
         assert m == {"kind": "stream_abort", "xid": 777, "subxid": 777}
 
     def test_in_stream_xid_prefix(self):
-        m = parse_message(STREAMED_INSERT_FRAME, in_stream=True)
+        # the xid prefix is stripped where the stream state is known:
+        # reassemble_frames turns Start + prefixed frame + Stop + Commit
+        # into Begin (carrying the xid) + the v1 frame + Commit
+        out = reassemble_frames([
+            STREAM_START_FRAME,
+            STREAMED_INSERT_FRAME,
+            STREAM_STOP_FRAME,
+            STREAM_COMMIT_FRAME,
+        ])
+        assert parse_message(out[0])["xid"] == 777
+        m = parse_message(out[1])
         assert m["kind"] == "insert"
-        assert m["xid"] == 777
         assert m["relation_id"] == REL_ID
         assert m["new_tuple"] == [("t", b"400166"), ("t", b"a")]
 
@@ -322,16 +337,9 @@ class TestProtocolV2Stream:
         # marker — which is why the caller must track stream state
         # (reassemble_frames does)
         with pytest.raises(ProtocolError):
-            parse_message(STREAMED_INSERT_FRAME, in_stream=False)
+            parse_message(STREAMED_INSERT_FRAME)
 
     def test_v2_encoders_invert_parser(self):
-        from psql_streamer_spark.sources.pgoutput_wire import (
-            encode_stream_abort,
-            encode_stream_commit,
-            encode_stream_start,
-            encode_stream_stop,
-        )
-
         assert encode_stream_start(777) == STREAM_START_FRAME
         assert encode_stream_stop() == STREAM_STOP_FRAME
         assert (
@@ -382,11 +390,6 @@ class TestProtocolV2Stream:
         assert out[1] == INSERT_FRAME
 
     def test_assembler_interleaved_segments(self):
-        from psql_streamer_spark.sources.pgoutput_wire import (
-            encode_stream_commit,
-            encode_stream_start,
-        )
-
         ts = datetime(2000, 1, 1, tzinfo=timezone.utc)
         # segment of xid 777, then a segment of xid 900, then commits
         out = reassemble_frames([
@@ -429,11 +432,6 @@ class TestProtocolV2Stream:
         assert m["commit_lsn"] == 0x100 and m["end_lsn"] == 0x110
 
     def test_reassemble_drops_aborted_and_orders_by_commit(self):
-        from psql_streamer_spark.sources.pgoutput_wire import (
-            encode_stream_commit,
-            encode_stream_start,
-        )
-
         ts = datetime(2000, 1, 1, tzinfo=timezone.utc)
         frames = [
             # xid 777 segment, then aborted

@@ -253,10 +253,9 @@ def test_pgoutput_decode_is_narrow_single_python_pass(spark):
         OID_INT4,
         Column,
         Relation,
-        encode_insert,
         encode_relation,
-        text_col,
     )
+    from tests.pgoutput_encoders import encode_insert, text_col
 
     rows = [
         (1, 0, encode_relation(Relation(5, "public", "t", 0x64,

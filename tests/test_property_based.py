@@ -220,7 +220,7 @@ _pg_value = st.one_of(
 
 
 def _tuple_cols(values):
-    from psql_streamer_spark.sources.pgoutput_wire import null_col, text_col
+    from tests.pgoutput_encoders import null_col, text_col
 
     return [null_col() if v is None else text_col(v) for v in values]
 
@@ -232,22 +232,41 @@ def _tuple_cols(values):
 )
 def test_pgoutput_insert_roundtrip(relation_id, values, xid):
     """encode_insert(parse(x)) == x for any whitelist-shaped tuple, with
-    and without the protocol-v2 in-stream xid prefix."""
+    and without the protocol-v2 in-stream xid prefix. A prefixed frame
+    goes the product's way, through reassemble_frames: Stream Start, the
+    frame, Stop, Stream Commit reassemble into Begin (carrying the xid),
+    the v1 frame byte for byte, Commit."""
+    from datetime import datetime, timezone
+
     from psql_streamer_spark.sources.pgoutput_wire import (
-        encode_insert,
         parse_message,
+        reassemble_frames,
+    )
+    from tests.pgoutput_encoders import (
+        encode_insert,
+        encode_stream_commit,
+        encode_stream_start,
+        encode_stream_stop,
     )
 
     cols = _tuple_cols(values)
-    frame = encode_insert(relation_id, cols, xid=xid)
-    m = parse_message(frame, in_stream=xid is not None)
+    frame = encode_insert(relation_id, cols)
+    if xid is not None:
+        ts = datetime(2001, 2, 3, tzinfo=timezone.utc)
+        out = reassemble_frames([
+            encode_stream_start(xid),
+            encode_insert(relation_id, cols, xid=xid),
+            encode_stream_stop(),
+            encode_stream_commit(xid, 1, 2, ts),
+        ])
+        assert len(out) == 3 and out[1] == frame
+        assert parse_message(out[0])["xid"] == xid
+    m = parse_message(frame)
     assert m["kind"] == "insert"
     assert m["relation_id"] == relation_id
     got = [(f, None if raw is None else raw.decode()) for f, raw in m["new_tuple"]]
     want = [(f, None if raw is None else raw.decode()) for f, raw in cols]
     assert got == want
-    if xid is not None:
-        assert m["xid"] == xid
 
 
 @given(
@@ -269,13 +288,15 @@ def test_stream_reassembly_keeps_exactly_committed_transactions(txns):
     from datetime import datetime, timezone
 
     from psql_streamer_spark.sources.pgoutput_wire import (
+        parse_message,
+        reassemble_frames,
+    )
+    from tests.pgoutput_encoders import (
         encode_insert,
         encode_stream_abort,
         encode_stream_commit,
         encode_stream_start,
         encode_stream_stop,
-        parse_message,
-        reassemble_frames,
     )
 
     ts = datetime(2001, 2, 3, tzinfo=timezone.utc)

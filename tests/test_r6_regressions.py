@@ -10,8 +10,10 @@ Each test pins the FIXED behavior of a defect the judge's advisor found:
 3. _signature zip_with'ed against a fixed-width literal sign array; a
    corpus with a different embedding width silently collapsed every
    vector into bucket 0 instead of failing.
-4. kmeans_assignments with an empty trained model shipped a (0, 0) numpy
-   array into the executor closure, where argmin raised ValueError.
+4. k-means assignment with an empty trained model shipped a (0, 0) numpy
+   array into the executor closure, where argmin raised ValueError; the
+   test now pins the same case on the one trainer the k-means queries
+   use.
 """
 
 from __future__ import annotations
@@ -83,18 +85,24 @@ def test_signature_dim_mismatch_fails_loudly(spark):
     )
 
 
-def test_kmeans_assignments_empty_model_returns_empty(spark):
+def test_kmeans_assignments_empty_model_returns_empty(spark, tmp_path):
     """All seed vec_ids (< KM_K) have NULL embeddings while later rows do
-    not: the trained model is empty and the assignment must be an empty
-    frame (the pre-screen crossJoin behavior), not an executor
-    ValueError from argmin over a zero-width matrix."""
-    from psql_streamer_spark.operators.similarity import KM_K, kmeans_assignments
+    not: the trained model is empty, and embed_kmeans_clusters must be an
+    empty profile, not an executor error."""
+    from psql_streamer_spark.operators.similarity import (
+        EMB_DIM,
+        KM_K,
+        embed_kmeans_clusters,
+    )
 
+    unit = lambda i: [float(j == i) for j in range(EMB_DIM)]  # noqa: E731
     rows = [(i, None) for i in range(KM_K)] + [
-        (KM_K, [1.0, 0.0]),
-        (KM_K + 1, [0.0, 1.0]),
+        (KM_K, unit(0)),
+        (KM_K + 1, unit(1)),
     ]
-    v = spark.createDataFrame(rows, "vec_id long, e array<double>")
-    out = kmeans_assignments(v)
-    assert out.count() == 0
-    assert [f.name for f in out.schema.fields] == ["vec_id", "cluster_id", "d2"]
+    spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>"
+    ).write.parquet(f"{tmp_path}/embeddings.parquet")
+    out = embed_kmeans_clusters(spark, str(tmp_path))
+    assert out.collect() == []
+    assert out.columns == ["cluster_id", "n_vectors", "inertia"]

@@ -75,3 +75,17 @@ def test_one_table_loaded_twice_keeps_distinct_columns(spark, tmp_path):
     assert sorted(map(tuple, got.collect())) == sorted(
         zip(want.n_nationkey_x, want.n_nationkey_y))
     assert len(want) == 25 and (want.n_nationkey_x != want.n_nationkey_y).any()
+
+
+def test_events_load_leaves_nanos_as_long_set(spark, tmp_path):
+    """`load_table`'s session-wide contract: after an `events` load the
+    session keeps `nanosAsLong` on, so a direct read of a
+    TIMESTAMP(NANOS) file returns the column as a long."""
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.unset(conf)
+    pq.write_table(
+        pa.table({"ts": pa.array([1_700_000_000_123_456_000], pa.timestamp("ns"))}),
+        tmp_path / "nanos.parquet", version="2.6")
+    load_table(spark, "events", SF_SMALL)
+    assert spark.conf.get(conf) == "true"
+    assert spark.read.parquet(str(tmp_path / "nanos.parquet")).dtypes == [("ts", "bigint")]
